@@ -50,10 +50,6 @@ class EngineConfig:
     # for doc-local ways but pays Python-side span parsing; the JVM from_json
     # + sort-based reassembly wins in this environment → off by default
     local_first_assembly: bool = False
-    shuffle_partitions: int = 32
-    assemble_chunk_size: int = 4096   # two-level mega-way reassembly (J1 skew)
-    salt_buckets: int = 8             # explicit salting for hot node ids
-    arrow_batch_size: int = 2048      # fat geometry rows per Arrow batch
 
     # QA sampling (reference config.yaml:145): edges re-measured with the
     # full-precision geodesic kernel post-build; 0 disables
@@ -94,6 +90,14 @@ class EngineConfig:
             "simplification_tolerance_m",
         ),
         "intersections": (
+            "coordinate_precision",
+            "enable_geometry_simplification",
+            "simplification_tolerance_m",
+            "enable_intersection_detection",
+            "snap_tolerance_m",
+        ),
+        # the snap domain is a pure function of the intersected ways
+        "clustering_domain": (
             "coordinate_precision",
             "enable_geometry_simplification",
             "simplification_tolerance_m",

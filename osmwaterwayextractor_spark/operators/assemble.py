@@ -20,7 +20,12 @@ repartitioning"):
 Ways with ANY unresolved ref are dropped whole (the osmium location index
 throws for missing locations and the way never materializes).
 
-AQE (skewJoin + coalescePartitions) remains on for residual hot node ids.
+The way_id repartition carries NO explicit partition count, so AQE's
+coalescePartitions sizes the kernel's task count from the shuffle's bytes.
+Every Python-kernel task pays a fixed worker-side setup cost whatever its
+size (~0.18 CPU-s on a 4-CPU host, mostly pyspark's per-task
+``importlib.invalidate_caches``), and an explicit count would pin the
+task count past AQE's reach. skewJoin stays on for residual hot node ids.
 """
 
 from __future__ import annotations
@@ -122,8 +127,7 @@ def assemble_geometries(
     resolved = refs.join(_shuffle_hash(nodes), "node_id", "inner").select(
         "way_id", "n_refs", "pos", "lat", "lon"
     )
-    n_part = max(config.shuffle_partitions, 16)
-    ordered = resolved.repartition(n_part, "way_id").sortWithinPartitions("way_id", "pos")
+    ordered = resolved.repartition("way_id").sortWithinPartitions("way_id", "pos")
     geoms = (
         ordered.mapInPandas(_reassemble_kernel, schema=_ASM_SCHEMA)
         .where(F.col("n_resolved") == F.col("n_refs"))  # drop partial ways
@@ -179,8 +183,7 @@ def assemble_clean_simplify(
     resolved = refs.join(_shuffle_hash(nodes), "node_id", "inner").select(
         "way_id", "n_refs", "pos", "lat", "lon", "tags"
     )
-    n_part = max(config.shuffle_partitions, 16)
-    ordered = resolved.repartition(n_part, "way_id").sortWithinPartitions("way_id", "pos")
+    ordered = resolved.repartition("way_id").sortWithinPartitions("way_id", "pos")
 
     from .geometry_ops import clean_simplify_concat
 

@@ -438,8 +438,9 @@ def _snap_map_blocks(
             if len(res):
                 yield res
 
-    n_part = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    rep = replicated.repartition(n_part, "block").sortWithinPartitions("block")
+    # no explicit partition count: AQE sizes the kernel's task count from
+    # the shuffle bytes (see operators.assemble — per-task Python cost)
+    rep = replicated.repartition("block").sortWithinPartitions("block")
     return rep.mapInPandas(
         kernel,
         schema="lat double, lon double, snap_lat double, snap_lon double, viol int",

@@ -97,9 +97,9 @@ def _read_cpu_ticks() -> tuple[int, int]:
     return vals[7], sum(vals)
 
 
-def spread_cpuset(cpus: int) -> str:
-    """k pinned CPUs SPREAD across the vCPU space at stride 32/k, starting
-    at cpu1 — never compact 0..k-1, never cpu0.
+def spread_cpuset(cpus: int, n_cpus: int) -> str:
+    """k pinned CPUs SPREAD across an n_cpus vCPU space at stride n_cpus/k,
+    starting at cpu1 — never compact 0..k-1, never cpu0.
 
     Measured on this VM (scripts/host_probe.py): a pure-ALU loop scales
     1→4 at 4.02× under COMPACT pinning (cores are honest), but the memory
@@ -113,10 +113,10 @@ def spread_cpuset(cpus: int) -> str:
     cpu1-31 measured 6-13 GB/s. Both choices are fixed in advance of any
     session using them and are level-symmetric (the 1-CPU leg gets the
     same class of core as each of the 4-CPU leg's)."""
-    if cpus >= _N_CPUS:
-        return f"0-{_N_CPUS - 1}"
-    stride = max(1, _N_CPUS // cpus)
-    return ",".join(str((1 + i * stride) % _N_CPUS) for i in range(cpus))
+    if cpus >= n_cpus:
+        return f"0-{n_cpus - 1}"
+    stride = max(1, n_cpus // cpus)
+    return ",".join(str((1 + i * stride) % n_cpus) for i in range(cpus))
 
 
 _N_CPUS = os.cpu_count() or 32
@@ -227,7 +227,8 @@ def select_cpuset(k: int, sweep: dict[int, float] | None = None) -> tuple[str, d
         return env, {"cpuset": env, "source": "env"}
     sweep = sweep if sweep is not None else _sweep_cpus()
     if not sweep:
-        return spread_cpuset(k), {"cpuset": spread_cpuset(k), "source": "fallback"}
+        cpuset = spread_cpuset(k, _N_CPUS)
+        return cpuset, {"cpuset": cpuset, "source": "fallback"}
     ranked = sorted(sweep, key=lambda c: -sweep[c])
     if k == 1:
         best = ranked[0]

@@ -1,11 +1,60 @@
-"""EngineConfig: YAML loading against the actual reference configs and
+"""EngineConfig: YAML loading of reference-shaped configs and
 step-param-hash invalidation semantics (reference :239-334)."""
+
+import dataclasses
+
+import pytest
 
 from osmwaterwayextractor_spark.config import EngineConfig
 
+# the sections and keys of the reference's config.yaml that from_yaml reads
+REFERENCE_YAML = """\
+processing:
+  snap_tolerance_m: 6.0
+  min_fragment_length_m: 50.0
+  coordinate_precision: 5
+  waterway_types:
+    - river
+    - canal
+  enable_geometry_simplification: true
+  simplification_tolerance_m: 5.0
+clustering:
+  max_displacement_multiplier: 3.0
+  warning_displacement_multiplier: 2.0
+  max_cluster_size_warning: 10
+ids:
+  hash_length: 8
+qa:
+  distance_validation_samples: 1000
+"""
 
-def test_from_reference_yaml():
-    cfg = EngineConfig.from_yaml("/root/reference/config.yaml")
+# the reference's test_config_no_simplify.yaml
+NO_SIMPLIFY_YAML = """\
+processing:
+  snap_tolerance_m: 5.0
+  min_fragment_length_m: 50.0
+  coordinate_precision: 5
+  waterway_types:
+    - river
+    - canal
+  enable_geometry_simplification: false
+  simplification_tolerance_m: 5.0
+clustering:
+  max_displacement_multiplier: 1.5
+  warning_displacement_multiplier: 1.2
+ids:
+  hash_length: 8
+"""
+
+
+def _from_yaml(tmp_path, text):
+    path = tmp_path / "config.yaml"
+    path.write_text(text)
+    return EngineConfig.from_yaml(str(path))
+
+
+def test_from_reference_yaml(tmp_path):
+    cfg = _from_yaml(tmp_path, REFERENCE_YAML)
     assert cfg.snap_tolerance_m == 6.0
     assert cfg.min_fragment_length_m == 50.0
     assert cfg.coordinate_precision == 5
@@ -17,16 +66,14 @@ def test_from_reference_yaml():
     assert cfg.hash_length == 8
 
 
-def test_from_no_simplify_yaml():
-    cfg = EngineConfig.from_yaml("/root/reference/test_config_no_simplify.yaml")
+def test_from_no_simplify_yaml(tmp_path):
+    cfg = _from_yaml(tmp_path, NO_SIMPLIFY_YAML)
     assert cfg.enable_geometry_simplification is False
     assert cfg.snap_tolerance_m == 5.0
     assert cfg.max_displacement_multiplier == 1.5
 
 
 def test_step_param_hash_scoping():
-    import dataclasses
-
     base = EngineConfig()
     # late-stage knob must not invalidate early stages
     late = dataclasses.replace(base, min_fragment_length_m=99.0)
@@ -43,3 +90,24 @@ def test_step_param_hash_scoping():
     snap = dataclasses.replace(base, snap_tolerance_m=9.0)
     assert base.step_param_hash("parsed") == snap.step_param_hash("parsed")
     assert base.step_param_hash("assembled") == snap.step_param_hash("assembled")
+    # the snap domain is built from intersected (snap-tolerance) ways
+    assert base.step_param_hash("clustering_domain") != snap.step_param_hash(
+        "clustering_domain"
+    )
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [("intersect_cell_cap", 64), ("resume", False), ("checkpoint_dir", "/elsewhere")],
+)
+def test_clustering_domain_hash_ignores_output_invariant_knobs(field, value):
+    # the snap domain depends only on the intersected ways: a skew cap, the
+    # resume flag or the checkpoint root must not invalidate its checkpoint
+    base = EngineConfig()
+    other = dataclasses.replace(base, **{field: value})
+    assert base.step_param_hash("clustering_domain") == other.step_param_hash(
+        "clustering_domain"
+    )
+    assert base.step_param_hash("intersections") == other.step_param_hash(
+        "intersections"
+    )

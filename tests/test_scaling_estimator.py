@@ -93,11 +93,12 @@ def test_other_level_pairs_respect_factor():
 
 
 def test_spread_cpuset_never_compact_never_cpu0():
-    # spread pinning: stride 32/k starting at cpu1 — adjacent vCPUs share a
-    # memory path on this VM and cpu0 hosts IRQ/system load (host_probe.py)
-    assert scaling_evidence.spread_cpuset(1) == "1"
-    assert scaling_evidence.spread_cpuset(4) == "1,9,17,25"
-    cpus = [int(c) for c in scaling_evidence.spread_cpuset(8).split(",")]
+    # spread pinning on the 32-vCPU scaling host: stride 32/k starting at
+    # cpu1 — adjacent vCPUs share a memory path there and cpu0 hosts
+    # IRQ/system load (host_probe.py)
+    assert scaling_evidence.spread_cpuset(1, 32) == "1"
+    assert scaling_evidence.spread_cpuset(4, 32) == "1,9,17,25"
+    cpus = [int(c) for c in scaling_evidence.spread_cpuset(8, 32).split(",")]
     assert 0 not in cpus
     assert len(set(cpus)) == 8
     # uniform stride — no two pins adjacent
