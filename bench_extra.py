@@ -28,7 +28,7 @@ from bench import build_session  # same session config as the frozen bench
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     reps = int(os.environ.get("SPARK_GRAFT_EXTRA_REPS", "2"))
     tag = os.environ.get("OSMWWE_PLAN_TAG", "")
     plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")

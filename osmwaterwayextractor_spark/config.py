@@ -46,10 +46,6 @@ class EngineConfig:
     # candidate fan-out of the intersection self-join. Output-invariant —
     # deliberately NOT part of any step-param hash.
     intersect_cell_cap: int = 512
-    # local-first assembly (assemble_local.py) avoids the ref⋈node shuffle
-    # for doc-local ways but pays Python-side span parsing; the JVM from_json
-    # + sort-based reassembly wins in this environment → off by default
-    local_first_assembly: bool = False
 
     # QA sampling (reference config.yaml:145): edges re-measured with the
     # full-precision geodesic kernel post-build; 0 disables
@@ -72,18 +68,7 @@ class EngineConfig:
         # parse_osm rounds coordinates only; the waterway-type filter applies
         # AFTER the checkpoint (ways_from_parsed), so changing the type list
         # correctly does not invalidate the parsed cache.
-        # local_first_assembly IS included: the two branches checkpoint
-        # different schemas under this stage (parse_osm union schema vs
-        # parse_nodes node-only), so toggling it must not reuse the other
-        # mode's checkpoint
-        "parsed": ("coordinate_precision", "local_first_assembly"),
-        "assembled": (
-            "waterway_types",
-            "filter_waterway_types",
-            "coordinate_precision",
-            "local_first_assembly",
-        ),
-        "processed": ("coordinate_precision",),
+        "parsed": ("coordinate_precision",),
         "simplified": (
             "coordinate_precision",
             "enable_geometry_simplification",
@@ -98,13 +83,6 @@ class EngineConfig:
         ),
         # the snap domain is a pure function of the intersected ways
         "clustering_domain": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-        ),
-        "endpoints": (
             "coordinate_precision",
             "enable_geometry_simplification",
             "simplification_tolerance_m",

@@ -225,9 +225,21 @@ def snap_map(
     if os.environ.get("OSMWWE_STAGE_TIMING"):
         print(f"[snap] block kernel+checkpoint: {time.time() - t0:.2f}s", flush=True)
     t0 = time.time()
-    if mapping.where(F.col("viol") == 1).limit(1).count() > 0:
+    # ordered top-1: one job at any partition count (a bare limit(1).collect
+    # scans partitions incrementally, one job per round) and a deterministic
+    # member to name
+    bad = mapping.where(F.col("viol") == 1).orderBy("lat", "lon").limit(1).collect()
+    if bad:
         # reference :1314-1317 — hard abort on displacement violations
-        raise ValueError("Cluster displacement exceeds safety threshold")
+        m = bad[0]
+        disp = float(geodesic_m(m.lat, m.lon, m.snap_lat, m.snap_lon))
+        bound = config.snap_tolerance_m * config.max_displacement_multiplier
+        raise ValueError(
+            "Cluster displacement exceeds safety threshold: member "
+            f"({m.lat!r}, {m.lon!r}) snaps to centroid ({m.snap_lat!r}, "
+            f"{m.snap_lon!r}), {disp:.6g} m > snap_tolerance_m * "
+            f"max_displacement_multiplier = {bound:.6g} m"
+        )
     if os.environ.get("OSMWWE_STAGE_TIMING"):
         print(f"[snap] violation probe: {time.time() - t0:.2f}s", flush=True)
     return points.join(mapping.drop("viol"), ["lat", "lon"], "left").select(
@@ -408,12 +420,12 @@ def _snap_map_blocks(
             disp = geodesic_m(
                 mlat, mlon, np.full(g.shape[0], cla), np.full(g.shape[0], clo)
             )
-            viol = 1 if float(disp.max()) > r_disp else 0
             out["lat"].extend(mlat.tolist())
             out["lon"].extend(mlon.tolist())
             out["snap_lat"].extend([cla] * g.shape[0])
             out["snap_lon"].extend([clo] * g.shape[0])
-            out["viol"].extend([viol] * g.shape[0])
+            # per member, so the guardrail's one probed row is a violator
+            out["viol"].extend((disp > r_disp).astype(int).tolist())
         return pd.DataFrame(out)
 
     def kernel(batches):

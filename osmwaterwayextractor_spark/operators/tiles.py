@@ -16,10 +16,10 @@ from ..config import EngineConfig
 from ..functions.tiling import H3_RES_TO_LEVEL, LEVEL_SHIFT, X_SHIFT, XY_MASK, cell_width_deg
 
 
-# Per-edge covering resolution — the single source of truth. build_edges'
-# fused NumPy kernel (operators.edges) and the Catalyst fallback below must
-# agree, or pipelines would silently ship coverings at mixed resolutions
-# (pipeline.py skips with_edge_covering whenever a 'covering' column exists).
+# Per-edge covering resolution — the single source of truth. The pipeline
+# ships the coverings of build_edges' fused NumPy kernel (operators.edges);
+# with_edge_covering below is the Catalyst reference that tests compare the
+# kernel against, so both must read this constant.
 COVERING_H3_RES = 8
 
 

@@ -19,25 +19,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
+from ..operators.assemble import assemble_clean_simplify
 from ..operators.cluster import snap_map
-from ..operators.edges import (
-    build_edges,
-    build_nodes,
-    clustering_domain_fast,
-    endpoint_junction_points,
-)
-from ..operators.geometry_ops import (
-    clean_and_simplify,
-    detect_intersections,
-    insert_intersections,
-)
-from ..operators.tiles import (
-    channel_density_rollup,
-    with_edge_cells,
-    with_edge_covering,
-    with_node_cells,
-)
-from ..sources.parse import parse_nodes
+from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
+from ..operators.geometry_ops import detect_intersections, insert_intersections
+from ..operators.tiles import channel_density_rollup, with_edge_cells, with_node_cells
+from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
 
 
 def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
@@ -130,20 +117,13 @@ class WaterwayEngine:
         is deep, and every downstream action would re-analyze/optimize the
         whole accumulated tree on the driver (seconds per action).
 
-        Default is a snappy-parquet round-trip in a scratch dir (tmpfs when
-        spark.local.dir points there): columnar, serialized, OFF the GC's
-        live set. ``localCheckpoint`` (OSMWWE_STAGE_MODE=localckpt) keeps
-        every stage's partitions as DESERIALIZED row objects in executor
-        storage — measured on the 100k-doc pipeline, the accumulated live
-        set inflates JVM GC to ~470 task-seconds per run and destroys
-        core-count scaling."""
+        The boundary is a snappy-parquet round-trip in a scratch dir (tmpfs
+        when spark.local.dir points there): columnar, serialized, OFF the
+        GC's live set (docs/SCALE.md records why it replaced
+        ``localCheckpoint``)."""
         import os
         import uuid
 
-        mode = os.environ.get("OSMWWE_STAGE_MODE", "parquet")
-        if mode == "localckpt":
-            self._last_stage_path = None  # no footer stats available
-            return df.localCheckpoint(eager=True)
         spark = df.sparkSession
         if self._scratch is None:
             import atexit
@@ -247,25 +227,15 @@ class WaterwayEngine:
         # ONE span scan parses nodes AND ways (union schema); it materializes
         # once and the assembly's three consumers (refs, tags, node coords)
         # read it back as cheap checkpoint-scan filters.
-        if cfg.local_first_assembly:
-            from ..operators.assemble_local import assemble_local_first
-
-            nodes_raw = self._stage("parsed", parse_nodes(docs, cfg))
-            assembled = assemble_local_first(docs, nodes_raw, cfg)
-            simplified = self._stage("simplified", clean_and_simplify(assembled, cfg))
-        else:
-            from ..operators.assemble import assemble_clean_simplify
-            from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
-
-            parsed = self._stage("parsed", parse_osm(docs, cfg))
-            # assembly + clean + simplify as ONE Arrow pass: the assembled
-            # vertex arrays never round-trip JVM↔Python between kernels
-            simplified = self._stage(
-                "simplified",
-                assemble_clean_simplify(
-                    ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
-                ),
-            )
+        parsed = self._stage("parsed", parse_osm(docs, cfg))
+        # assembly + clean + simplify as ONE Arrow pass: the assembled
+        # vertex arrays never round-trip JVM↔Python between kernels
+        simplified = self._stage(
+            "simplified",
+            assemble_clean_simplify(
+                ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
+            ),
+        )
 
         if cfg.enable_intersection_detection:
             # detect feeds insert lazily: insert's left join passes ways with
@@ -309,11 +279,8 @@ class WaterwayEngine:
         )
 
         nodes_t = with_node_cells(nodes, cfg)
-        # build_edges emits `covering` from the fused NumPy kernel; the
-        # Catalyst with_edge_covering expr is only applied if absent
+        # `covering` already comes from build_edges' fused NumPy kernel
         edges_t = with_edge_cells(edges, cfg)
-        if "covering" not in edges_t.columns:
-            edges_t = with_edge_covering(edges_t, cfg)
         if self.checkpointer is not None:
             # Iceberg-style final layout: nodes/edges land partitioned by
             # their coarsest tile cell, resumable at the tile-partition level

@@ -12,6 +12,8 @@ DataFrame.hint for the composition (round 5 placed no join hints on this
 stage, so Catalyst picked sort-merge joins); "after" is the shipped code
 with the shuffle_hash pins. Explain is driver-only — no jobs run beyond
 the one-time scratch build, so this never contaminates a bench session.
+The /dev/shm/plan-* scratch is keyed by a fingerprint of the engine
+source and config; clear old fingerprints by hand to reclaim tmpfs.
 
 Usage: python scripts/plan_intersections.py [n_docs]   # default 20000
 """
@@ -21,7 +23,22 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def _fingerprint(cfg, params) -> str:
+    """12-hex digest of the engine package source, ``cfg`` and ``params``."""
+    import glob
+    import hashlib
+
+    h = hashlib.sha256(repr((cfg, params)).encode())
+    pkg = os.path.join(ROOT, "osmwaterwayextractor_spark")
+    for f in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(f, ROOT).encode())
+        with open(f, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:12]
 
 
 def _explain(spark, df) -> str:
@@ -35,7 +52,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_BENCH_MODE", "pipeline")  # AQE off, like the pipeline
     from bench import build_session
 
-    spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
 
     from osmwaterwayextractor_spark.config import EngineConfig
     from osmwaterwayextractor_spark.operators.assemble import assemble_geometries
@@ -53,11 +70,12 @@ def main() -> None:
     )
 
     cfg = EngineConfig(filter_waterway_types=False)
-    simplified_path = f"/dev/shm/plan-simplified-{n_docs}"
-    covered_path = f"/dev/shm/plan-covered-{n_docs}"
-    plan_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06"
-    )
+    params = DocsGenParams(seed=42, mega_every=200, mega_refs=20000)
+    # an edit to the engine, cfg or params lands in a fresh scratch path
+    scratch = f"/dev/shm/plan-{n_docs}-{_fingerprint(cfg, params)}"
+    simplified_path = f"{scratch}-simplified"
+    covered_path = f"{scratch}-covered"
+    plan_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(plan_dir, exist_ok=True)
 
     def stage_write(df, path):
@@ -67,12 +85,9 @@ def main() -> None:
             ).parquet(path)
         return spark.read.parquet(path)
 
-    params = DocsGenParams(seed=42, mega_every=200, mega_refs=20000)
     if not os.path.exists(os.path.join(simplified_path, "_SUCCESS")):
-        docs = stage_write(
-            docs_dataframe(spark, n_docs, params), f"/dev/shm/plan-docs-{n_docs}"
-        )
-        parsed = stage_write(parse_osm(docs, cfg), f"/dev/shm/plan-parsed-{n_docs}")
+        docs = stage_write(docs_dataframe(spark, n_docs, params), f"{scratch}-docs")
+        parsed = stage_write(parse_osm(docs, cfg), f"{scratch}-parsed")
         assembled = assemble_geometries(
             ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
         )
@@ -87,7 +102,11 @@ def main() -> None:
     real_hint = cls.hint
     for tag in ("after", "before"):
         if tag == "before":
-            cls.hint = lambda self, name, *args: self
+            # drop only the round-6 shuffle_hash pins; any other hint still
+            # reaches the plan
+            cls.hint = lambda self, name, *args: (
+                self if name == "shuffle_hash" else real_hint(self, name, *args)
+            )
         try:
             points = detect_intersections(simplified, cfg, covered=covered)
             staged = insert_intersections(simplified, points, cfg, covered=covered)

@@ -6,10 +6,13 @@ maps on the same input: blocks (production), driver union-find over
 collected pairs, and distributed min-label propagation (VERDICT r1 item 4 +
 the round-2 block design's completeness proof)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from osmwaterwayextractor_spark.config import EngineConfig
+from osmwaterwayextractor_spark.functions.geodesy import geodesic_m
 import osmwaterwayextractor_spark.operators.cluster as cl
 
 
@@ -59,8 +62,20 @@ def test_snap_map_displacement_guardrail_all_paths(spark):
     df = _fixture_points(spark)
     cfg = EngineConfig(snap_tolerance_m=2000.0, max_displacement_multiplier=1e-7)
     maxlat = df.agg(F.max(F.abs("lat"))).collect()[0][0]
-    with pytest.raises(Exception, match="displacement"):
+    # production path names one violating member, its centroid and the bound
+    num = r"(-?[0-9][0-9.e+-]*)"
+    msg = (
+        rf"^Cluster displacement exceeds safety threshold: member \({num}, {num}\) "
+        rf"snaps to centroid \({num}, {num}\), {num} m > snap_tolerance_m \* "
+        r"max_displacement_multiplier = 0\.0002 m$"
+    )
+    with pytest.raises(ValueError, match=msg) as exc:
         cl.snap_map(df, cfg, spark).collect()
+    lat, lon, clat, clon, disp = map(float, re.match(msg, str(exc.value)).groups())
+    # every point sits in one chained cluster → the smallest member is named
+    assert (lat, lon) == min((r.lat, r.lon) for r in df.collect())
+    assert disp == pytest.approx(float(geodesic_m(lat, lon, clat, clon)), rel=1e-5)
+    assert disp > 2000.0 * 1e-7
     pairs_pdf = cl.epsilon_pair_edges(df, cfg.snap_tolerance_m, maxlat).toPandas()
     with pytest.raises(Exception, match="displacement"):
         cl._snap_map_driver(df, pairs_pdf, cfg, spark).collect()

@@ -77,19 +77,19 @@ def test_step_param_hash_scoping():
     base = EngineConfig()
     # late-stage knob must not invalidate early stages
     late = dataclasses.replace(base, min_fragment_length_m=99.0)
-    assert base.step_param_hash("processed") == late.step_param_hash("processed")
+    assert base.step_param_hash("simplified") == late.step_param_hash("simplified")
     assert base.step_param_hash("clustering") == late.step_param_hash("clustering")
     assert base.step_param_hash("edges") != late.step_param_hash("edges")
     # early-stage knob invalidates downstream
     early = dataclasses.replace(base, coordinate_precision=6)
-    assert base.step_param_hash("processed") != early.step_param_hash("processed")
+    assert base.step_param_hash("simplified") != early.step_param_hash("simplified")
     assert base.step_param_hash("edges") != early.step_param_hash("edges")
     # parse stage rounds coordinates → precision must invalidate it
     assert base.step_param_hash("parsed") != early.step_param_hash("parsed")
     # ...but snapping knobs must not
     snap = dataclasses.replace(base, snap_tolerance_m=9.0)
     assert base.step_param_hash("parsed") == snap.step_param_hash("parsed")
-    assert base.step_param_hash("assembled") == snap.step_param_hash("assembled")
+    assert base.step_param_hash("simplified") == snap.step_param_hash("simplified")
     # the snap domain is built from intersected (snap-tolerance) ways
     assert base.step_param_hash("clustering_domain") != snap.step_param_hash(
         "clustering_domain"
