@@ -56,6 +56,26 @@ def host_probe_self(seconds: float = 2.0) -> dict:
         return {"probe_cpus": [], "membw_gbps": -1.0, "membw_gbps_per_core": -1.0}
 
 
+def local_dir() -> str:
+    """A fresh Spark scratch directory on tmpfs (a virtual disk's high and
+    variable latency otherwise dominates small-stage wall time), removed
+    when the process exits."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix="osmwwe-bench-", dir="/dev/shm")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def driver_memory() -> str:
+    """Half of the host's RAM (/proc/meminfo MemTotal), at most 48g."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])
+    return f"{min(total_kb // (2 * 1024), 48 * 1024)}m"
+
+
 def build_session(cpus: int):
     from osmwaterwayextractor_spark.plans.pipeline import spark_session
 
@@ -65,11 +85,9 @@ def build_session(cpus: int):
         "spark.eventLog.enabled": os.environ.get("OSMWWE_EVENTLOG", "false"),
         "spark.eventLog.dir": "/tmp/spark-events",
         "spark.eventLog.compress": "false",
-        "spark.driver.memory": "48g",
+        "spark.driver.memory": driver_memory(),
         "spark.sql.autoBroadcastJoinThreshold": "64MB",
-        # shuffle/spill on tmpfs: the sandbox's virtio disk has high and
-        # variable latency that otherwise dominates small-stage wall time
-        "spark.local.dir": "/dev/shm/spark-local",
+        "spark.local.dir": local_dir(),
         # finer input splits: the pipeline's stage parquets are a handful of
         # files; at the default 128MB the covered/ways scans collapse to
         # 4-8 skewed tasks (mega-ways) that stall multi-core legs at ~0.2

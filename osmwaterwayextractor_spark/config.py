@@ -69,13 +69,19 @@ class EngineConfig:
         # AFTER the checkpoint (ways_from_parsed), so changing the type list
         # correctly does not invalidate the parsed cache.
         "parsed": ("coordinate_precision",),
+        # ways_from_parsed filters by type before assembly, so the type knobs
+        # key simplified and every stage built from it
         "simplified": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
         ),
         "intersections": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -84,6 +90,8 @@ class EngineConfig:
         # the snap domain is a pure function of the intersected ways
         "clustering_domain": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -91,6 +99,8 @@ class EngineConfig:
         ),
         "clustering": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -99,6 +109,8 @@ class EngineConfig:
         ),
         "edges": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -109,6 +121,8 @@ class EngineConfig:
         ),
         "nodes": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -116,9 +130,10 @@ class EngineConfig:
             "max_displacement_multiplier",
             "hash_length",
         ),
-        "tiles": ("tile_resolutions",),
         "nodes_tiled": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -129,6 +144,8 @@ class EngineConfig:
         ),
         "edges_tiled": (
             "coordinate_precision",
+            "waterway_types",
+            "filter_waterway_types",
             "enable_geometry_simplification",
             "simplification_tolerance_m",
             "enable_intersection_detection",
@@ -139,6 +156,9 @@ class EngineConfig:
             "tile_resolutions",
         ),
     }
+    # the channel-density rollup aggregates the tiled edges, so it keys on
+    # everything they key on
+    _STEP_PARAMS["tiles"] = _STEP_PARAMS["edges_tiled"]
 
     def step_param_hash(self, step: str) -> str:
         """16-hex param hash for a pipeline step (reference :245-334)."""

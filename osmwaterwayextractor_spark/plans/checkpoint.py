@@ -10,7 +10,7 @@ Spark-native analog of the reference's step caches
   partition with (partition id, rows, seconds, rows/sec) — the north-rule's
   per-partition lineage + throughput metrics;
 - ``materialize`` resumes whole stages (valid ``_SUCCESS`` → read back,
-  recorded as skipped);
+  recorded as skipped, the stage's builder never called);
 - ``materialize_partitioned`` resumes at the PARTITION level for
   cell-partitioned outputs (tile partitions): existing ``<col>=<value>``
   directories are skipped and only missing partitions are computed and
@@ -23,7 +23,7 @@ import json
 import os
 import time
 import uuid
-from typing import Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,15 +91,12 @@ class Checkpointer:
     def _stage_dir(self, stage: str, config: EngineConfig) -> str:
         return os.path.join(self.root, f"{stage}_{config.step_param_hash(stage)}")
 
-    def is_complete(self, stage: str, config: EngineConfig) -> bool:
-        """True iff a resumable run would skip this stage (committed data
-        present). Lets the pipeline avoid eager side-work (e.g. the covered
-        scratch materialization) whose consumer stage will be resumed."""
-        return self.resume and os.path.exists(
-            os.path.join(self._stage_dir(stage, config), "data", "_SUCCESS")
-        )
-
-    def materialize(self, stage: str, config: EngineConfig, df: DataFrame) -> DataFrame:
+    def materialize(
+        self, stage: str, config: EngineConfig, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """Write ``build()`` as the stage's checkpoint and read it back. A
+        committed checkpoint is read back without calling ``build``, so a
+        resumed stage plans and runs none of its operators' eager work."""
         sdir = self._stage_dir(stage, config)
         data_dir = os.path.join(sdir, "data")
         if self.resume and os.path.exists(os.path.join(data_dir, "_SUCCESS")):
@@ -107,7 +104,7 @@ class Checkpointer:
             return self.spark.read.parquet(data_dir)
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
-        wrapped = _with_lineage_sidecar(df, os.path.join(sdir, "lineage"), run_id)
+        wrapped = _with_lineage_sidecar(build(), os.path.join(sdir, "lineage"), run_id)
         wrapped.write.mode("overwrite").parquet(data_dir)
         self.events.append(
             {"stage": stage, "action": "computed", "seconds": time.time() - t0, "run_id": run_id}
@@ -183,6 +180,13 @@ class Checkpointer:
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
         wrapped = _with_lineage_sidecar(pending, os.path.join(sdir, "lineage"), run_id)
+        # a partitioned write costs per output file, not per byte: spread
+        # the cells over every core, each cell in one task (one file per
+        # cell directory). The count is explicit because AQE would coalesce
+        # a shuffle this small back into one task. The shuffle sits
+        # after the lineage pass, so it runs no extra Python tasks and the
+        # lineage records keep the input's partitions.
+        wrapped = wrapped.repartition(self.spark.sparkContext.defaultParallelism, partition_col)
         sink.append(wrapped, partition_col)
         # job commit succeeded → everything in the table now is fully committed
         now_on_disk = sorted(sink.list_partitions(partition_col))

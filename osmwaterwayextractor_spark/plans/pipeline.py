@@ -13,9 +13,11 @@ lineage manifests; reruns skip completed stages (plans.checkpoint).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
@@ -60,6 +62,23 @@ def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Opt
     return mx
 
 
+@contextmanager
+def _stage_label(name: str):
+    """Label every Spark job submitted inside with ``stage-<name>`` (shows in
+    the UI and the event log's job Properties), so per-stage task time is
+    attributable in event-log analyzers — without it, 86% of a 400k-doc
+    anchor's task time keys to the generic "parquet at <unknown>" callsite.
+    The caller's description is restored on exit, not reset to None, so a
+    label an outer harness set for its own jobs survives."""
+    sc = SparkContext.getOrCreate()
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"stage-{name}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 @dataclass
 class GraphResult:
     nodes: DataFrame
@@ -73,35 +92,34 @@ class WaterwayEngine:
         self.checkpointer = checkpointer
         self._scratch: Optional[str] = None
 
-    def _stage(self, name: str, df: DataFrame) -> DataFrame:
+    def _stage(
+        self, name: str, build: Callable[[], DataFrame], partition_col: Optional[str] = None
+    ) -> DataFrame:
+        """Build and materialize one stage boundary under its label.
+
+        ``build`` takes no arguments and is called inside the label, so the
+        eager jobs a builder runs (snap_map's block-kernel checkpoint and
+        violation probe, the covered materialization) carry the stage's
+        name. A stage the checkpointer already holds is read back without
+        calling ``build``. ``partition_col`` lands the stage as a
+        tile-partitioned table (checkpointed builds only); its builder is a
+        cheap projection, always called, because a partial table resumes
+        per cell."""
         import os
         import time
 
         t0 = time.time()
         if os.environ.get("OSMWWE_STAGE_TIMING") and self._t_prev_stage_end is not None:
-            # time since the previous stage finished = driver-side plan
-            # construction + any eager work run OUTSIDE stage timers (e.g.
-            # snap_map's block-kernel localCheckpoint + violation probe)
             print(f"[gap] before {name}: {t0 - self._t_prev_stage_end:.2f}s", flush=True)
-        # label every job this stage submits (shows in the UI and the event
-        # log's job/stage Properties) so per-stage task time is attributable
-        # in event-log analyzers — without it, 86% of a 400k-doc anchor's
-        # task time keys to the generic "parquet at <unknown>" callsite
-        sc = df.sparkSession.sparkContext
-        prev_desc = sc.getLocalProperty("spark.job.description")
-        sc.setLocalProperty("spark.job.description", f"stage-{name}")
-        try:
-            if self.checkpointer is not None:
-                out = self.checkpointer.materialize(name, self.config, df)
-                self._last_stage_path = os.path.join(
-                    self.checkpointer._stage_dir(name, self.config), "data"
-                )
+        with _stage_label(name):
+            ck = self.checkpointer
+            if ck is None:
+                out = self._ephemeral_stage(name, build())
+            elif partition_col is not None:
+                out = ck.materialize_partitioned(name, self.config, build(), partition_col)
             else:
-                out = self._ephemeral_stage(name, df)
-        finally:
-            # restore the caller's description (ADVICE r5: resetting to None
-            # clobbered any label an outer harness had set for its own jobs)
-            sc.setLocalProperty("spark.job.description", prev_desc)
+                out = ck.materialize(name, self.config, build)
+                self._last_stage_path = os.path.join(ck._stage_dir(name, self.config), "data")
         if os.environ.get("OSMWWE_STAGE_TIMING"):
             print(f"[stage] {name}: {time.time() - t0:.2f}s", flush=True)
         self._t_prev_stage_end = time.time()
@@ -180,38 +198,38 @@ class WaterwayEngine:
         from ..operators.geometry_ops import _covered_for_join
 
         t0 = time.time()
-        out = self._ephemeral_stage("covered", _covered_for_join(simplified, self.config))
+        with _stage_label("covered"):
+            out = self._ephemeral_stage("covered", _covered_for_join(simplified, self.config))
         if os.environ.get("OSMWWE_STAGE_TIMING"):
             print(f"[stage] covered: {time.time() - t0:.2f}s", flush=True)
-        # reset the gap timer so the next [gap] line measures plan
-        # construction alone, not this stage's wall over again
-        self._t_prev_stage_end = time.time()
         return out
 
-    def _stages_concurrent(self, named: list[tuple[str, DataFrame]]) -> list[DataFrame]:
+    def _stages_concurrent(
+        self, named: list[tuple[str, Callable[[], DataFrame]]], partition_col: Optional[str] = None
+    ) -> list[DataFrame]:
         """Materialize independent stages from concurrent driver threads so
         their Spark jobs overlap (the round-1 pipeline ran ~40 jobs strictly
-        serially — the dominant anti-scaling cost). The durable-checkpoint
-        path stays serial: resume semantics over one manifest dir are not
-        worth racing."""
-        if self.checkpointer is not None or len(named) == 1:
-            return [self._stage(n, df) for n, df in named]
+        serially — the dominant anti-scaling cost). With a checkpointer too:
+        each stage writes its own directory and ``Checkpointer.events`` only
+        appends."""
         from concurrent.futures import ThreadPoolExecutor
 
-        def run(n: str, df: DataFrame) -> DataFrame:
+        def run(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+            # local properties do not follow a Python thread, so the label
+            # (set in _stage) and the pool are set here, in the worker. A
             # distinct FAIR pool per concurrent stage: under FIFO the second
             # job's tasks only backfill the first job's idle slots; FAIR
             # interleaves them so neither stage's small tail serializes the
             # other (spark.scheduler.mode=FAIR set in spark_session)
-            sc = df.sparkSession.sparkContext
-            sc.setLocalProperty("spark.scheduler.pool", f"stage-{n}")
+            sc = SparkContext.getOrCreate()
+            sc.setLocalProperty("spark.scheduler.pool", f"stage-{name}")
             try:
-                return self._stage(n, df)
+                return self._stage(name, build, partition_col)
             finally:
                 sc.setLocalProperty("spark.scheduler.pool", None)
 
         with ThreadPoolExecutor(len(named)) as pool:
-            futs = [pool.submit(run, n, df) for n, df in named]
+            futs = [pool.submit(run, name, build) for name, build in named]
             return [f.result() for f in futs]
 
     def build_graph(self, docs: DataFrame, spark: Optional[SparkSession] = None) -> GraphResult:
@@ -227,17 +245,17 @@ class WaterwayEngine:
         # ONE span scan parses nodes AND ways (union schema); it materializes
         # once and the assembly's three consumers (refs, tags, node coords)
         # read it back as cheap checkpoint-scan filters.
-        parsed = self._stage("parsed", parse_osm(docs, cfg))
+        parsed = self._stage("parsed", lambda: parse_osm(docs, cfg))
         # assembly + clean + simplify as ONE Arrow pass: the assembled
         # vertex arrays never round-trip JVM↔Python between kernels
         simplified = self._stage(
             "simplified",
-            assemble_clean_simplify(
+            lambda: assemble_clean_simplify(
                 ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
             ),
         )
 
-        if cfg.enable_intersection_detection:
+        def intersect() -> DataFrame:
             # detect feeds insert lazily: insert's left join passes ways with
             # no candidate points through untouched, so the empty-point case
             # needs no isEmpty() driver probe. The covered-segment table is
@@ -245,59 +263,61 @@ class WaterwayEngine:
             # composed plan Catalyst's column pruning otherwise builds a
             # second, narrower covered exchange and re-runs the whole
             # scan+explode lineage (round-5 profile: duplicate 52-CPU-s
-            # build at 100k docs). Skipped when the intersections stage is
-            # already checkpoint-complete (resume must not recompute it).
-            covered = None
-            if not (
-                self.checkpointer is not None
-                and self.checkpointer.is_complete("intersections", cfg)
-            ):
-                covered = self._covered_stage(simplified)
+            # build at 100k docs).
+            covered = self._covered_stage(simplified)
             points = detect_intersections(simplified, cfg, covered=covered)
-            intersected = self._stage(
-                "intersections",
-                insert_intersections(simplified, points, cfg, covered=covered),
-            )
-        else:
-            intersected = simplified
+            return insert_intersections(simplified, points, cfg, covered=covered)
+
+        intersected = (
+            self._stage("intersections", intersect)
+            if cfg.enable_intersection_detection
+            else simplified
+        )
 
         # the snap domain is consumed 3× inside snap_map (max-lat bound, the
         # block kernel, the final mapping join) — materialize it once instead
         # of recomputing the vertex groupBy per consumer
-        domain = self._stage("clustering_domain", clustering_domain_fast(intersected))
+        domain = self._stage("clustering_domain", lambda: clustering_domain_fast(intersected))
+        domain_path = self._last_stage_path
         # max|lat| only bounds the block-grid level (any upper bound gives a
         # coarser-or-equal, still-correct level) — read it from the domain
         # parquet footers driver-side instead of running a Spark agg job
-        maxlat = _parquet_max_abs(self._last_stage_path, "lat")
         snap = self._stage(
-            "clustering", snap_map(domain, cfg, spark, max_abs_lat=maxlat)
+            "clustering",
+            lambda: snap_map(
+                domain, cfg, spark, max_abs_lat=_parquet_max_abs(domain_path, "lat")
+            ),
         )
 
         # edges and nodes are independent given (intersected, snap) — overlap
         edges, nodes = self._stages_concurrent(
-            [("edges", build_edges(intersected, snap, cfg)), ("nodes", build_nodes(snap, cfg))]
+            [
+                ("edges", lambda: build_edges(intersected, snap, cfg)),
+                ("nodes", lambda: build_nodes(snap, cfg)),
+            ]
         )
 
-        nodes_t = with_node_cells(nodes, cfg)
-        # `covering` already comes from build_edges' fused NumPy kernel
-        edges_t = with_edge_cells(edges, cfg)
-        if self.checkpointer is not None:
-            # Iceberg-style final layout: nodes/edges land partitioned by
-            # their coarsest tile cell, resumable at the tile-partition level
-            # (north_rule; plans.checkpoint.materialize_partitioned skips
-            # already-written <cell>= directories on re-run)
-            pcol = f"cell_r{min(cfg.tile_resolutions)}"
-            nodes_t = self.checkpointer.materialize_partitioned(
-                "nodes_tiled", cfg, nodes_t, pcol
+        if self.checkpointer is None:
+            nodes_t = with_node_cells(nodes, cfg)
+            # `covering` already comes from build_edges' fused NumPy kernel
+            edges_t = with_edge_cells(edges, cfg)
+            # rollup stays lazy: one map-combinable groupBy over the edges —
+            # a barrier here would serialize the tail for no reuse gain
+            return GraphResult(
+                nodes=nodes_t, edges=edges_t, tile_rollup=channel_density_rollup(edges_t, cfg)
             )
-            edges_t = self.checkpointer.materialize_partitioned(
-                "edges_tiled", cfg, edges_t, pcol
-            )
-        # rollup stays lazy: one map-combinable groupBy over checkpointed
-        # edges — a barrier here would serialize the tail for no reuse gain
-        rollup = channel_density_rollup(edges_t, cfg)
-        if self.checkpointer is not None:
-            rollup = self._stage("tiles", rollup)
+        # Iceberg-style final layout: nodes/edges land partitioned by their
+        # coarsest tile cell, resumable at the tile-partition level
+        # (north_rule; plans.checkpoint.materialize_partitioned skips
+        # already-written <cell>= directories on re-run)
+        nodes_t, edges_t = self._stages_concurrent(
+            [
+                ("nodes_tiled", lambda: with_node_cells(nodes, cfg)),
+                ("edges_tiled", lambda: with_edge_cells(edges, cfg)),
+            ],
+            partition_col=f"cell_r{min(cfg.tile_resolutions)}",
+        )
+        rollup = self._stage("tiles", lambda: channel_density_rollup(edges_t, cfg))
         return GraphResult(nodes=nodes_t, edges=edges_t, tile_rollup=rollup)
 
 

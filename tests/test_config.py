@@ -111,3 +111,44 @@ def test_clustering_domain_hash_ignores_output_invariant_knobs(field, value):
     assert base.step_param_hash("intersections") == other.step_param_hash(
         "intersections"
     )
+
+
+# every stage built from the type-filtered ways, in pipeline order
+TYPE_FILTERED_STAGES = (
+    "simplified",
+    "intersections",
+    "clustering_domain",
+    "clustering",
+    "edges",
+    "nodes",
+    "nodes_tiled",
+    "edges_tiled",
+    "tiles",
+)
+
+
+@pytest.mark.parametrize(
+    "field, value", [("waterway_types", ("river",)), ("filter_waterway_types", False)]
+)
+def test_type_filter_keys_every_stage_after_parse(field, value):
+    # ways_from_parsed filters by type before assembly: a checkpointed rerun
+    # with another type list must recompute from simplified on, while the
+    # parsed checkpoint (written before the filter) stays valid
+    base = EngineConfig()
+    other = dataclasses.replace(base, **{field: value})
+    assert base.step_param_hash("parsed") == other.step_param_hash("parsed")
+    for stage in TYPE_FILTERED_STAGES:
+        assert base.step_param_hash(stage) != other.step_param_hash(stage), stage
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [("snap_tolerance_m", 9.0), ("min_fragment_length_m", 99.0), ("hash_length", 12)],
+)
+def test_tile_rollup_hash_follows_the_tiled_edges(field, value):
+    # the rollup aggregates edges_tiled: a knob that recomputes the edges
+    # must not resume the old rollup
+    base = EngineConfig()
+    other = dataclasses.replace(base, **{field: value})
+    assert base.step_param_hash("edges_tiled") != other.step_param_hash("edges_tiled")
+    assert base.step_param_hash("tiles") != other.step_param_hash("tiles")
