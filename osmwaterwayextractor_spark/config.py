@@ -1,11 +1,10 @@
 """Engine configuration.
 
 Mirrors the reference ``Config`` dataclass (osm_waterway_extractor.py:100-237,
-config.yaml) plus graft-specific knobs (tiling resolutions, checkpointing,
-skew handling). Explicit and serializable: the SHA-256 of the per-stage
-parameter subset keys checkpoint paths, reproducing the reference's
-step-parameter-hash cache invalidation (osm_waterway_extractor.py:239-334,
-3038-3055).
+config.yaml) plus graft-specific knobs (tiling resolutions, skew handling).
+Explicit and serializable: the SHA-256 of the per-stage parameter subset keys
+checkpoint paths, reproducing the reference's step-parameter-hash cache
+invalidation (osm_waterway_extractor.py:239-334, 3038-3055).
 """
 
 from __future__ import annotations
@@ -13,8 +12,54 @@ from __future__ import annotations
 import dataclasses
 import hashlib
 import json
-from dataclasses import dataclass, field
-from typing import Optional
+from dataclasses import dataclass
+from typing import NamedTuple
+
+
+class Stage(NamedTuple):
+    parents: tuple[str, ...]  # stages whose outputs the builder reads
+    knobs: tuple[str, ...]  # EngineConfig fields the stage itself reads
+
+
+# The stage graph, the one place a stage's knobs are declared. A stage's
+# checkpoint keys on its own knobs and its ancestors' (``stage_knobs``), so a
+# late-stage knob never invalidates an earlier stage (reference :249-327),
+# and plans.pipeline hands each builder exactly its parents' outputs. A new
+# knob goes on the stage that reads it; a knob no stage declares (QA
+# thresholds, the output-invariant skew cap) keys no checkpoint.
+STAGES: dict[str, Stage] = {
+    # parse_osm rounds coordinates only; the type filter applies after the
+    # checkpoint (ways_from_parsed), so the type knobs key simplified
+    "parsed": Stage((), ("coordinate_precision",)),
+    "simplified": Stage(
+        ("parsed",),
+        (
+            "waterway_types",
+            "filter_waterway_types",
+            "enable_geometry_simplification",
+            "simplification_tolerance_m",
+        ),
+    ),
+    "intersections": Stage(
+        ("simplified",), ("enable_intersection_detection", "snap_tolerance_m")
+    ),
+    # the snap domain is a pure function of the intersected ways
+    "clustering_domain": Stage(("intersections",), ()),
+    "clustering": Stage(("clustering_domain",), ("max_displacement_multiplier",)),
+    # edges and nodes are siblings that both mint ids, so both read hash_length
+    "edges": Stage(("intersections", "clustering"), ("min_fragment_length_m", "hash_length")),
+    "nodes": Stage(("clustering",), ("hash_length",)),
+    "nodes_tiled": Stage(("nodes",), ("tile_resolutions",)),
+    "edges_tiled": Stage(("edges",), ("tile_resolutions",)),
+    # the channel-density rollup aggregates the tiled edges
+    "tiles": Stage(("edges_tiled",), ()),
+}
+
+
+def stage_knobs(stage: str) -> frozenset[str]:
+    """The knobs ``stage``'s checkpoint keys on: its own and its ancestors'."""
+    parents, knobs = STAGES[stage]
+    return frozenset(knobs).union(*(stage_knobs(p) for p in parents))
 
 
 @dataclass(frozen=True)
@@ -58,112 +103,13 @@ class EngineConfig:
     min_width_parse_success_rate: float = 0.7  # fraction, 0..1
     max_crossing_edges_pct: float = 1.0  # % of edges, 0..100
 
-    # graft: checkpoint/resume (SURVEY.md §2.8, S9)
-    checkpoint_dir: Optional[str] = None
-    resume: bool = True
-
-    # ---- step-parameter subsets (reference :249-327): changing a late-stage
-    # knob must not invalidate early-stage checkpoints.
-    _STEP_PARAMS = {
-        # parse_osm rounds coordinates only; the waterway-type filter applies
-        # AFTER the checkpoint (ways_from_parsed), so changing the type list
-        # correctly does not invalidate the parsed cache.
-        "parsed": ("coordinate_precision",),
-        # ways_from_parsed filters by type before assembly, so the type knobs
-        # key simplified and every stage built from it
-        "simplified": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-        ),
-        "intersections": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-        ),
-        # the snap domain is a pure function of the intersected ways
-        "clustering_domain": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-        ),
-        "clustering": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-        ),
-        "edges": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "min_fragment_length_m",
-            "hash_length",
-        ),
-        "nodes": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "hash_length",
-        ),
-        "nodes_tiled": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "hash_length",
-            "tile_resolutions",
-        ),
-        "edges_tiled": (
-            "coordinate_precision",
-            "waterway_types",
-            "filter_waterway_types",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "min_fragment_length_m",
-            "hash_length",
-            "tile_resolutions",
-        ),
-    }
-    # the channel-density rollup aggregates the tiled edges, so it keys on
-    # everything they key on
-    _STEP_PARAMS["tiles"] = _STEP_PARAMS["edges_tiled"]
-
     def step_param_hash(self, step: str) -> str:
-        """16-hex param hash for a pipeline step (reference :245-334)."""
-        keys = self._STEP_PARAMS.get(step)
-        if keys is None:
+        """16-hex param hash for a pipeline step (reference :245-334): the
+        knobs of the step and of all its ancestors in ``STAGES``; a step the
+        table does not declare hashes every field."""
+        if step in STAGES:
+            keys = stage_knobs(step)
+        else:
             keys = tuple(sorted(f.name for f in dataclasses.fields(self)))
         payload = {k: getattr(self, k) for k in keys}
         blob = json.dumps(payload, sort_keys=True, default=list)

@@ -202,9 +202,11 @@ def snap_map(
       displacement must too (a compliant full cluster would have been fully
       seen), which is exactly the reference's hard-abort case.
 
-    No iterative label propagation, no pair collect to the driver — three
-    driver actions total (max|lat| agg, the small mapping checkpoint, the
-    violation probe). ``_snap_map_driver`` (union-find on collected pairs)
+    No iterative label propagation, no pair collect to the driver — five
+    driver actions total: the max|lat| agg (skipped when the caller passes
+    ``max_abs_lat``, as the pipeline does from parquet footers), the
+    hot-block prune's checkpoint and count, the small mapping checkpoint and
+    the violation probe. ``_snap_map_driver`` (union-find on collected pairs)
     and ``connected_components`` (min-label propagation) remain as
     independent cross-check implementations for the parity tests.
     """

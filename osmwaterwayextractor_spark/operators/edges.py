@@ -1,8 +1,8 @@
 """Steps 2/4/5 — junction detection, snap application, edge splitting, nodes.
 
-- ``endpoint_junction_points`` (A1/A2/A4, reference :2286-2316): endpoint and
-  all-vertex multiplicity via groupBy counts; the clustering domain is
-  distinct(endpoints ∪ junctions).
+- ``clustering_domain_fast`` (A1/A2/A4, reference :2286-2316): the
+  clustering domain distinct(endpoints ∪ junctions) from one groupBy of
+  per-vertex total and endpoint counts.
 - ``build_edges`` (J2 + W2 + F1/F3 + F7-F9 + P5, reference :2465-2599):
   vertices explode with position → left join the snap map (J2, identity for
   non-members) → a second join flags whether the MAPPED vertex is in the snap
@@ -46,54 +46,15 @@ EDGES_SCHEMA = (
 from .tiles import COVERING_H3_RES  # noqa: E402
 
 
-def endpoint_junction_points(ways: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """→ (endpoints_df, junctions_df), both (lat, lon) distinct.
-
-    endpoints: first/last vertex of every way (distinct).
-    junctions: endpoint-count > 1 ∪ (all-vertex-count > 1 minus the former).
-    """
-    eps = ways.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.element_at("lats", 1).alias("lat"), F.element_at("lons", 1).alias("lon")
-                ),
-                F.struct(
-                    F.element_at("lats", -1).alias("lat"), F.element_at("lons", -1).alias("lon")
-                ),
-            )
-        ).alias("p")
-    ).select("p.lat", "p.lon")
-    ep_counts = eps.groupBy("lat", "lon").count()
-    endpoint_junctions = ep_counts.where(F.col("count") > 1).select("lat", "lon")
-
-    all_v = ways.select(
-        F.explode(F.arrays_zip(F.col("lats").alias("lat"), F.col("lons").alias("lon"))).alias("p")
-    ).select("p.lat", "p.lon")
-    interior = (
-        all_v.groupBy("lat", "lon")
-        .count()
-        .where(F.col("count") > 1)
-        .select("lat", "lon")
-        .join(endpoint_junctions, ["lat", "lon"], "left_anti")
-    )
-    endpoints = ep_counts.select("lat", "lon")
-    junctions = endpoint_junctions.unionByName(interior)
-    return endpoints, junctions
-
-
-def clustering_domain(endpoints: DataFrame, junctions: DataFrame) -> DataFrame:
-    return endpoints.unionByName(junctions).distinct()
-
-
 def clustering_domain_fast(ways: DataFrame) -> DataFrame:
     """distinct(endpoints ∪ junctions) in ONE aggregation.
 
     Per vertex coordinate, count total occurrences and endpoint occurrences;
     the clustering domain is exactly {coords : ep_count ≥ 1 ∨ total > 1}
     (endpoints, endpoint-junctions ⊆ endpoints, and interior junctions).
-    Replaces two groupBys + anti-join + union-distinct with one shuffle —
-    set-identical to ``clustering_domain(endpoint_junction_points(ways))``.
+    One shuffle instead of two groupBys + anti-join + union-distinct;
+    tests/test_pipeline_parity.py checks it against the oracle's
+    ``endpoints_and_junctions``.
     """
     verts = (
         ways.select(

@@ -45,41 +45,6 @@ def qa_metrics(nodes: DataFrame, edges: DataFrame, config: EngineConfig) -> dict
     return d
 
 
-def displacement_metrics(snap: DataFrame, config: EngineConfig) -> dict:
-    """Cluster displacement stats (reference _update_cluster_metrics
-    :1345-1365): p50/p95/p99 of snap displacements, counts of moved points
-    and of points beyond the warning threshold."""
-    from pyspark.sql.functions import pandas_udf
-    import pandas as pd
-
-    from ..functions.geodesy import geodesic_m
-
-    @pandas_udf("double")
-    def _disp(lat: pd.Series, lon: pd.Series, slat: pd.Series, slon: pd.Series) -> pd.Series:
-        return pd.Series(
-            geodesic_m(
-                lat.to_numpy(dtype=float), lon.to_numpy(dtype=float),
-                slat.to_numpy(dtype=float), slon.to_numpy(dtype=float),
-            )
-        )
-
-    moved = snap.where(
-        (F.col("lat") != F.col("snap_lat")) | (F.col("lon") != F.col("snap_lon"))
-    ).withColumn("disp_m", _disp("lat", "lon", "snap_lat", "snap_lon"))
-    warn = config.snap_tolerance_m * config.warning_displacement_multiplier
-    agg = moved.agg(
-        F.count("*").alias("moved_points"),
-        F.expr("percentile(disp_m, 0.5)").alias("displacement_p50_m"),
-        F.expr("percentile(disp_m, 0.95)").alias("displacement_p95_m"),
-        F.expr("percentile(disp_m, 0.99)").alias("displacement_p99_m"),
-        F.max("disp_m").alias("displacement_max_m"),
-        F.sum(F.when(F.col("disp_m") > warn, 1).otherwise(0)).alias("points_above_warning"),
-    ).collect()[0]
-    d = agg.asDict()
-    d["total_snap_points"] = snap.count()
-    return d
-
-
 def distance_validation(edges: DataFrame, config: EngineConfig) -> dict:
     """Sampled length re-validation (reference config.yaml:145
     ``distance_validation_samples: 1000``; the reference declares the knob

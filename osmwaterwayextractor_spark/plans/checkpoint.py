@@ -4,8 +4,11 @@ Spark-native analog of the reference's step caches
 (osm_waterway_extractor.py:1441-1515, get_intermediate_cache_filename
 :3048-3055, param-subset hashes :239-334):
 
-- stage path = ``{root}/{stage}_{config.step_param_hash(stage)}`` — changing
-  a late-stage knob never invalidates earlier stages;
+- stage path = ``{root}/{stage}_{config.step_param_hash(stage)}`` — the hash
+  covers the knobs ``config.STAGES`` declares for the stage and its
+  ancestors (the one place a stage's knobs are declared; a new knob goes on
+  the one stage that reads it), so changing a late-stage knob never
+  invalidates earlier stages;
 - every materialization writes a ``lineage/part-*.json`` sidecar per task
   partition with (partition id, rows, seconds, rows/sec) — the north-rule's
   per-partition lineage + throughput metrics;

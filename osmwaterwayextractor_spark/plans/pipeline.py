@@ -6,27 +6,38 @@
   intersections (J5/F5/W1) → junctions (A1-A4) → snap map (J3/A7/A5) →
   edges (J2/W2/F1/F3/F7-F9/P5) → nodes (A6) → tiles (F14/A10)
 
-Each stage can checkpoint to parquet keyed by the stage's parameter-subset
-hash (reference cache semantics :1441-1515, :3048-3055) with per-partition
-lineage manifests; reruns skip completed stages (plans.checkpoint).
+The stages and their parents are ``config.STAGES``: each builder takes its
+parents' outputs. Each stage can checkpoint to parquet keyed by the stage's
+parameter-subset hash (reference cache semantics :1441-1515, :3048-3055)
+with per-partition lineage manifests; reruns skip completed stages
+(plans.checkpoint).
 """
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Optional
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import EngineConfig
+from ..config import STAGES, EngineConfig
 from ..operators.assemble import assemble_clean_simplify
 from ..operators.cluster import snap_map
 from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
 from ..operators.geometry_ops import detect_intersections, insert_intersections
 from ..operators.tiles import channel_density_rollup, with_edge_cells, with_node_cells
 from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
+
+# the final tables: nothing in the build reads them back, so without a
+# checkpointer they stay lazy (a barrier would serialize the tail for no
+# reuse gain); with one, the tiled pair lands partitioned by tile cell
+_TILED = ("nodes_tiled", "edges_tiled")
+_TAIL = (*_TILED, "tiles")
 
 
 def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
@@ -40,7 +51,6 @@ def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Opt
     if not path:
         return None
     import glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -93,39 +103,44 @@ class WaterwayEngine:
         self._scratch: Optional[str] = None
 
     def _stage(
-        self, name: str, build: Callable[[], DataFrame], partition_col: Optional[str] = None
-    ) -> DataFrame:
-        """Build and materialize one stage boundary under its label.
+        self, name: str, build: Callable[..., DataFrame], outs: dict[str, DataFrame]
+    ) -> None:
+        """Build and materialize one stage boundary under its label, and
+        record its output in ``outs``.
 
-        ``build`` takes no arguments and is called inside the label, so the
-        eager jobs a builder runs (snap_map's block-kernel checkpoint and
-        violation probe, the covered materialization) carry the stage's
-        name. A stage the checkpointer already holds is read back without
-        calling ``build``. ``partition_col`` lands the stage as a
-        tile-partitioned table (checkpointed builds only); its builder is a
-        cheap projection, always called, because a partial table resumes
+        ``build`` takes the outputs of the stage's parents in ``STAGES``, in
+        declared order, so a builder can read nothing the table does not
+        declare. It is called inside the label, so the eager jobs a builder
+        runs (snap_map's block-kernel checkpoint and violation probe, the
+        covered materialization) carry the stage's name. A stage the
+        checkpointer already holds is read back without calling ``build``.
+        The tail stages stay lazy without a checkpointer; with one, the tiled
+        pair lands partitioned by its coarsest tile cell and its builder, a
+        cheap projection, is always called, because a partial table resumes
         per cell."""
-        import os
         import time
 
+        parents = [outs[p] for p in STAGES[name].parents]
+        ck = self.checkpointer
+        if ck is None and name in _TAIL:
+            outs[name] = build(*parents)
+            return
         t0 = time.time()
         if os.environ.get("OSMWWE_STAGE_TIMING") and self._t_prev_stage_end is not None:
             print(f"[gap] before {name}: {t0 - self._t_prev_stage_end:.2f}s", flush=True)
         with _stage_label(name):
-            ck = self.checkpointer
             if ck is None:
-                out = self._ephemeral_stage(name, build())
-            elif partition_col is not None:
-                out = ck.materialize_partitioned(name, self.config, build(), partition_col)
+                out = self._ephemeral_stage(name, build(*parents))
+            elif name in _TILED:
+                cell = f"cell_r{min(self.config.tile_resolutions)}"
+                out = ck.materialize_partitioned(name, self.config, build(*parents), cell)
             else:
-                out = ck.materialize(name, self.config, build)
-                self._last_stage_path = os.path.join(ck._stage_dir(name, self.config), "data")
+                out = ck.materialize(name, self.config, lambda: build(*parents))
         if os.environ.get("OSMWWE_STAGE_TIMING"):
             print(f"[stage] {name}: {time.time() - t0:.2f}s", flush=True)
         self._t_prev_stage_end = time.time()
-        return out
+        outs[name] = out
 
-    _last_stage_path: Optional[str] = None  # parquet dir of the last _stage
     _t_prev_stage_end: Optional[float] = None  # OSMWWE_STAGE_TIMING gap attribution
 
     def _ephemeral_stage(self, name: str, df: DataFrame) -> DataFrame:
@@ -139,7 +154,6 @@ class WaterwayEngine:
         when spark.local.dir points there): columnar, serialized, OFF the
         GC's live set (docs/SCALE.md records why it replaced
         ``localCheckpoint``)."""
-        import os
         import uuid
 
         spark = df.sparkSession
@@ -168,7 +182,6 @@ class WaterwayEngine:
         df.write.mode("overwrite").option(
             "parquet.block.size", str(8 * 1024 * 1024)
         ).parquet(path)
-        self._last_stage_path = path
         return spark.read.parquet(path)
 
     def _covered_stage(self, simplified: DataFrame) -> DataFrame:
@@ -192,7 +205,6 @@ class WaterwayEngine:
         (round-6 event-log A/B at 100k docs: 2313 → 1403 task-s per pass,
         -39%; guide §1.2 — recompute cheap narrow lineage rather than
         persist a wide intermediate)."""
-        import os
         import time
 
         from ..operators.geometry_ops import _covered_for_join
@@ -205,8 +217,8 @@ class WaterwayEngine:
         return out
 
     def _stages_concurrent(
-        self, named: list[tuple[str, Callable[[], DataFrame]]], partition_col: Optional[str] = None
-    ) -> list[DataFrame]:
+        self, named: list[tuple[str, Callable[..., DataFrame]]], outs: dict[str, DataFrame]
+    ) -> None:
         """Materialize independent stages from concurrent driver threads so
         their Spark jobs overlap (the round-1 pipeline ran ~40 jobs strictly
         serially — the dominant anti-scaling cost). With a checkpointer too:
@@ -214,7 +226,7 @@ class WaterwayEngine:
         appends."""
         from concurrent.futures import ThreadPoolExecutor
 
-        def run(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        def run(name: str, build: Callable[..., DataFrame]) -> None:
             # local properties do not follow a Python thread, so the label
             # (set in _stage) and the pool are set here, in the worker. A
             # distinct FAIR pool per concurrent stage: under FIFO the second
@@ -224,13 +236,13 @@ class WaterwayEngine:
             sc = SparkContext.getOrCreate()
             sc.setLocalProperty("spark.scheduler.pool", f"stage-{name}")
             try:
-                return self._stage(name, build, partition_col)
+                self._stage(name, build, outs)
             finally:
                 sc.setLocalProperty("spark.scheduler.pool", None)
 
         with ThreadPoolExecutor(len(named)) as pool:
-            futs = [pool.submit(run, name, build) for name, build in named]
-            return [f.result() for f in futs]
+            for f in [pool.submit(run, name, build) for name, build in named]:
+                f.result()
 
     def build_graph(self, docs: DataFrame, spark: Optional[SparkSession] = None) -> GraphResult:
         spark = spark or docs.sparkSession
@@ -241,21 +253,24 @@ class WaterwayEngine:
             import time as _time
 
             self._t_prev_stage_end = _time.time()
+        # each stage's output by name; a builder takes its STAGES parents
+        outs: dict[str, DataFrame] = {}
 
         # ONE span scan parses nodes AND ways (union schema); it materializes
         # once and the assembly's three consumers (refs, tags, node coords)
         # read it back as cheap checkpoint-scan filters.
-        parsed = self._stage("parsed", lambda: parse_osm(docs, cfg))
+        self._stage("parsed", lambda: parse_osm(docs, cfg), outs)
         # assembly + clean + simplify as ONE Arrow pass: the assembled
         # vertex arrays never round-trip JVM↔Python between kernels
-        simplified = self._stage(
+        self._stage(
             "simplified",
-            lambda: assemble_clean_simplify(
+            lambda parsed: assemble_clean_simplify(
                 ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
             ),
+            outs,
         )
 
-        def intersect() -> DataFrame:
+        def intersect(simplified: DataFrame) -> DataFrame:
             # detect feeds insert lazily: insert's left join passes ways with
             # no candidate points through untouched, so the empty-point case
             # needs no isEmpty() driver probe. The covered-segment table is
@@ -268,57 +283,51 @@ class WaterwayEngine:
             points = detect_intersections(simplified, cfg, covered=covered)
             return insert_intersections(simplified, points, cfg, covered=covered)
 
-        intersected = (
-            self._stage("intersections", intersect)
-            if cfg.enable_intersection_detection
-            else simplified
-        )
+        if cfg.enable_intersection_detection:
+            self._stage("intersections", intersect, outs)
+        else:
+            outs["intersections"] = outs["simplified"]
 
         # the snap domain is consumed 3× inside snap_map (max-lat bound, the
         # block kernel, the final mapping join) — materialize it once instead
         # of recomputing the vertex groupBy per consumer
-        domain = self._stage("clustering_domain", lambda: clustering_domain_fast(intersected))
-        domain_path = self._last_stage_path
-        # max|lat| only bounds the block-grid level (any upper bound gives a
-        # coarser-or-equal, still-correct level) — read it from the domain
-        # parquet footers driver-side instead of running a Spark agg job
-        snap = self._stage(
-            "clustering",
-            lambda: snap_map(
-                domain, cfg, spark, max_abs_lat=_parquet_max_abs(domain_path, "lat")
-            ),
-        )
+        self._stage("clustering_domain", clustering_domain_fast, outs)
+
+        def cluster(domain: DataFrame) -> DataFrame:
+            # max|lat| only bounds the block-grid level (any upper bound
+            # gives a coarser-or-equal, still-correct level) — read it from
+            # the footers of the parquet the domain was read back from,
+            # driver-side, instead of running a Spark agg job
+            files = domain.inputFiles()
+            where = os.path.dirname(url2pathname(urlparse(files[0]).path)) if files else None
+            return snap_map(domain, cfg, spark, max_abs_lat=_parquet_max_abs(where, "lat"))
+
+        self._stage("clustering", cluster, outs)
 
         # edges and nodes are independent given (intersected, snap) — overlap
-        edges, nodes = self._stages_concurrent(
+        self._stages_concurrent(
             [
-                ("edges", lambda: build_edges(intersected, snap, cfg)),
-                ("nodes", lambda: build_nodes(snap, cfg)),
-            ]
-        )
-
-        if self.checkpointer is None:
-            nodes_t = with_node_cells(nodes, cfg)
-            # `covering` already comes from build_edges' fused NumPy kernel
-            edges_t = with_edge_cells(edges, cfg)
-            # rollup stays lazy: one map-combinable groupBy over the edges —
-            # a barrier here would serialize the tail for no reuse gain
-            return GraphResult(
-                nodes=nodes_t, edges=edges_t, tile_rollup=channel_density_rollup(edges_t, cfg)
-            )
-        # Iceberg-style final layout: nodes/edges land partitioned by their
-        # coarsest tile cell, resumable at the tile-partition level
-        # (north_rule; plans.checkpoint.materialize_partitioned skips
-        # already-written <cell>= directories on re-run)
-        nodes_t, edges_t = self._stages_concurrent(
-            [
-                ("nodes_tiled", lambda: with_node_cells(nodes, cfg)),
-                ("edges_tiled", lambda: with_edge_cells(edges, cfg)),
+                ("edges", lambda intersected, snap: build_edges(intersected, snap, cfg)),
+                ("nodes", lambda snap: build_nodes(snap, cfg)),
             ],
-            partition_col=f"cell_r{min(cfg.tile_resolutions)}",
+            outs,
         )
-        rollup = self._stage("tiles", lambda: channel_density_rollup(edges_t, cfg))
-        return GraphResult(nodes=nodes_t, edges=edges_t, tile_rollup=rollup)
+        # `covering` already comes from build_edges' fused NumPy kernel. With
+        # a checkpointer the tiled pair lands Iceberg-style, partitioned by
+        # its coarsest tile cell and resumable per cell (north_rule;
+        # plans.checkpoint.materialize_partitioned skips already-written
+        # <cell>= directories on re-run)
+        self._stages_concurrent(
+            [
+                ("nodes_tiled", lambda nodes: with_node_cells(nodes, cfg)),
+                ("edges_tiled", lambda edges: with_edge_cells(edges, cfg)),
+            ],
+            outs,
+        )
+        self._stage("tiles", lambda edges_t: channel_density_rollup(edges_t, cfg), outs)
+        return GraphResult(
+            nodes=outs["nodes_tiled"], edges=outs["edges_tiled"], tile_rollup=outs["tiles"]
+        )
 
 
 def spark_session(

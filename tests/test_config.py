@@ -5,7 +5,12 @@ import dataclasses
 
 import pytest
 
-from osmwaterwayextractor_spark.config import EngineConfig
+from osmwaterwayextractor_spark.config import (
+    DEFAULT_CONFIG,
+    NO_SIMPLIFY_CONFIG,
+    STAGES,
+    EngineConfig,
+)
 
 # the sections and keys of the reference's config.yaml that from_yaml reads
 REFERENCE_YAML = """\
@@ -98,11 +103,11 @@ def test_step_param_hash_scoping():
 
 @pytest.mark.parametrize(
     "field, value",
-    [("intersect_cell_cap", 64), ("resume", False), ("checkpoint_dir", "/elsewhere")],
+    [("intersect_cell_cap", 64)],
 )
 def test_clustering_domain_hash_ignores_output_invariant_knobs(field, value):
-    # the snap domain depends only on the intersected ways: a skew cap, the
-    # resume flag or the checkpoint root must not invalidate its checkpoint
+    # the snap domain depends only on the intersected ways: a skew cap must
+    # not invalidate its checkpoint
     base = EngineConfig()
     other = dataclasses.replace(base, **{field: value})
     assert base.step_param_hash("clustering_domain") == other.step_param_hash(
@@ -152,3 +157,86 @@ def test_tile_rollup_hash_follows_the_tiled_edges(field, value):
     other = dataclasses.replace(base, **{field: value})
     assert base.step_param_hash("edges_tiled") != other.step_param_hash("edges_tiled")
     assert base.step_param_hash("tiles") != other.step_param_hash("tiles")
+
+
+# recorded before the stage table replaced the hand-kept per-stage key lists:
+# equal hashes mean a checkpoint root written before still resumes every stage
+DEFAULT_HASHES = {
+    "parsed": "9449b72e90526bc1",
+    "simplified": "8ea4beb7602d4eca",
+    "intersections": "ad42a28026ea73c9",
+    "clustering_domain": "ad42a28026ea73c9",
+    "clustering": "da0a3169aa85d934",
+    "edges": "0c1a804dc8cbd13e",
+    "nodes": "e7251147c0ac2a88",
+    "nodes_tiled": "b86018a323d9ee85",
+    "edges_tiled": "c76828292e7ac67d",
+    "tiles": "c76828292e7ac67d",
+}
+NO_SIMPLIFY_HASHES = {
+    "parsed": "9449b72e90526bc1",
+    "simplified": "3dda5739daad3555",
+    "intersections": "19b809f3bbe2372d",
+    "clustering_domain": "19b809f3bbe2372d",
+    "clustering": "f6ec0f2d0fa3c1e4",
+    "edges": "c099baa45da23612",
+    "nodes": "24e2b7de0087457b",
+    "nodes_tiled": "37f2887bf602bf5b",
+    "edges_tiled": "5de865517e18fafd",
+    "tiles": "5de865517e18fafd",
+}
+
+
+@pytest.mark.parametrize(
+    "cfg, hashes",
+    [(DEFAULT_CONFIG, DEFAULT_HASHES), (NO_SIMPLIFY_CONFIG, NO_SIMPLIFY_HASHES)],
+    ids=["default", "no_simplify"],
+)
+def test_stage_hashes_are_stable(cfg, hashes):
+    assert {stage: cfg.step_param_hash(stage) for stage in STAGES} == hashes
+
+
+def _lineage(stage):
+    """``stage`` and every stage it is built from."""
+    return {stage}.union(*(_lineage(p) for p in STAGES[stage].parents))
+
+
+def _perturbed(value):
+    if isinstance(value, bool):
+        return not value
+    if isinstance(value, (int, float)):
+        return value + 1
+    return value[1:]  # the tuple knobs: drop the first type / resolution
+
+
+# knobs that change no stage's output: the QA checks, warnings and the skew cap
+OUTPUT_INVARIANT = {
+    "intersect_cell_cap",
+    "distance_validation_samples",
+    "max_unsnapped_near_miss_pct",
+    "min_width_parse_success_rate",
+    "max_crossing_edges_pct",
+    "warning_displacement_multiplier",
+    "max_cluster_size_warning",
+}
+
+
+@pytest.mark.parametrize("field", [f.name for f in dataclasses.fields(EngineConfig)])
+def test_a_knob_keys_exactly_the_stages_downstream_of_its_readers(field):
+    base = EngineConfig()
+    other = dataclasses.replace(base, **{field: _perturbed(getattr(base, field))})
+    changed = {s for s in STAGES if base.step_param_hash(s) != other.step_param_hash(s)}
+    readers = {s for s, st in STAGES.items() if field in st.knobs}
+    assert changed == {s for s in STAGES if _lineage(s) & readers}
+    if field in OUTPUT_INVARIANT:
+        assert not changed
+
+
+def test_stage_table_declares_each_knob_once_per_lineage():
+    fields = {f.name for f in dataclasses.fields(EngineConfig)}
+    for stage, (parents, knobs) in STAGES.items():
+        assert set(parents) <= set(STAGES), stage
+        assert set(knobs) <= fields, stage
+        # a knob an ancestor declares is already in this stage's hash
+        inherited = set().union(*(STAGES[a].knobs for a in _lineage(stage) - {stage}))
+        assert not set(knobs) & inherited, stage

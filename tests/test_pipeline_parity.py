@@ -13,13 +13,25 @@ import dataclasses
 import pytest
 
 from osmwaterwayextractor_spark.config import EngineConfig, NO_SIMPLIFY_CONFIG
+from osmwaterwayextractor_spark.operators.assemble import assemble_clean_simplify
+from osmwaterwayextractor_spark.operators.edges import clustering_domain_fast
+from osmwaterwayextractor_spark.operators.geometry_ops import (
+    detect_intersections,
+    insert_intersections,
+)
 from osmwaterwayextractor_spark.oracle import (
+    endpoints_and_junctions,
     fixture_4way_docs,
     run_oracle,
     tile_assignments,
 )
 from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
 from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, generate_doc
+from osmwaterwayextractor_spark.sources.parse import (
+    nodes_from_parsed,
+    parse_osm,
+    ways_from_parsed,
+)
 
 DOC_SCHEMA = (
     "doc_id string, "
@@ -124,3 +136,22 @@ def test_random_network_parity(spark, seed, n_docs):
     cfg = EngineConfig(filter_waterway_types=False)
     oracle, _ = _assert_parity(spark, docs, cfg)
     assert len(oracle.edges) > n_docs  # non-trivial network
+
+
+def test_clustering_domain_fast_matches_oracle_endpoints_and_junctions(spark):
+    # the one-shuffle snap domain over the engine's intersected ways is the
+    # reference's endpoints ∪ junctions over the same ways
+    params = DocsGenParams(seed=7, mega_every=25, mega_refs=400)
+    docs = _docs_df(spark, [generate_doc(i, params) for i in range(30)])
+    cfg = EngineConfig(filter_waterway_types=False)
+    parsed = parse_osm(docs, cfg).cache()
+    simplified = assemble_clean_simplify(
+        ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
+    ).cache()
+    ways = insert_intersections(simplified, detect_intersections(simplified, cfg), cfg).cache()
+    endpoints, junctions = endpoints_and_junctions(
+        [{"coordinates": list(zip(r["lats"], r["lons"]))} for r in ways.collect()]
+    )
+    assert junctions  # the corpus joins ways, so the union is not just endpoints
+    got = {(r["lat"], r["lon"]) for r in clustering_domain_fast(ways).collect()}
+    assert got == set(endpoints) | set(junctions)
