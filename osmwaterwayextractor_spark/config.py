@@ -55,11 +55,22 @@ STAGES: dict[str, Stage] = {
     "tiles": Stage(("edges_tiled",), ()),
 }
 
+# The stages a checkpointer lands partitioned by tile (plans.pipeline). Their
+# partition spec (operators.tiles.TILE_PARTITION_LEVEL) is part of the
+# table's identity, so it keys their checkpoints and their descendants' like
+# a knob: a root written under another layout recomputes them, never appends
+# to them.
+TILED_STAGES = ("nodes_tiled", "edges_tiled")
+
+
+def stage_and_ancestors(stage: str) -> frozenset[str]:
+    """``stage`` and every stage it is built from."""
+    return frozenset({stage}).union(*(stage_and_ancestors(p) for p in STAGES[stage].parents))
+
 
 def stage_knobs(stage: str) -> frozenset[str]:
     """The knobs ``stage``'s checkpoint keys on: its own and its ancestors'."""
-    parents, knobs = STAGES[stage]
-    return frozenset(knobs).union(*(stage_knobs(p) for p in parents))
+    return frozenset().union(*(STAGES[s].knobs for s in stage_and_ancestors(stage)))
 
 
 @dataclass(frozen=True)
@@ -76,8 +87,6 @@ class EngineConfig:
 
     # clustering (config.yaml:50-72)
     max_displacement_multiplier: float = 3.0
-    warning_displacement_multiplier: float = 2.0
-    max_cluster_size_warning: int = 10
 
     # ids (config.yaml:74-103)
     hash_length: int = 8
@@ -105,13 +114,18 @@ class EngineConfig:
 
     def step_param_hash(self, step: str) -> str:
         """16-hex param hash for a pipeline step (reference :245-334): the
-        knobs of the step and of all its ancestors in ``STAGES``; a step the
+        knobs of the step and of all its ancestors in ``STAGES``, plus the
+        tile partition spec for a step built from a tiled stage; a step the
         table does not declare hashes every field."""
         if step in STAGES:
             keys = stage_knobs(step)
         else:
             keys = tuple(sorted(f.name for f in dataclasses.fields(self)))
         payload = {k: getattr(self, k) for k in keys}
+        if step in STAGES and stage_and_ancestors(step) & set(TILED_STAGES):
+            from .operators.tiles import TILE_PART, TILE_PARTITION_LEVEL
+
+            payload["tiled_layout"] = f"{TILE_PART}@level{TILE_PARTITION_LEVEL}"
         blob = json.dumps(payload, sort_keys=True, default=list)
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
@@ -137,13 +151,10 @@ class EngineConfig:
                 kw[k] = proc[k]
         if "waterway_types" in proc:
             kw["waterway_types"] = tuple(proc["waterway_types"])
-        for k in (
-            "max_displacement_multiplier",
-            "warning_displacement_multiplier",
-            "max_cluster_size_warning",
-        ):
-            if k in clus:
-                kw[k] = clus[k]
+        # the reference's warning thresholds (warning_displacement_multiplier,
+        # max_cluster_size_warning) steer no output here: accepted, ignored
+        if "max_displacement_multiplier" in clus:
+            kw["max_displacement_multiplier"] = clus["max_displacement_multiplier"]
         if "hash_length" in ids:
             kw["hash_length"] = ids["hash_length"]
         qa = raw.get("qa", {})
@@ -167,5 +178,4 @@ NO_SIMPLIFY_CONFIG = EngineConfig(
     snap_tolerance_m=5.0,
     enable_geometry_simplification=False,
     max_displacement_multiplier=1.5,
-    warning_displacement_multiplier=1.2,
 )

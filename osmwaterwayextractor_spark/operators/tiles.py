@@ -22,6 +22,15 @@ from ..functions.tiling import H3_RES_TO_LEVEL, LEVEL_SHIFT, X_SHIFT, XY_MASK, c
 # kernel against, so both must read this constant.
 COVERING_H3_RES = 8
 
+# The partition spec of the tiled checkpoint tables (plans.pipeline): Hive
+# directories keyed by the level-2 ancestor of the coarsest tile cell. Level 2
+# has at most 2^(2*2+1) = 32 world cells, Spark's parallel partition discovery
+# threshold, so a read-back is listed on the driver at any input size. Rows
+# are sorted by the coarsest cell within each file, so a cell filter prunes
+# through row-group statistics rather than directories.
+TILE_PARTITION_LEVEL = 2
+TILE_PART = "tile_part"
+
 
 def cell_col(lat, lon, level: int):
     """Catalyst cell-id expression (same bit layout as functions.tiling)."""
@@ -44,6 +53,13 @@ def parent_cell_col(cell, child_level: int, parent_level: int):
         + F.shiftleft(F.shiftrightunsigned(x, d), int(X_SHIFT))
         + F.shiftrightunsigned(y, d)
     )
+
+
+def tile_part_col(config: EngineConfig):
+    """The ``TILE_PART`` value of a row that carries its tile cells."""
+    res = min(config.tile_resolutions)
+    cell = F.col(f"cell_r{res}")
+    return parent_cell_col(cell, H3_RES_TO_LEVEL[res], TILE_PARTITION_LEVEL)
 
 
 def with_node_cells(nodes: DataFrame, config: EngineConfig) -> DataFrame:

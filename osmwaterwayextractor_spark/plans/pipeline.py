@@ -25,19 +25,28 @@ from urllib.request import url2pathname
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import STAGES, EngineConfig
+from ..config import STAGES, TILED_STAGES, EngineConfig
 from ..operators.assemble import assemble_clean_simplify
 from ..operators.cluster import snap_map
 from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
 from ..operators.geometry_ops import detect_intersections, insert_intersections
-from ..operators.tiles import channel_density_rollup, with_edge_cells, with_node_cells
+from ..operators.tiles import (
+    TILE_PART,
+    channel_density_rollup,
+    tile_part_col,
+    with_edge_cells,
+    with_node_cells,
+)
 from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
 
 # the final tables: nothing in the build reads them back, so without a
 # checkpointer they stay lazy (a barrier would serialize the tail for no
-# reuse gain); with one, the tiled pair lands partitioned by tile cell
-_TILED = ("nodes_tiled", "edges_tiled")
-_TAIL = (*_TILED, "tiles")
+# reuse gain); with one, the tiled pair lands partitioned by tile
+_TAIL = (*TILED_STAGES, "tiles")
+
+# what SparkContext.setJobGroup sets: a stage run on a worker thread joins
+# the caller's group
+_GROUP_PROPERTIES = ("spark.jobGroup.id", "spark.job.interruptOnCancel")
 
 
 def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
@@ -115,9 +124,11 @@ class WaterwayEngine:
         covered materialization) carry the stage's name. A stage the
         checkpointer already holds is read back without calling ``build``.
         The tail stages stay lazy without a checkpointer; with one, the tiled
-        pair lands partitioned by its coarsest tile cell and its builder, a
-        cheap projection, is always called, because a partial table resumes
-        per cell."""
+        pair lands partitioned by ``TILE_PART`` (a coarse ancestor of its
+        coarsest cell), sorted by that cell, and its builder, a cheap
+        projection, is always called, because a partial table resumes per
+        partition. The partition column is dropped from the read-back, so a
+        checkpointed build returns the columns of a lazy one."""
         import time
 
         parents = [outs[p] for p in STAGES[name].parents]
@@ -131,9 +142,12 @@ class WaterwayEngine:
         with _stage_label(name):
             if ck is None:
                 out = self._ephemeral_stage(name, build(*parents))
-            elif name in _TILED:
+            elif name in TILED_STAGES:
+                df = build(*parents).withColumn(TILE_PART, tile_part_col(self.config))
                 cell = f"cell_r{min(self.config.tile_resolutions)}"
-                out = ck.materialize_partitioned(name, self.config, build(*parents), cell)
+                out = ck.materialize_partitioned(
+                    name, self.config, df, TILE_PART, sort_col=cell
+                ).drop(TILE_PART)
             else:
                 out = ck.materialize(name, self.config, lambda: build(*parents))
         if os.environ.get("OSMWWE_STAGE_TIMING"):
@@ -226,19 +240,26 @@ class WaterwayEngine:
         appends."""
         from concurrent.futures import ThreadPoolExecutor
 
+        sc = SparkContext.getOrCreate()
+        # the caller's job group, so cancelling it cancels these stages too
+        group = {k: sc.getLocalProperty(k) for k in _GROUP_PROPERTIES}
+
         def run(name: str, build: Callable[..., DataFrame]) -> None:
-            # local properties do not follow a Python thread, so the label
-            # (set in _stage) and the pool are set here, in the worker. A
-            # distinct FAIR pool per concurrent stage: under FIFO the second
-            # job's tasks only backfill the first job's idle slots; FAIR
-            # interleaves them so neither stage's small tail serializes the
-            # other (spark.scheduler.mode=FAIR set in spark_session)
-            sc = SparkContext.getOrCreate()
-            sc.setLocalProperty("spark.scheduler.pool", f"stage-{name}")
+            # local properties do not follow a Python thread, so the group,
+            # the label (set in _stage) and the pool are set here, in the
+            # worker. A distinct FAIR pool per concurrent stage: under FIFO
+            # the second job's tasks only backfill the first job's idle
+            # slots; FAIR interleaves them so neither stage's small tail
+            # serializes the other (spark.scheduler.mode=FAIR set in
+            # spark_session)
+            props = {**group, "spark.scheduler.pool": f"stage-{name}"}
+            for k, v in props.items():
+                sc.setLocalProperty(k, v)
             try:
                 self._stage(name, build, outs)
             finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
+                for k in props:
+                    sc.setLocalProperty(k, None)
 
         with ThreadPoolExecutor(len(named)) as pool:
             for f in [pool.submit(run, name, build) for name, build in named]:
@@ -313,10 +334,10 @@ class WaterwayEngine:
             outs,
         )
         # `covering` already comes from build_edges' fused NumPy kernel. With
-        # a checkpointer the tiled pair lands Iceberg-style, partitioned by
-        # its coarsest tile cell and resumable per cell (north_rule;
+        # a checkpointer the tiled pair lands Iceberg-style, partitioned by a
+        # coarse ancestor cell and resumable per partition (north_rule;
         # plans.checkpoint.materialize_partitioned skips already-written
-        # <cell>= directories on re-run)
+        # tile_part= directories on re-run)
         self._stages_concurrent(
             [
                 ("nodes_tiled", lambda nodes: with_node_cells(nodes, cfg)),

@@ -67,8 +67,10 @@ def test_from_reference_yaml(tmp_path):
     assert cfg.enable_geometry_simplification is True
     assert cfg.simplification_tolerance_m == 5.0
     assert cfg.max_displacement_multiplier == 3.0
-    assert cfg.warning_displacement_multiplier == 2.0
     assert cfg.hash_length == 8
+    # the reference's warning thresholds steer no output: the keys load and
+    # are ignored
+    assert cfg == EngineConfig()
 
 
 def test_from_no_simplify_yaml(tmp_path):
@@ -76,6 +78,7 @@ def test_from_no_simplify_yaml(tmp_path):
     assert cfg.enable_geometry_simplification is False
     assert cfg.snap_tolerance_m == 5.0
     assert cfg.max_displacement_multiplier == 1.5
+    assert cfg == NO_SIMPLIFY_CONFIG
 
 
 def test_step_param_hash_scoping():
@@ -169,9 +172,9 @@ DEFAULT_HASHES = {
     "clustering": "da0a3169aa85d934",
     "edges": "0c1a804dc8cbd13e",
     "nodes": "e7251147c0ac2a88",
-    "nodes_tiled": "b86018a323d9ee85",
-    "edges_tiled": "c76828292e7ac67d",
-    "tiles": "c76828292e7ac67d",
+    "nodes_tiled": "8ee4be59aa568d37",
+    "edges_tiled": "07482be590dea23c",
+    "tiles": "07482be590dea23c",
 }
 NO_SIMPLIFY_HASHES = {
     "parsed": "9449b72e90526bc1",
@@ -181,9 +184,9 @@ NO_SIMPLIFY_HASHES = {
     "clustering": "f6ec0f2d0fa3c1e4",
     "edges": "c099baa45da23612",
     "nodes": "24e2b7de0087457b",
-    "nodes_tiled": "37f2887bf602bf5b",
-    "edges_tiled": "5de865517e18fafd",
-    "tiles": "5de865517e18fafd",
+    "nodes_tiled": "4ce56d5e166c7b50",
+    "edges_tiled": "5c5706c3aa1fccb9",
+    "tiles": "5c5706c3aa1fccb9",
 }
 
 
@@ -209,15 +212,13 @@ def _perturbed(value):
     return value[1:]  # the tuple knobs: drop the first type / resolution
 
 
-# knobs that change no stage's output: the QA checks, warnings and the skew cap
+# knobs that change no stage's output: the QA checks and the skew cap
 OUTPUT_INVARIANT = {
     "intersect_cell_cap",
     "distance_validation_samples",
     "max_unsnapped_near_miss_pct",
     "min_width_parse_success_rate",
     "max_crossing_edges_pct",
-    "warning_displacement_multiplier",
-    "max_cluster_size_warning",
 }
 
 

@@ -62,6 +62,7 @@ def test_dense_cell_resplit_preserves_points_and_bounds_fanout(spark):
 
 
 def test_tiled_output_partition_resume(spark, tmp_path):
+    from osmwaterwayextractor_spark.operators.tiles import TILE_PART
     from osmwaterwayextractor_spark.plans.checkpoint import Checkpointer
     from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
     from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe
@@ -73,17 +74,17 @@ def test_tiled_output_partition_resume(spark, tmp_path):
     ck = Checkpointer(spark, root)
     g = WaterwayEngine(cfg, checkpointer=ck).build_graph(docs, spark)
     want_edges = sorted(r["id"] for r in g.edges.collect())
-    pcol = f"cell_r{min(cfg.tile_resolutions)}"
-    assert pcol in g.edges.columns
+    assert f"cell_r{min(cfg.tile_resolutions)}" in g.edges.columns
+    assert TILE_PART not in g.edges.columns
 
     # simulate a partial failure of the final tiled write: drop the done flag
-    # and two cell partitions — the re-run must recompute ONLY those
+    # and two tile partitions — the re-run must recompute ONLY those
     sdir = os.path.join(root, f"edges_tiled_{cfg.step_param_hash('edges_tiled')}")
     os.remove(os.path.join(sdir, "_STAGE_DONE"))
-    parts = [d for d in os.listdir(os.path.join(sdir, "data")) if d.startswith(f"{pcol}=")]
+    parts = [d for d in os.listdir(os.path.join(sdir, "data")) if d.startswith(f"{TILE_PART}=")]
     assert len(parts) >= 3
     # Iceberg-style layout pointer (README "Iceberg deviation"):
-    # cell_r7=<val>/part-*.parquet
+    # tile_part=<val>/part-*.parquet
     assert any(
         n.startswith("part-") and n.endswith(".parquet")
         for n in os.listdir(os.path.join(sdir, "data", parts[0]))
