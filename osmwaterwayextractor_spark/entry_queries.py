@@ -25,9 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .config import EngineConfig
+from .functions import cells_sql
 from .functions.width import width_columns, width_sql
 from .operators import dedup, similarity, textstats
-from .operators.tiles import cell_col, parent_cell_col
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -328,8 +328,8 @@ def q_cell_assign(spark, sf_dir):
     )
     return cust.select(
         "c_custkey",
-        cell_col(F.col("lat"), F.col("lon"), 13).alias("cell13"),
-        cell_col(F.col("lat"), F.col("lon"), 11).alias("cell11"),
+        cells_sql.cell("lat", "lon", 13, "clamp").alias("cell13"),
+        cells_sql.cell("lat", "lon", 11, "clamp").alias("cell11"),
     )
 
 
@@ -357,7 +357,7 @@ def q_tile_rollup(spark, sf_dir):
         "level", F.lit(13)
     )
     parent = (
-        base.select(parent_cell_col(F.col("cell"), 13, 11).alias("cell"), "n")
+        base.select(cells_sql.parent("cell", 13, 11).alias("cell"), "n")
         .groupBy("cell")
         .agg(F.sum("n").alias("n"))
         .withColumn("level", F.lit(11))
@@ -417,16 +417,12 @@ def q_epsilon_pairs(spark, sf_dir, eps_m: float = 1000.0):
         F.col("lat").alias("lat_a"),
         F.col("lon").alias("lon_a"),
     )
-    from .operators.cluster import _ring_cells_expr, _cell_expr
-
-    left = a.withColumn(
-        "cell", F.explode(_ring_cells_expr("lat_a", "lon_a", level))
-    )
+    left = a.withColumn("cell", F.explode(cells_sql.ring("lat_a", "lon_a", level, "wrap")))
     b = pts.select(
         F.col("c_custkey").alias("key_b"),
         F.col("lat").alias("lat_b"),
         F.col("lon").alias("lon_b"),
-    ).withColumn("cell", _cell_expr("lat_b", "lon_b", level))
+    ).withColumn("cell", cells_sql.cell("lat_b", "lon_b", level, "wrap"))
     cand = left.join(b, "cell").where(F.col("key_a") < F.col("key_b")).drop("cell").distinct()
     dist = F.expr(DIST_SQL)
     return cand.withColumn("dist_m", F.round(dist, 3)).where(dist <= eps_m).select(
@@ -446,10 +442,8 @@ WHERE {DIST_SQL} <= 1000.0
 
 def q_edge_covering(spark, sf_dir, level: int = 15):
     """F14/S2-covering analog: cells overlapped by each customer→supplier
-    segment's bbox (operators.tiles.edge_covering_col, pure Catalyst),
+    segment's bbox (functions.cells_sql.polyline_cover, pure Catalyst),
     exploded to one (key, cell) row for robust cross-engine hashing."""
-    from .operators.tiles import edge_covering_col
-
     lat_b_sql = LAT_SQL.replace("c_custkey", "(c_custkey + 13)")
     lon_b_sql = LON_SQL.replace("c_custkey", "(c_custkey + 13)")
     seg = (
@@ -464,7 +458,7 @@ def q_edge_covering(spark, sf_dir, level: int = 15):
         )
     )
     return seg.select(
-        "c_custkey", F.explode(edge_covering_col("lats", "lons", level)).alias("cell")
+        "c_custkey", F.explode(cells_sql.polyline_cover("lats", "lons", level)).alias("cell")
     )
 
 
@@ -511,7 +505,6 @@ def q_knn_top1(spark, sf_dir):
     bbox — still an equi-join, never a crossJoin; the residual subtree sees
     zero rows at runtime."""
     from .functions.tiling import cell_width_deg, join_grid_level
-    from .operators.cluster import _cell_expr, _ring_cells_expr
 
     pts = _derived_points(spark, sf_dir, spread=True)
     q = pts.where(F.col("c_custkey") % 30 == 0).select(
@@ -522,8 +515,8 @@ def q_knn_top1(spark, sf_dir):
     )
 
     def _ring_top1(queries, level):
-        left = queries.withColumn("cell", F.explode(_ring_cells_expr("lat_a", "lon_a", level)))
-        right = c.withColumn("cell", _cell_expr("lat_b", "lon_b", level))
+        left = queries.withColumn("cell", F.explode(cells_sql.ring("lat_a", "lon_a", level, "wrap")))
+        right = c.withColumn("cell", cells_sql.cell("lat_b", "lon_b", level, "wrap"))
         # No candidate distinct: the right side carries exactly ONE home cell
         # per point and the left ring array is array_distinct, so a (q, n)
         # pair meets in at most one cell — and rank-1 row_number output is

@@ -21,6 +21,38 @@ The ε-join grid for distance joins (J3-J5, J7) is the same quadtree at the
 deepest level whose cell edge (in meters, at the data's max |lat| for
 longitude) still covers the search radius, so "within ε" pairs always share
 a cell or ring-1 neighbors.
+
+Edge rules
+----------
+A grid index ``floor((lon + 180) / w)``, ``floor((lat + 90) / w)`` leaves the
+grid at lon = 180, lat = 90 and out-of-range coordinates. Three rules
+normalise it, each written once here and once in ``functions.cells_sql``
+(its ``edge`` argument); every call site names its rule:
+
+=====  ===========  =====  ================================================
+rule   lon (x)      lat    call sites, and why
+=====  ===========  =====  ================================================
+clamp  clamp        clamp  Output tiles: ``cell_r*``, ``tile_part``, the
+                           streaming rollup, queries ``cell_assign`` and
+                           ``tile_rollup``; ``cell_id``. A tile is a world
+                           cell: lon = 180 is the last column, not the first.
+wrap   mod 2^(L+1)  clamp  Join grids: snap blocks and their prune, ε-pairs,
+                           ``distance_join``, basin and kNN joins, queries
+                           ``epsilon_pairs`` and ``knn_top1``; ``wrap_cell_id``,
+                           ``k_ring``, ``polygon_covering``. Neighbours across
+                           the antimeridian share a ring, and a point's home
+                           is in its own ring (or no snap block owns it).
+raw    none         none   Padded-bbox covers and the point rings probing
+                           them: covered and insert stages, dense-cell
+                           resplit, ``with_edge_covering``, query
+                           ``edge_covering``; ``polyline_coverings`` (the
+                           ``covering`` output). Cover and probe only have
+                           to agree with each other.
+=====  ===========  =====  ================================================
+
+A point's ring offsets its unnormalised index, a cell's ring (``k_ring``) the
+clamped one: at lat = +90, level 5, that is 3 cells against 6, so both forms
+stay. Spark packs with ``+``, NumPy with ``|``: equal on indices ≥ 0.
 """
 
 from __future__ import annotations
@@ -42,18 +74,37 @@ def cell_width_deg(level: int) -> float:
     return 180.0 / float(1 << level)
 
 
-def cell_id(lats: np.ndarray, lons: np.ndarray, level: int) -> np.ndarray:
-    """Vectorized (lat, lon) → int64 cell id at a quad level."""
+def pack(level, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """The one NumPy id pack, ``level<<52 | x<<26 | y`` (``level`` may be
+    an array)."""
+    return (np.asarray(level, dtype=np.int64) << LEVEL_SHIFT) | (x << X_SHIFT) | y
+
+
+def _grid_xy(lats, lons, level: int) -> tuple[np.ndarray, np.ndarray]:
+    """Unnormalised (column, row) grid indices of points at a quad level."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level {level} out of range")
     w = cell_width_deg(level)
-    lats = np.asarray(lats, dtype=np.float64)
-    lons = np.asarray(lons, dtype=np.float64)
-    nx = np.int64(2 << level)
-    ny = np.int64(1 << level)
-    x = np.clip(np.floor((lons + 180.0) / w).astype(np.int64), 0, nx - 1)
-    y = np.clip(np.floor((lats + 90.0) / w).astype(np.int64), 0, ny - 1)
-    return (np.int64(level) << LEVEL_SHIFT) | (x << X_SHIFT) | y
+    x = np.floor((np.asarray(lons, dtype=np.float64) + 180.0) / w).astype(np.int64)
+    y = np.floor((np.asarray(lats, dtype=np.float64) + 90.0) / w).astype(np.int64)
+    return x, y
+
+
+def cell_id(lats: np.ndarray, lons: np.ndarray, level: int) -> np.ndarray:
+    """Vectorized (lat, lon) → int64 cell id at a quad level (edge rule
+    ``clamp``: both axes clamp into the grid)."""
+    x, y = _grid_xy(lats, lons, level)
+    return pack(level, np.clip(x, 0, (2 << level) - 1), np.clip(y, 0, (1 << level) - 1))
+
+
+def wrap_cell_id(lats: np.ndarray, lons: np.ndarray, level: int) -> np.ndarray:
+    """Join-grid cell id (edge rule ``wrap``: lon wraps, lat clamps), the
+    twin of ``cells_sql.cell(..., "wrap")`` (NumPy's ``%`` is Spark's ``pmod``)."""
+    return _wrap(level, *_grid_xy(lats, lons, level))
+
+
+def _wrap(level: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    return pack(level, x % (2 << level), np.clip(y, 0, (1 << level) - 1))
 
 
 def cell_id_h3res(lats: np.ndarray, lons: np.ndarray, h3_res: int) -> np.ndarray:
@@ -77,7 +128,7 @@ def parent_cell(cells: np.ndarray, parent_level: int) -> np.ndarray:
     if np.any(d < 0):
         raise ValueError("parent_level must be coarser (smaller) than cell level")
     x, y = cell_xy(c)
-    return (np.int64(parent_level) << LEVEL_SHIFT) | ((x >> d) << X_SHIFT) | (y >> d)
+    return pack(parent_level, x >> d, y >> d)
 
 
 def cell_center(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -105,7 +156,7 @@ def k_ring(cells: np.ndarray, k: int = 1) -> np.ndarray:
     valid = (Y >= 0) & (Y < ny[:, None])
     X = np.where(valid, X, x[:, None])
     Y = np.where(valid, Y, y[:, None])
-    return (lvl[:, None] << LEVEL_SHIFT) | (X << X_SHIFT) | Y
+    return pack(lvl[:, None], X, Y)
 
 
 def join_grid_level(radius_m: float, max_abs_lat_deg: float) -> int:
@@ -122,7 +173,7 @@ def polyline_coverings(
     lat_arrays: list, lon_arrays: list, level: int
 ) -> list[np.ndarray]:
     """Per-polyline sorted distinct covering cells (bit-identical to the
-    Catalyst ``edge_covering_col`` expression: every level-``level`` cell
+    Catalyst ``cells_sql.polyline_cover`` expression: every level-``level`` cell
     each segment's bbox overlaps, no wrap/clip, array_sort(array_distinct)).
 
     Fully vectorized across ALL segments of the batch — one offsets trick
@@ -135,7 +186,6 @@ def polyline_coverings(
     n_lines = len(lat_arrays)
     if n_lines == 0:
         return []
-    w = cell_width_deg(level)
     nv = np.fromiter((len(a) for a in lat_arrays), dtype=np.int64, count=n_lines)
     flat_la = np.concatenate([np.asarray(a, dtype=np.float64) for a in lat_arrays])
     flat_lo = np.concatenate([np.asarray(a, dtype=np.float64) for a in lon_arrays])
@@ -146,10 +196,8 @@ def polyline_coverings(
     i2 = i1 + 1
     line_of_seg = np.repeat(np.arange(n_lines), np.maximum(nv - 1, 0))
 
-    x0 = np.floor((np.minimum(flat_lo[i1], flat_lo[i2]) + 180.0) / w).astype(np.int64)
-    x1 = np.floor((np.maximum(flat_lo[i1], flat_lo[i2]) + 180.0) / w).astype(np.int64)
-    y0 = np.floor((np.minimum(flat_la[i1], flat_la[i2]) + 90.0) / w).astype(np.int64)
-    y1 = np.floor((np.maximum(flat_la[i1], flat_la[i2]) + 90.0) / w).astype(np.int64)
+    x0, y0 = _grid_xy(np.minimum(flat_la[i1], flat_la[i2]), np.minimum(flat_lo[i1], flat_lo[i2]), level)
+    x1, y1 = _grid_xy(np.maximum(flat_la[i1], flat_la[i2]), np.maximum(flat_lo[i1], flat_lo[i2]), level)
     ys = y1 - y0 + 1
     nc = (x1 - x0 + 1) * ys
     tot = int(nc.sum())
@@ -159,7 +207,7 @@ def polyline_coverings(
     off = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(nc) - nc, nc)
     cx = x0[seg_idx] + off // ys[seg_idx]
     cy = y0[seg_idx] + off % ys[seg_idx]
-    cell = (np.int64(level) << LEVEL_SHIFT) | (cx << X_SHIFT) | cy
+    cell = pack(level, cx, cy)
     line = line_of_seg[seg_idx]
 
     order = np.lexsort((cell, line))
@@ -228,13 +276,10 @@ def polygon_covering(ring_lats: np.ndarray, ring_lons: np.ndarray, level: int) -
     ):
         ring_lats, ring_lons = ring_lats[:-1], ring_lons[:-1]
     w = cell_width_deg(level)
-    y0 = int(np.floor((ring_lats.min() + 90.0) / w))
-    y1 = int(np.floor((ring_lats.max() + 90.0) / w))
-    x0 = int(np.floor((ring_lons.min() + 180.0) / w))
-    x1 = int(np.floor((ring_lons.max() + 180.0) / w))
-    xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    X, Y = np.meshgrid(xs, ys)
+    (x0, x1), (y0, y1) = _grid_xy(
+        [ring_lats.min(), ring_lats.max()], [ring_lons.min(), ring_lons.max()], level
+    )
+    X, Y = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
     X, Y = X.ravel(), Y.ravel()
 
     bx0 = X.astype(np.float64) * w - 180.0
@@ -252,9 +297,4 @@ def polygon_covering(ring_lats: np.ndarray, ring_lons: np.ndarray, level: int) -
         w,
     )
     keep = center_in | boundary_hit
-    X, Y = X[keep], Y[keep]
-    nx = np.int64(2 << level)
-    ny = np.int64(1 << level)
-    X = ((X % nx) + nx) % nx
-    Y = np.clip(Y, 0, ny - 1)
-    return np.unique((np.int64(level) << LEVEL_SHIFT) | (X << X_SHIFT) | Y)
+    return np.unique(_wrap(level, X[keep], Y[keep]))

@@ -32,73 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..config import EngineConfig
+from ..functions import cells_sql
 from ..functions.clustering import centroid_of_members
 from ..functions.geodesy import geodesic_m
-from ..functions.tiling import LEVEL_SHIFT, X_SHIFT, cell_width_deg, join_grid_level
-
-
-def _cell_expr(lat_col: str, lon_col: str, level: int):
-    """Join-grid cell id with the SAME lon-wrap / lat-clip normalization as
-    ``_ring_cells_expr`` — a point exactly at lon=±180 or lat=±90 must land
-    in a cell that is a member of its own ring-1 block set, otherwise its
-    cluster is owned by no block and silently never emitted."""
-    w = cell_width_deg(level)
-    nx = 2 << level
-    ny = 1 << level
-    x = F.floor((F.col(lon_col) + 180.0) / w).cast("long")
-    y = F.floor((F.col(lat_col) + 90.0) / w).cast("long")
-    xx = ((x % nx) + nx) % nx
-    yy = F.greatest(F.lit(0).cast("long"), F.least(F.lit(ny - 1).cast("long"), y))
-    return (
-        F.lit(level).cast("long") * F.lit(1 << 52).cast("long")
-        + F.shiftleft(xx, int(X_SHIFT))
-        + yy
-    )
-
-
-def _ring_cells_expr(lat_col: str, lon_col: str, level: int):
-    """3×3 neighborhood cell ids as an array column (lon wrap, lat clip)."""
-    w = cell_width_deg(level)
-    nx = 2 << level
-    ny = 1 << level
-    x = F.floor((F.col(lon_col) + 180.0) / w).cast("long")
-    y = F.floor((F.col(lat_col) + 90.0) / w).cast("long")
-    cells = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            xx = (x + dx + nx) % nx
-            yy = F.greatest(F.lit(0).cast("long"), F.least(F.lit(ny - 1).cast("long"), y + dy))
-            cells.append(
-                F.lit(level).cast("long") * F.lit(1 << 52).cast("long")
-                + F.shiftleft(xx, int(X_SHIFT))
-                + yy
-            )
-    return F.array_distinct(F.array(*cells))
-
-
-def _ring_cells_of_cell_expr(cell_col: str, level: int):
-    """3×3 neighborhood of a NORMALIZED cell id (decode → offset with lon
-    wrap / lat clamp → re-encode). Equivalent to ``_ring_cells_expr`` on any
-    point inside the cell: both reduce to cell adjacency in normalized
-    (wrapped/clamped) grid space."""
-    nx = 2 << level
-    ny = 1 << level
-    pay = F.col(cell_col) - F.lit(level).cast("long") * F.lit(1 << 52).cast("long")
-    x = F.shiftright(pay, int(X_SHIFT))
-    y = pay - F.shiftleft(F.shiftright(pay, int(X_SHIFT)), int(X_SHIFT))
-    cells = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            xx = (x + dx + nx) % nx
-            yy = F.greatest(
-                F.lit(0).cast("long"), F.least(F.lit(ny - 1).cast("long"), y + dy)
-            )
-            cells.append(
-                F.lit(level).cast("long") * F.lit(1 << 52).cast("long")
-                + F.shiftleft(xx, int(X_SHIFT))
-                + yy
-            )
-    return F.array_distinct(F.array(*cells))
+from ..functions.tiling import join_grid_level, wrap_cell_id
 
 
 # hot-block broadcast guard: the set of blocks with >=2 points in their 3x3
@@ -131,12 +68,12 @@ def epsilon_pair_edges(points: DataFrame, eps_m: float, max_abs_lat: float) -> D
     """points(lat, lon) → symmetric pair edges (lat, lon, nlat, nlon)."""
     level = join_grid_level(eps_m, max_abs_lat)
     left = points.select(
-        "lat", "lon", F.explode(_ring_cells_expr("lat", "lon", level)).alias("cell")
+        "lat", "lon", F.explode(cells_sql.ring("lat", "lon", level, "wrap")).alias("cell")
     )
     right = points.select(
         F.col("lat").alias("nlat"),
         F.col("lon").alias("nlon"),
-        _cell_expr("lat", "lon", level).alias("cell"),
+        cells_sql.cell("lat", "lon", level, "wrap").alias("cell"),
     )
     cand = left.join(right, "cell").drop("cell")
     cand = cand.where((F.col("lat") != F.col("nlat")) | (F.col("lon") != F.col("nlon")))
@@ -285,12 +222,12 @@ def _snap_map_blocks(
     home_pts = points.select(
         "lat",
         "lon",
-        _cell_expr("lat", "lon", prune_level).alias("home"),
+        cells_sql.cell("lat", "lon", prune_level, "wrap").alias("home"),
     )
     occ = home_pts.groupBy("home").agg(F.count("*").alias("cnt"))
     nbh = (
         occ.select(
-            F.explode(_ring_cells_of_cell_expr("home", prune_level)).alias("block"), "cnt"
+            F.explode(cells_sql.ring_of_cell("home", prune_level)).alias("block"), "cnt"
         )
         .groupBy("block")
         .agg(F.sum("cnt").alias("nbh_cnt"))
@@ -317,13 +254,13 @@ def _snap_map_blocks(
     # replication + cluster ownership stay at the BLOCK grid (edge ≥
     # D + 2·tol — the completeness proof's level); the prune level above is
     # only a point filter. The point's own home block is NOT shuffled — the
-    # kernel recomputes it vectorized from (lat, lon) with the same
-    # wrap/clamp normalization as _cell_expr, saving 8 of 32 bytes per
+    # kernel recomputes it vectorized from (lat, lon) with the same "wrap"
+    # edge rule (tiling.wrap_cell_id), saving 8 of 32 bytes per
     # replicated row across the exchange (guide §2.3 shuffle fewer bytes).
     replicated = hot.select(
         "lat",
         "lon",
-        F.explode(_ring_cells_expr("lat", "lon", level)).alias("block"),
+        F.explode(cells_sql.ring("lat", "lon", level, "wrap")).alias("block"),
     )
 
     from ..functions.clustering import UnionFind, epsilon_pairs
@@ -332,21 +269,6 @@ def _snap_map_blocks(
     # blocks (dense areas) keep the per-block grid-bucket kernel whose
     # candidate count stays near-linear
     BRUTE_CAP = 48
-
-    def _home_cells_np(plats: np.ndarray, plons: np.ndarray) -> np.ndarray:
-        """NumPy twin of _cell_expr(level): floor → java-style %-wrap → clamp.
-        NumPy's % is already a positive floor-mod for positive divisors, so
-        ((x % nx) + nx) % nx collapses to the same canonical value."""
-        w = cell_width_deg(level)
-        nx = np.int64(2 << level)
-        ny = np.int64(1 << level)
-        x = np.floor((plons + 180.0) / w).astype(np.int64)
-        y = np.floor((plats + 90.0) / w).astype(np.int64)
-        xx = ((x % nx) + nx) % nx
-        yy = np.clip(y, 0, ny - 1)
-        return (
-            np.int64(level) * np.int64(1 << 52) + (xx << np.int64(X_SHIFT)) + yy
-        )
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
         """Rows SORTED by block (one or many whole blocks) → emitted snap
@@ -407,7 +329,7 @@ def _snap_map_blocks(
         order = np.argsort(labels, kind="stable")
         slab = labels[order]
         cb = np.concatenate([[0], np.nonzero(np.diff(slab))[0] + 1, [slab.shape[0]]])
-        homes = _home_cells_np(lats[iv], lons[iv])  # home of each involved point
+        homes = wrap_cell_id(lats[iv], lons[iv], level)  # home of each involved point
         for s, e in zip(cb[:-1], cb[1:]):
             idx = order[s:e]  # compact ids, ascending ⇒ global order preserved
             if idx.shape[0] < 2:

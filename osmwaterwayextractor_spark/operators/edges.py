@@ -240,7 +240,7 @@ def build_edges(ways: DataFrame, snap: DataFrame, config: EngineConfig) -> DataF
                 np.asarray(ks, dtype=np.int64), hash_length,
             )
             # covering fused into the split kernel: the Catalyst HOF variant
-            # (tiles.edge_covering_col, kept for the SQL-checked query) is
+            # (cells_sql.polyline_cover, kept for the SQL-checked query) is
             # interpreted per row and measured as the dominant pipeline tail
             # at 1M edges — this is one vectorized pass over the same arrays
             from ..functions.tiling import H3_RES_TO_LEVEL, polyline_coverings

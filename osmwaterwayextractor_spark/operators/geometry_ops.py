@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..functions import cells_sql
 from ..functions.geometry import M_TO_DEG, insert_points_on_line, segment_intersections, simplify_dp
-from ..functions.tiling import LEVEL_SHIFT, X_SHIFT, cell_width_deg
+from ..functions.tiling import cell_width_deg
 
 WAYS_SCHEMA = "way_id long, lats array<double>, lons array<double>, tags map<string,string>"
 
@@ -154,24 +155,14 @@ def _segments(ways: DataFrame) -> DataFrame:
     ).select("way_id", "seg_idx", "seg.*")
 
 
-def _with_cover_cells(segs: DataFrame, level: int, pad_deg: float) -> DataFrame:
-    """Attach every level-``level`` cell the segment's padded bbox overlaps —
-    sequence() explodes + bit-packed cell ids, all JVM-side."""
-    w = cell_width_deg(level)
+def _seg_bbox(pad_deg: float) -> tuple[str, str, str, str]:
+    """(lat_lo, lat_hi, lon_lo, lon_hi) of a segment row's bbox padded by
+    ``pad_deg``, as SQL, for ``cells_sql.explode_cover``."""
     return (
-        segs.withColumn("_xlo", F.floor((F.least("lon1", "lon2") - pad_deg + 180.0) / w).cast("long"))
-        .withColumn("_xhi", F.floor((F.greatest("lon1", "lon2") + pad_deg + 180.0) / w).cast("long"))
-        .withColumn("_ylo", F.floor((F.least("lat1", "lat2") - pad_deg + 90.0) / w).cast("long"))
-        .withColumn("_yhi", F.floor((F.greatest("lat1", "lat2") + pad_deg + 90.0) / w).cast("long"))
-        .withColumn("cx", F.explode(F.sequence("_xlo", "_xhi")))
-        .withColumn("cy", F.explode(F.sequence("_ylo", "_yhi")))
-        .withColumn(
-            "cell",
-            F.lit(level).cast("long") * F.lit(1 << 52).cast("long")
-            + F.shiftleft(F.col("cx"), int(X_SHIFT))
-            + F.col("cy"),
-        )
-        .drop("_xlo", "_xhi", "_ylo", "_yhi", "cx", "cy")
+        f"least(lat1, lat2) - {pad_deg!r}D",
+        f"greatest(lat1, lat2) + {pad_deg!r}D",
+        f"least(lon1, lon2) - {pad_deg!r}D",
+        f"greatest(lon1, lon2) + {pad_deg!r}D",
     )
 
 
@@ -202,12 +193,10 @@ def _resplit_dense_cells(
         .drop("_dense")
         .withColumnRenamed("cell", "_parent")
     )
-    from .tiles import parent_cell_col
-
     deep_level = level + DENSE_CELL_SPLIT_LEVELS
-    deep = _with_cover_cells(split, deep_level, pad_deg)
+    deep = cells_sql.explode_cover(split, *_seg_bbox(pad_deg), deep_level)
     deep = deep.where(
-        parent_cell_col(F.col("cell"), deep_level, level) == F.col("_parent")
+        cells_sql.parent("cell", deep_level, level) == F.col("_parent")
     ).drop("_parent")
     return keep.unionByName(deep)
 
@@ -339,7 +328,7 @@ def _covered_raw(ways: DataFrame) -> DataFrame:
     dense-counts pass alone was 12.2 s of the 51 s stage). From a parquet
     round-trip the counts pass becomes a cell-column-pruned columnar scan."""
     segs = _segments(ways)
-    return _with_cover_cells(segs, INTERSECT_CELL_LEVEL, 0.0).select(
+    return cells_sql.explode_cover(segs, *_seg_bbox(0.0), INTERSECT_CELL_LEVEL).select(
         "cell", "way_id", "lat1", "lon1", "lat2", "lon2"
     )
 
@@ -350,28 +339,6 @@ def _covered_resplit(raw: DataFrame, config: EngineConfig) -> DataFrame:
     return _resplit_dense_cells(
         raw, INTERSECT_CELL_LEVEL, config.intersect_cell_cap, 0.0
     ).select("cell", "way_id", "lat1", "lon1", "lat2", "lon2")
-
-
-def _point_ring_cells(lat_col: str, lon_col: str, level: int):
-    """3×3 ring of level-``level`` cells around a point, same bit packing as
-    ``_with_cover_cells``. No lon-wrap/lat-clamp: out-of-range neighbors
-    yield cell ids the cover table never contains (the padded-bbox cover
-    this replaces did not wrap either), so they are harmless no-matches.
-
-    Authored as ONE SQL expression (not 9 × ~6 stacked Column ops): the DSL
-    version cost ~1 s of py4j round-trips per call in driver-serial plan
-    construction (see _intersect_catalyst). Long arithmetic is exact, so
-    the emitted cell ids are identical either way."""
-    w = cell_width_deg(level)
-    x = f"CAST(floor(({lon_col} + 180.0D) / {w!r}D) AS BIGINT)"
-    y = f"CAST(floor(({lat_col} + 90.0D) / {w!r}D) AS BIGINT)"
-    base = f"{level}L * {1 << 52}L"
-    elems = ", ".join(
-        f"{base} + shiftleft({x} + {dx}L, {int(X_SHIFT)}) + ({y} + {dy}L)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    return F.expr(f"array({elems})")
 
 
 def detect_intersections(
@@ -502,28 +469,21 @@ def insert_intersections(
             "plon",
             F.explode(
                 F.concat(
-                    _point_ring_cells("plat", "plon", INTERSECT_CELL_LEVEL),
-                    _point_ring_cells("plat", "plon", deep_level),
+                    cells_sql.ring("plat", "plon", INTERSECT_CELL_LEVEL, "raw"),
+                    cells_sql.ring("plat", "plon", deep_level, "raw"),
                 )
             ).alias("cell"),
         )
         matched = covered.join(rings, "cell").select("way_id", "plat", "plon")
     else:
         segs = _segments(ways)
-        covered_pad = _with_cover_cells(segs, INTERSECT_CELL_LEVEL, tol_deg).select(
-            "cell", "way_id"
-        )
-        w = cell_width_deg(INTERSECT_CELL_LEVEL)
+        covered_pad = cells_sql.explode_cover(
+            segs, *_seg_bbox(tol_deg), INTERSECT_CELL_LEVEL
+        ).select("cell", "way_id")
         pts_cells = points.select(
             "plat",
             "plon",
-            (
-                F.lit(INTERSECT_CELL_LEVEL).cast("long") * F.lit(1 << 52).cast("long")
-                + F.shiftleft(
-                    F.floor((F.col("plon") + 180.0) / w).cast("long"), int(X_SHIFT)
-                )
-                + F.floor((F.col("plat") + 90.0) / w).cast("long")
-            ).alias("cell"),
+            cells_sql.cell("plat", "plon", INTERSECT_CELL_LEVEL, "raw").alias("cell"),
         )
         matched = covered_pad.join(pts_cells, "cell").select("way_id", "plat", "plon")
 

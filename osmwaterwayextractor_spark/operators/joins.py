@@ -16,9 +16,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions import cells_sql
 from ..functions.geodesy import geodesic_m
 from ..functions.tiling import join_grid_level
-from .cluster import _cell_expr, _ring_cells_expr
 
 
 def distance_join(
@@ -50,8 +50,8 @@ def distance_join(
         r = r.withColumnRenamed(old, new)
     lat_r2, lon_r2 = rename.get(lat_r, lat_r), rename.get(lon_r, lon_r)
 
-    lhs = left.withColumn("_cell", F.explode(_ring_cells_expr(lat_l, lon_l, level)))
-    rhs = r.withColumn("_cell", _cell_expr(lat_r2, lon_r2, level))
+    lhs = left.withColumn("_cell", F.explode(cells_sql.ring(lat_l, lon_l, level, "wrap")))
+    rhs = r.withColumn("_cell", cells_sql.cell(lat_r2, lon_r2, level, "wrap"))
     cand = lhs.join(rhs, "_cell").drop("_cell").dropDuplicates(
         list(dict.fromkeys(left.columns + r.columns))
     )

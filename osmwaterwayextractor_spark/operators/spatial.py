@@ -21,15 +21,10 @@ from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.sql.window import Window
 
 from ..config import EngineConfig
+from ..functions import cells_sql
 from ..functions.geodesy import geodesic_m
 from ..functions.geometry import points_in_polygon
-from ..functions.tiling import (
-    H3_RES_TO_LEVEL,
-    cell_id,
-    join_grid_level,
-    polygon_covering,
-)
-from .cluster import _cell_expr, _ring_cells_expr
+from ..functions.tiling import H3_RES_TO_LEVEL, join_grid_level, polygon_covering
 
 CLIP_LEVEL = H3_RES_TO_LEVEL[7]
 
@@ -74,7 +69,7 @@ def tag_points_with_basins(
             out[m] = points_in_polygon(la[m], lo[m], ring_la, ring_lo)
         return pd.Series(out)
 
-    with_cell = points.withColumn("_cell", _cell_expr(lat_col, lon_col, CLIP_LEVEL))
+    with_cell = points.withColumn("_cell", cells_sql.cell(lat_col, lon_col, CLIP_LEVEL, "wrap"))
     cand = with_cell.join(
         broadcast(cover.withColumnRenamed("cell", "_cell")), "_cell"
     ).drop("_cell")
@@ -135,9 +130,9 @@ def knn_snap_dangling(
 
     left = dangling.select(
         "id", "lat", "lon", "own_ways",
-        F.explode(_ring_cells_expr("lat", "lon", level)).alias("cell"),
+        F.explode(cells_sql.ring("lat", "lon", level, "wrap")).alias("cell"),
     )
-    right = verts.withColumn("cell", _cell_expr("target_lat", "target_lon", level))
+    right = verts.withColumn("cell", cells_sql.cell("target_lat", "target_lon", level, "wrap"))
     cand = (
         left.join(right, "cell")
         .drop("cell")

@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..functions.tiling import H3_RES_TO_LEVEL, LEVEL_SHIFT, X_SHIFT, XY_MASK, cell_width_deg
+from ..functions import cells_sql
+from ..functions.tiling import H3_RES_TO_LEVEL
 
 
 # Per-edge covering resolution — the single source of truth. The pipeline
@@ -32,86 +33,39 @@ TILE_PARTITION_LEVEL = 2
 TILE_PART = "tile_part"
 
 
-def cell_col(lat, lon, level: int):
-    """Catalyst cell-id expression (same bit layout as functions.tiling)."""
-    w = cell_width_deg(level)
-    x = F.floor((lon + 180.0) / w).cast("long")
-    y = F.floor((lat + 90.0) / w).cast("long")
-    nx = F.lit(2 << level).cast("long")
-    ny = F.lit(1 << level).cast("long")
-    x = F.greatest(F.lit(0).cast("long"), F.least(nx - 1, x))
-    y = F.greatest(F.lit(0).cast("long"), F.least(ny - 1, y))
-    return F.lit(level).cast("long") * F.lit(1 << 52).cast("long") + F.shiftleft(x, int(X_SHIFT)) + y
-
-
-def parent_cell_col(cell, child_level: int, parent_level: int):
-    x = F.shiftrightunsigned(cell, int(X_SHIFT)).bitwiseAND(F.lit(int(XY_MASK)))
-    y = cell.bitwiseAND(F.lit(int(XY_MASK)))
-    d = child_level - parent_level
-    return (
-        F.lit(parent_level).cast("long") * F.lit(1 << 52).cast("long")
-        + F.shiftleft(F.shiftrightunsigned(x, d), int(X_SHIFT))
-        + F.shiftrightunsigned(y, d)
-    )
-
-
 def tile_part_col(config: EngineConfig):
     """The ``TILE_PART`` value of a row that carries its tile cells."""
     res = min(config.tile_resolutions)
-    cell = F.col(f"cell_r{res}")
-    return parent_cell_col(cell, H3_RES_TO_LEVEL[res], TILE_PARTITION_LEVEL)
+    return cells_sql.parent(f"cell_r{res}", H3_RES_TO_LEVEL[res], TILE_PARTITION_LEVEL)
 
 
 def with_node_cells(nodes: DataFrame, config: EngineConfig) -> DataFrame:
     out = nodes
     for res in config.tile_resolutions:
         out = out.withColumn(
-            f"cell_r{res}", cell_col(F.col("lat"), F.col("lon"), H3_RES_TO_LEVEL[res])
+            f"cell_r{res}", cells_sql.cell("lat", "lon", H3_RES_TO_LEVEL[res], "clamp")
         )
     return out
 
 
 def with_edge_cells(edges: DataFrame, config: EngineConfig) -> DataFrame:
     """Edge cells at the midpoint VERTEX (index (n-1)//2), matching the oracle."""
-    mid_idx = (F.floor((F.size("lats") - 1) / 2) + 1).cast("int")  # 1-based
-    mid_lat = F.element_at("lats", mid_idx)
-    mid_lon = F.element_at("lons", mid_idx)
+    mid_idx = "CAST(floor((size(lats) - 1) / 2) + 1 AS INT)"  # 1-based
+    mid_lat = f"element_at(lats, {mid_idx})"
+    mid_lon = f"element_at(lons, {mid_idx})"
     out = edges
     for res in config.tile_resolutions:
         out = out.withColumn(
-            f"cell_r{res}", cell_col(mid_lat, mid_lon, H3_RES_TO_LEVEL[res])
+            f"cell_r{res}", cells_sql.cell(mid_lat, mid_lon, H3_RES_TO_LEVEL[res], "clamp")
         )
     return out
-
-
-def edge_covering_col(lats_col: str, lons_col: str, level: int):
-    """S2-covering analog for a polyline edge, pure Catalyst (north_star:
-    "every node and edge endpoint is assigned an H3 cell AND an S2
-    covering"): the distinct set of level-``level`` cells overlapped by each
-    segment's bbox — a tight covering of the polyline, computed per row with
-    sequence/transform/flatten (NO shuffle, NO Python), exactly the cell set
-    the J5 candidate join uses (geometry_ops._with_cover_cells semantics)."""
-    w = repr(cell_width_deg(level))
-    base = f"cast({level} as bigint) * cast({1 << 52} as bigint)"
-    la, lo = lats_col, lons_col
-    seg = (
-        f"transform(slice({la}, 1, size({la})-1), (la1, i) -> "
-        f"flatten(transform("
-        f"  sequence(cast(floor((least({lo}[i], element_at({lo}, i+2)) + 180.0D) / {w}) as bigint),"
-        f"           cast(floor((greatest({lo}[i], element_at({lo}, i+2)) + 180.0D) / {w}) as bigint)),"
-        f"  xx -> transform("
-        f"    sequence(cast(floor((least(la1, element_at({la}, i+2)) + 90.0D) / {w}) as bigint),"
-        f"             cast(floor((greatest(la1, element_at({la}, i+2)) + 90.0D) / {w}) as bigint)),"
-        f"    yy -> {base} + shiftleft(xx, {int(X_SHIFT)}) + yy))))"
-    )
-    return F.expr(f"array_sort(array_distinct(flatten({seg})))")
 
 
 def with_edge_covering(edges: DataFrame, config: EngineConfig, res: int = COVERING_H3_RES) -> DataFrame:
     """edges + ``covering``: sorted distinct cell ids at H3-calibrated
     resolution ``res`` overlapped by the edge geometry."""
     return edges.withColumn(
-        "covering", edge_covering_col("lats", "lons", H3_RES_TO_LEVEL[res])
+        "covering", cells_sql.polyline_cover("lats", "lons", H3_RES_TO_LEVEL[res])
     )
 
 
@@ -133,7 +87,7 @@ def channel_density_rollup(edges_with_cells: DataFrame, config: EngineConfig) ->
         lvl = H3_RES_TO_LEVEL[res]
         prev = (
             prev.select(
-                parent_cell_col(F.col("cell"), prev_level, lvl).alias("cell"),
+                cells_sql.parent("cell", prev_level, lvl).alias("cell"),
                 "edge_count",
                 "total_length_m",
             )

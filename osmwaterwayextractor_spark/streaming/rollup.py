@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import EngineConfig
+from ..functions import cells_sql
 from ..functions.tiling import H3_RES_TO_LEVEL
-from ..operators.tiles import cell_col
 from ..sources.docsgen import DOC_SCHEMA_DDL
 from ..sources.parse import parse_nodes
 
@@ -59,7 +59,7 @@ def streaming_cell_updates(
     config = config or EngineConfig()
     level = H3_RES_TO_LEVEL[res]
     cells = parse_nodes(docs_stream, config).select(
-        cell_col(F.col("lat"), F.col("lon"), level).alias("cell")
+        cells_sql.cell("lat", "lon", level, "clamp").alias("cell")
     )
     return cells.groupBy("cell").applyInPandasWithState(
         _cell_update_fn,

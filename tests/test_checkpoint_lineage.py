@@ -36,6 +36,20 @@ def test_materialize_lineage_counts_the_table(spark, tmp_path):
     assert len(names) == 1 and _only_runs(names)
 
 
+def test_materialize_lineage_after_a_whole_stage_recompute(spark, tmp_path):
+    ck = Checkpointer(spark, str(tmp_path / "ck"))
+    df = spark.range(0, 1000, numPartitions=4).select(F.col("id"))
+    ck.materialize("lin_redo", CFG, lambda: df)
+    os.remove(os.path.join(ck._stage_dir("lin_redo", CFG), "data", "_SUCCESS"))
+    ck2 = Checkpointer(spark, ck.root)
+    out = ck2.materialize("lin_redo", CFG, lambda: df)
+    assert ck2.events[-1]["action"] == "computed"
+    lin = ck2.lineage("lin_redo", CFG)
+    assert sum(r["rows"] for r in lin) == out.count() == 1000
+    assert {r["run_id"] for r in lin} == {ck2.events[-1]["run_id"]}
+    assert len(_lineage_files(ck2, "lin_redo")) == 2  # both runs' files stay
+
+
 def test_partitioned_lineage_records_only_what_a_run_wrote(spark, tmp_path):
     ck = Checkpointer(spark, str(tmp_path / "ck"))
     df = spark.range(0, 600, numPartitions=3).select(
@@ -58,6 +72,8 @@ def test_partitioned_lineage_records_only_what_a_run_wrote(spark, tmp_path):
     new = [r for r in ck2.lineage("plin_demo", CFG) if r["run_id"] == run]
     assert {r["partition"] for r in new} == {"1", "4"}
     assert sum(r["rows"] for r in new) == 200
+    # the first run's records of the two deleted partitions are gone
+    assert sum(r["rows"] for r in ck2.lineage("plin_demo", CFG)) == 600
     names = _lineage_files(ck2, "plin_demo")
     assert len(names) == 2 and _only_runs(names)
 

@@ -59,7 +59,7 @@ def test_edge_covering_in_pipeline_output(spark):
 
 def test_polyline_coverings_kernel_matches_catalyst_expr(spark):
     """The fused NumPy covering kernel (pipeline path) must be bit-identical
-    to the Catalyst edge_covering_col expression (SQL-checked query path)."""
+    to the Catalyst cells_sql.polyline_cover expression (SQL-checked query path)."""
     import numpy as np
 
     from osmwaterwayextractor_spark.functions.tiling import polyline_coverings

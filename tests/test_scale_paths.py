@@ -10,9 +10,8 @@ from pyspark.sql import functions as F
 from osmwaterwayextractor_spark.config import EngineConfig
 from osmwaterwayextractor_spark.operators.geometry_ops import (
     INTERSECT_CELL_LEVEL,
+    _covered_raw,
     _resplit_dense_cells,
-    _segments,
-    _with_cover_cells,
     detect_intersections,
 )
 
@@ -53,7 +52,7 @@ def test_dense_cell_resplit_preserves_points_and_bounds_fanout(spark):
     assert got == want and len(want) >= 200  # same points, crossing detected
 
     # fan-out bound: the hot cell (301 segments) must be gone after re-split
-    covered = _with_cover_cells(_segments(ways), INTERSECT_CELL_LEVEL, 0.0)
+    covered = _covered_raw(ways)
     before = covered.groupBy("cell").count().agg(F.max("count")).collect()[0][0]
     resplit = _resplit_dense_cells(covered, INTERSECT_CELL_LEVEL, 50, 0.0)
     after = resplit.groupBy("cell").count().agg(F.max("count")).collect()[0][0]

@@ -40,7 +40,7 @@ def test_streaming_incremental_tile_rollup(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from osmwaterwayextractor_spark.functions.tiling import H3_RES_TO_LEVEL
-    from osmwaterwayextractor_spark.operators.tiles import cell_col
+    from osmwaterwayextractor_spark.functions.cells_sql import cell
     from osmwaterwayextractor_spark.sources.parse import parse_nodes
     from osmwaterwayextractor_spark.streaming.rollup import (
         read_live_rollup,
@@ -56,7 +56,7 @@ def test_streaming_incremental_tile_rollup(spark, tmp_path):
     def expected(n_docs):
         docs = docs_dataframe(spark, n_docs, DocsGenParams(seed=9), partitions=2)
         cells = parse_nodes(docs, cfg).select(
-            cell_col(F.col("lat"), F.col("lon"), H3_RES_TO_LEVEL[7]).alias("cell")
+            cell("lat", "lon", H3_RES_TO_LEVEL[7], "clamp").alias("cell")
         )
         return {
             r["cell"]: r["n"]
@@ -94,7 +94,7 @@ def test_rollup_log_compaction_bounds_growth(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from osmwaterwayextractor_spark.functions.tiling import H3_RES_TO_LEVEL
-    from osmwaterwayextractor_spark.operators.tiles import cell_col
+    from osmwaterwayextractor_spark.functions.cells_sql import cell
     from osmwaterwayextractor_spark.sources.parse import parse_nodes
     from osmwaterwayextractor_spark.streaming.rollup import (
         read_live_rollup,
@@ -121,7 +121,7 @@ def test_rollup_log_compaction_bounds_growth(spark, tmp_path):
     assert dirs == ["b000000002", "c000000002"]
 
     cells = parse_nodes(full, cfg).select(
-        cell_col(F.col("lat"), F.col("lon"), H3_RES_TO_LEVEL[7]).alias("cell")
+        cell("lat", "lon", H3_RES_TO_LEVEL[7], "clamp").alias("cell")
     )
     want = {
         r["cell"]: r["n"]
