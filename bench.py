@@ -259,26 +259,14 @@ def _run_bench_body(
         s0, tk0 = _read_cpu_ticks()
         t_rep = time.time()
         t0 = time.time()
-        if os.environ.get("OSMWWE_STAGE_TIMING"):
-            # epoch marks bracket the MEASURED window so event-log zero-task
-            # holes (driver_holes.py --window) can be split into in-timer
-            # Amdahl serial loss vs untimed setup (probe, imports, docs scan)
-            print(f"[mark] pipeline_t0_epoch: {t0:.3f}", flush=True)
         g = WaterwayEngine(cfg).build_graph(docs, spark)
         # full-column materialization of the final edges table (cells +
         # covering) the way production lands it — noop sink computes every
         # column without the executor-storage serialization of .cache(),
         # which defeats column pruning and dominated the tail at low core
         # counts; the count itself then prunes to a metadata-cheap scan
-        t_tail = time.time()
         g.edges.write.format("noop").mode("overwrite").save()
-        if os.environ.get("OSMWWE_STAGE_TIMING"):
-            print(f"[stage] final_noop_write: {time.time() - t_tail:.2f}s", flush=True)
-        t_cnt = time.time()
         n_edges = g.edges.count()
-        if os.environ.get("OSMWWE_STAGE_TIMING"):
-            print(f"[stage] final_count: {time.time() - t_cnt:.2f}s", flush=True)
-            print(f"[mark] pipeline_end_epoch: {time.time():.3f}", flush=True)
         record("waterway_pipeline", time.time() - t0)
 
         t0 = time.time()

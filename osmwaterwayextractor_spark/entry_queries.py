@@ -39,6 +39,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` over the session's cores only when it has fewer
+    partitions than that. A testdata table is one small parquet file, so its
+    scan is a single split and the query's first CPU-heavy pass would run in
+    one task. At real scale the scan already has enough splits, and the
+    extra shuffle would be waste."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
+
+
 def _dsum(col) -> F.Column:
     """Order-independent exact sum of a double column, returned as double."""
     return F.sum(F.col(col).cast(DEC)).cast("double")
@@ -157,17 +167,11 @@ FROM orders GROUP BY o_custkey HAVING count(*) > 1
 
 def q_agg_stats(spark, sf_dir):
     """A3/A8/W5: partial→final aggregation, exact decimal sums, percentiles."""
-    li = _t(spark, sf_dir, "lineitem")
     # The exact-percentile partial aggregation is the dominant cost and its
-    # parallelism is capped by the scan's split count (a single small file →
-    # far fewer splits than cores). Spread ONLY in that case — at real scale
-    # the scan has plenty of splits and the extra shuffle would be waste.
-    # Partial percentile buffers and decimal sums merge exactly, so the
-    # result is partitioning-independent (A/B at 32 cores: 2.0-7.0 → 1.1-1.6 s).
-    par = spark.sparkContext.defaultParallelism
-    if li.rdd.getNumPartitions() < par:
-        li = li.repartition(par)
-    return li.groupBy("l_returnflag").agg(
+    # parallelism is capped by the scan's split count. Partial percentile
+    # buffers and decimal sums merge exactly, so the result is
+    # partitioning-independent (A/B at 32 cores: 2.0-7.0 → 1.1-1.6 s).
+    return _spread(_t(spark, sf_dir, "lineitem")).groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         _dsum("l_quantity").alias("sum_qty"),
         _dsum("l_extendedprice").alias("sum_price"),
@@ -381,25 +385,22 @@ UNION ALL SELECT level, cell, cast(n AS BIGINT) AS n FROM parent
 
 
 def _derived_points(spark, sf_dir, spread: bool = False):
-    """``spread=True`` round-robins the points over the session's core count
-    before the quadratic candidate-generation work downstream. The derived
-    tables are ONE small parquet file, so every scan is a single input split
-    (parquet row-group granularity) — and the ε/kNN ring joins then evaluate
-    their whole candidate set inside that one task (round-6 plan audit: the
-    ring side was broadcast and the single-split home-cell side probed ~16M
-    candidate distance tests single-threaded; guide §2.5 input skew / §1.1
-    "decide where the time goes"). The repartition shuffles only the tiny
-    base rows (linear), never the candidates (quadratic), and the count
-    derives from the session, not a constant."""
+    """``spread=True`` round-robins the points over the session's cores
+    (``_spread``) before the quadratic candidate-generation work downstream.
+    The derived tables are ONE small parquet file, so every scan is a single
+    input split (parquet row-group granularity), and the ε/kNN ring joins
+    then evaluate their whole candidate set inside that one task (round-6
+    plan audit: the ring side was broadcast and the single-split home-cell
+    side probed ~16M candidate distance tests single-threaded). The
+    repartition shuffles only the tiny base rows (linear), never the
+    candidates (quadratic)."""
     pts = (
         _t(spark, sf_dir, "customer")
         .select("c_custkey")
         .withColumn("lat", F.expr(LAT_SQL))
         .withColumn("lon", F.expr(LON_SQL))
     )
-    if spread:
-        pts = pts.repartition(spark.sparkContext.defaultParallelism)
-    return pts
+    return _spread(pts) if spread else pts
 
 
 def q_epsilon_pairs(spark, sf_dir, eps_m: float = 1000.0):
@@ -838,12 +839,9 @@ def q_waterway_knn_dangling(spark, sf_dir):
 
 
 def q_minhash_pairs(spark, sf_dir):
-    # Single-file documents table → single-split scan; spread it so the
-    # shingle explode + xxhash64 pass (the operator's first, Python-free but
-    # CPU-heavy stage) parallelizes (guide §2.5 input skew).
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread so the shingle explode + xxhash64 pass (the operator's first,
+    # Python-free but CPU-heavy stage) parallelizes
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return dedup.minhash_lsh_pairs(docs, threshold=0.5).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -855,14 +853,11 @@ def q_simhash_pairs(spark, sf_dir):
 
 
 def q_lsh_ann(spark, sf_dir):
-    # Spread the corpus over the session's cores before the 32 hyperplane
-    # dot products per row: the embeddings table is one parquet file, so the
+    # Spread the corpus before the 32 hyperplane dot products per row: the
     # bucket computation (interpreted higher-order aggregates, the query's
     # dominant cost) otherwise runs in a single scan task feeding the
-    # broadcast build (round-6 plan audit; guide §2.5 input skew).
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # broadcast build (round-6 plan audit).
+    emb = _spread(_t(spark, sf_dir, "embeddings"))
     q = emb.where(F.col("vec_id") < 20)
     # dim is a testdata contract (TESTDATA.md embeddings: array<float> of 64)
     # — passed statically so plan construction runs no driver action

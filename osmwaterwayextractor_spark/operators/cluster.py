@@ -1,26 +1,30 @@
-"""Step 3 — ε-snap clustering (J3 + A7 + A5) as distributed dataflow.
+"""Step 3 — ε-snap clustering (J3 + A7 + A5) in one shuffle.
 
 The reference unions all endpoint/junction pairs within ``snap_tolerance_m``
 with an R-tree + union-find and maps every member to the cluster's arithmetic
-mean (osm_waterway_extractor.py:1253-1331). Here:
+mean (osm_waterway_extractor.py:1253-1331). Here (``snap_map`` →
+``_snap_map_blocks``):
 
-1. **ε-pairs (J3)**: points get a join-grid cell (deepest level whose cell
-   edge covers the tolerance at the data's max |lat|); one side explodes to
-   its ring-1 neighborhood; the cell equi-join + exact vectorized geodesic
-   filter yields exactly {(p,q) : geodesic ≤ ε} — the R-tree prefilter
-   replaced by a shuffle-friendly equi-join (SURVEY.md J3).
-2. **connected components (A7)**: iterative min-label propagation over the
-   pair edges with per-iteration localCheckpoint (lineage break). Labels are
-   the points' own (lat,lon) structs — min() is lexicographic, no global id
-   assignment (no single-partition window). Cluster diameters are tiny in
-   practice (the displacement guardrail aborts oversized clusters exactly
-   like the reference :1314-1317), so iterations ≈ a few.
-3. **centroids (A5)**: members collect per label, sorted; the shared
+1. **hot-point prune**: a point can join a cluster only if another point lies
+   in its 3×3 neighbourhood on a grid whose cell edge covers the tolerance;
+   every other point maps to itself.
+2. **block replication (J3)**: hot points go to their home block and its
+   ring-1 neighbours on a grid whose cell edge covers the guardrail's largest
+   cluster diameter plus 2·tol — the R-tree prefilter replaced by one
+   shuffle on the block id.
+3. **block kernel (J3 + A7 + A5)**: one Arrow pass per partition finds each
+   block's exact geodesic ε-pairs, unions them (union-find), and emits a
+   cluster only from its minimum member's home block. The shared
    ``centroid_of_members`` summation order makes Spark and oracle centroids
    bit-identical.
+4. **guardrail**: a member displaced past ``snap_tolerance_m ·
+   max_displacement_multiplier`` aborts the build, like the reference
+   (:1314-1317).
 
 Returns the snap map (lat, lon, snap_lat, snap_lon) — identity rows included
-(they double as the split-stage cut set, reference :2554-2559).
+(they double as the split-stage cut set, reference :2554-2559). Two
+independent cross-check implementations (distributed label propagation and
+driver union-find) live in tests/test_cluster_paths.py.
 """
 
 from __future__ import annotations
@@ -29,7 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..config import EngineConfig
 from ..functions import cells_sql
@@ -47,73 +50,6 @@ from ..functions.tiling import join_grid_level, wrap_cell_id
 # a DEFAULT driver/executor heap, not just the bench's 48g (ADVICE r4 — the
 # old 20M cap could build a multi-GB driver-side hashed relation).
 HOT_BLOCK_BROADCAST_MAX = 2_000_000
-
-
-def _geodesic_udf():
-    @pandas_udf("double")
-    def _g(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            geodesic_m(
-                lat1.to_numpy(dtype=float),
-                lon1.to_numpy(dtype=float),
-                lat2.to_numpy(dtype=float),
-                lon2.to_numpy(dtype=float),
-            )
-        )
-
-    return _g
-
-
-def epsilon_pair_edges(points: DataFrame, eps_m: float, max_abs_lat: float) -> DataFrame:
-    """points(lat, lon) → symmetric pair edges (lat, lon, nlat, nlon)."""
-    level = join_grid_level(eps_m, max_abs_lat)
-    left = points.select(
-        "lat", "lon", F.explode(cells_sql.ring("lat", "lon", level, "wrap")).alias("cell")
-    )
-    right = points.select(
-        F.col("lat").alias("nlat"),
-        F.col("lon").alias("nlon"),
-        cells_sql.cell("lat", "lon", level, "wrap").alias("cell"),
-    )
-    cand = left.join(right, "cell").drop("cell")
-    cand = cand.where((F.col("lat") != F.col("nlat")) | (F.col("lon") != F.col("nlon")))
-    cand = cand.distinct()  # ring overlap can duplicate candidates
-    return cand.where(_geodesic_udf()("lat", "lon", "nlat", "nlon") <= F.lit(eps_m))
-
-
-def connected_components(points: DataFrame, edges: DataFrame, checkpoint_every: int = 1) -> DataFrame:
-    """→ (lat, lon, label struct<lat,lon>) via min-label propagation."""
-    labels = points.select(
-        "lat", "lon", F.struct(F.col("lat").alias("llat"), F.col("lon").alias("llon")).alias("label")
-    ).localCheckpoint()
-    it = 0
-    while True:
-        it += 1
-        msgs = (
-            edges.join(labels, ["lat", "lon"])
-            .select(F.col("nlat").alias("lat"), F.col("nlon").alias("lon"), "label")
-            .unionByName(labels)
-        )
-        new_labels = msgs.groupBy("lat", "lon").agg(F.min("label").alias("label")).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), ["lat", "lon"])
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-        if it > 64:
-            # a silent wrong answer from a parity oracle is worse than a
-            # crash (reference hard-abort analog :1314-1317)
-            raise RuntimeError(
-                "connected_components did not converge within 64 iterations"
-            )
-
-
-DRIVER_CC_MAX_PAIRS = 50_000  # _snap_map_driver cross-check bound (tests)
 
 
 def snap_map(
@@ -143,13 +79,8 @@ def snap_map(
     driver actions total: the max|lat| agg (skipped when the caller passes
     ``max_abs_lat``, as the pipeline does from parquet footers), the
     hot-block prune's checkpoint and count, the small mapping checkpoint and
-    the violation probe. ``_snap_map_driver`` (union-find on collected pairs)
-    and ``connected_components`` (min-label propagation) remain as
-    independent cross-check implementations for the parity tests.
+    the violation probe.
     """
-    import os
-    import time
-
     if max_abs_lat is None:
         max_abs_lat = points.agg(F.max(F.abs(F.col("lat")))).collect()[0][0]
     identity = points.select(
@@ -157,13 +88,9 @@ def snap_map(
     )
     if max_abs_lat is None:  # empty input
         return identity
-    t0 = time.time()
     mapping = _snap_map_blocks(points, config, float(max_abs_lat)).localCheckpoint(
         eager=True
     )
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(f"[snap] block kernel+checkpoint: {time.time() - t0:.2f}s", flush=True)
-    t0 = time.time()
     # ordered top-1: one job at any partition count (a bare limit(1).collect
     # scans partitions incrementally, one job per round) and a deterministic
     # member to name
@@ -179,8 +106,6 @@ def snap_map(
             f"{m.snap_lon!r}), {disp:.6g} m > snap_tolerance_m * "
             f"max_displacement_multiplier = {bound:.6g} m"
         )
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(f"[snap] violation probe: {time.time() - t0:.2f}s", flush=True)
     return points.join(mapping.drop("viol"), ["lat", "lon"], "left").select(
         "lat",
         "lon",
@@ -232,21 +157,12 @@ def _snap_map_blocks(
         .groupBy("block")
         .agg(F.sum("cnt").alias("nbh_cnt"))
     )
-    import os
-    import time
-
-    t0 = time.time()
     hot_blocks = (
         nbh.where(F.col("nbh_cnt") >= 2)
         .select(F.col("block").alias("home"))
         .localCheckpoint(eager=True)  # tiny; reused by the count + the join
     )
     n_hot = hot_blocks.count()
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(
-            f"[snap] hot-block prune: {time.time() - t0:.2f}s ({n_hot} hot blocks)",
-            flush=True,
-        )
     if n_hot <= HOT_BLOCK_BROADCAST_MAX:
         hot_blocks = F.broadcast(hot_blocks)
     hot = home_pts.join(hot_blocks, "home", "leftsemi").drop("home")
@@ -380,116 +296,4 @@ def _snap_map_blocks(
     return rep.mapInPandas(
         kernel,
         schema="lat double, lon double, snap_lat double, snap_lon double, viol int",
-    )
-
-
-def _snap_map_labelprop(
-    points: DataFrame, config: EngineConfig, spark: SparkSession, max_abs_lat: float
-) -> DataFrame:
-    """Cross-check implementation: iterative min-label propagation over the
-    distributed ε-pair edges (the round-1 production path, kept for the
-    algorithm-independence parity test)."""
-    identity = points.select(
-        "lat", "lon", F.col("lat").alias("snap_lat"), F.col("lon").alias("snap_lon")
-    )
-    pair_edges = epsilon_pair_edges(
-        points, config.snap_tolerance_m, max_abs_lat
-    ).localCheckpoint(eager=True)
-    if pair_edges.limit(1).count() == 0:
-        return identity
-    labels = connected_components(points, pair_edges)
-
-    @pandas_udf("struct<snap_lat:double, snap_lon:double, max_disp:double>")
-    def _centroid(members: pd.Series) -> pd.DataFrame:
-        out_lat = np.empty(len(members))
-        out_lon = np.empty(len(members))
-        out_disp = np.empty(len(members))
-        for i, m in enumerate(members):
-            mlat = np.array([p["lat"] for p in m], dtype=np.float64)
-            mlon = np.array([p["lon"] for p in m], dtype=np.float64)
-            if mlat.shape[0] == 1:
-                out_lat[i], out_lon[i] = mlat[0], mlon[0]
-                out_disp[i] = 0.0
-            else:
-                cla, clo = centroid_of_members(mlat, mlon)
-                out_lat[i], out_lon[i] = cla, clo
-                disp = geodesic_m(mlat, mlon, np.full_like(mlat, cla), np.full_like(mlon, clo))
-                out_disp[i] = float(disp.max())
-        return pd.DataFrame({"snap_lat": out_lat, "snap_lon": out_lon, "max_disp": out_disp})
-
-    clusters = labels.groupBy("label").agg(
-        F.sort_array(F.collect_list(F.struct("lat", "lon"))).alias("members")
-    )
-    clusters = clusters.select(
-        "members", _centroid("members").alias("c")
-    ).select("members", "c.snap_lat", "c.snap_lon", "c.max_disp")
-
-    max_allowed = config.snap_tolerance_m * config.max_displacement_multiplier
-    bad = clusters.where(F.col("max_disp") > F.lit(max_allowed)).limit(1).count()
-    if bad:
-        # reference :1314-1317 — hard abort on displacement violations
-        raise ValueError("Cluster displacement exceeds safety threshold")
-
-    return clusters.select(
-        F.explode("members").alias("m"), "snap_lat", "snap_lon"
-    ).select(
-        F.col("m.lat").alias("lat"),
-        F.col("m.lon").alias("lon"),
-        "snap_lat",
-        "snap_lon",
-    )
-
-
-def _snap_map_driver(
-    points: DataFrame, pairs_pdf: pd.DataFrame, config: EngineConfig, spark: SparkSession
-) -> DataFrame:
-    """Exact union-find + centroids over the (small) involved-point set on
-    the driver — array-vectorized, no per-row Python except the ≤50k-step
-    union loop and the per-CLUSTER centroid calls (whose summation order is
-    the bit-parity contract, functions.clustering.centroid_of_members).
-    Mapping broadcast-joined back onto all points. Bit-identical to the
-    distributed path: same partitions, same sorted-member centroid kernel,
-    same displacement abort (reference :1314-1317)."""
-    from ..functions.clustering import UnionFind
-
-    a = pairs_pdf[["lat", "lon"]].to_numpy(dtype=np.float64)
-    b = pairs_pdf[["nlat", "nlon"]].to_numpy(dtype=np.float64)
-    uniq, inv = np.unique(np.concatenate([a, b], axis=0), axis=0, return_inverse=True)
-    n_pairs = a.shape[0]
-    uf = UnionFind(uniq.shape[0])
-    for x, y in zip(inv[:n_pairs].tolist(), inv[n_pairs:].tolist()):
-        uf.union(x, y)
-    labels = uf.labels()
-    order = np.argsort(labels, kind="stable")
-    slab = labels[order]
-    starts = np.concatenate([[0], np.nonzero(np.diff(slab))[0] + 1, [slab.shape[0]]])
-    snap_lat = np.empty(uniq.shape[0])
-    snap_lon = np.empty(uniq.shape[0])
-    max_allowed = config.snap_tolerance_m * config.max_displacement_multiplier
-    for s, e in zip(starts[:-1], starts[1:]):
-        idx = order[s:e]
-        mlat, mlon = uniq[idx, 0], uniq[idx, 1]
-        if idx.shape[0] == 1:
-            cla, clo = float(mlat[0]), float(mlon[0])
-        else:
-            cla, clo = centroid_of_members(mlat, mlon)
-            disp = geodesic_m(
-                mlat, mlon, np.full(idx.shape[0], cla), np.full(idx.shape[0], clo)
-            )
-            if float(disp.max()) > max_allowed:
-                raise ValueError("Cluster displacement exceeds safety threshold")
-        snap_lat[idx] = cla
-        snap_lon[idx] = clo
-    mapping = spark.createDataFrame(
-        pd.DataFrame(
-            {"lat": uniq[:, 0], "lon": uniq[:, 1], "snap_lat": snap_lat, "snap_lon": snap_lon}
-        )
-    )
-    from pyspark.sql.functions import broadcast
-
-    return points.join(broadcast(mapping), ["lat", "lon"], "left").select(
-        "lat",
-        "lon",
-        F.coalesce("snap_lat", "lat").alias("snap_lat"),
-        F.coalesce("snap_lon", "lon").alias("snap_lon"),
     )

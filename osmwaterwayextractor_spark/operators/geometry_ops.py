@@ -18,8 +18,6 @@
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -393,9 +391,7 @@ def detect_intersections(
     # keeps every method small. The huge target never reduces parallelism
     # (coalesce only ever lowers a partition count). Pinned by
     # tests/test_round5_hardening.py::test_intersections_compile_without_fallback.
-    # OSMWWE_CODEGEN_BARRIER=0 disables it (diagnostic A/B only).
-    if os.environ.get("OSMWWE_CODEGEN_BARRIER", "1") != "0":
-        pairs = pairs.coalesce(1 << 20)
+    pairs = pairs.coalesce(1 << 20)
 
     # exact test JVM-side (whole-stage codegen) — bit-identical twin of the
     # NumPy segment_intersections kernel, which remains the oracle/test path.

@@ -129,16 +129,11 @@ class WaterwayEngine:
         projection, is always called, because a partial table resumes per
         partition. The partition column is dropped from the read-back, so a
         checkpointed build returns the columns of a lazy one."""
-        import time
-
         parents = [outs[p] for p in STAGES[name].parents]
         ck = self.checkpointer
         if ck is None and name in _TAIL:
             outs[name] = build(*parents)
             return
-        t0 = time.time()
-        if os.environ.get("OSMWWE_STAGE_TIMING") and self._t_prev_stage_end is not None:
-            print(f"[gap] before {name}: {t0 - self._t_prev_stage_end:.2f}s", flush=True)
         with _stage_label(name):
             if ck is None:
                 out = self._ephemeral_stage(name, build(*parents))
@@ -150,12 +145,7 @@ class WaterwayEngine:
                 ).drop(TILE_PART)
             else:
                 out = ck.materialize(name, self.config, lambda: build(*parents))
-        if os.environ.get("OSMWWE_STAGE_TIMING"):
-            print(f"[stage] {name}: {time.time() - t0:.2f}s", flush=True)
-        self._t_prev_stage_end = time.time()
         outs[name] = out
-
-    _t_prev_stage_end: Optional[float] = None  # OSMWWE_STAGE_TIMING gap attribution
 
     def _ephemeral_stage(self, name: str, df: DataFrame) -> DataFrame:
         """Materialize a stage boundary without the durable Checkpointer.
@@ -219,16 +209,10 @@ class WaterwayEngine:
         (round-6 event-log A/B at 100k docs: 2313 → 1403 task-s per pass,
         -39%; guide §1.2 — recompute cheap narrow lineage rather than
         persist a wide intermediate)."""
-        import time
-
         from ..operators.geometry_ops import _covered_for_join
 
-        t0 = time.time()
         with _stage_label("covered"):
-            out = self._ephemeral_stage("covered", _covered_for_join(simplified, self.config))
-        if os.environ.get("OSMWWE_STAGE_TIMING"):
-            print(f"[stage] covered: {time.time() - t0:.2f}s", flush=True)
-        return out
+            return self._ephemeral_stage("covered", _covered_for_join(simplified, self.config))
 
     def _stages_concurrent(
         self, named: list[tuple[str, Callable[..., DataFrame]]], outs: dict[str, DataFrame]
@@ -268,12 +252,6 @@ class WaterwayEngine:
     def build_graph(self, docs: DataFrame, spark: Optional[SparkSession] = None) -> GraphResult:
         spark = spark or docs.sparkSession
         cfg = self.config
-        if self._t_prev_stage_end is None:
-            # arm the stage-gap timer at entry so the FIRST stage's [gap]
-            # line attributes pipeline-start → first-job driver time too
-            import time as _time
-
-            self._t_prev_stage_end = _time.time()
         # each stage's output by name; a builder takes its STAGES parents
         outs: dict[str, DataFrame] = {}
 

@@ -335,11 +335,10 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
             "SPARK_GRAFT_DOCS": str(n_docs),
             "SPARK_GRAFT_BENCH_MODE": "pipeline",
             "SPARK_GRAFT_BENCH_REPS": "1",  # session-level interleaving below
-            "OSMWWE_STAGE_TIMING": "1",  # per-stage walls into the session log
-            # every leg doubles as a profiling run: the event log (a few MB
-            # of JSON on /tmp) lets scripts/driver_holes.py attribute the
-            # 4-cpu busy% gap to zero-task driver holes vs task skew after
-            # the fact, with no extra measurement runs on the shared host
+            # every leg doubles as a profiling run: its event log (a few MB
+            # of JSON on /tmp) carries per-stage task time under each job's
+            # stage-<name> label, with no extra measurement runs on the
+            # shared host
             "OSMWWE_EVENTLOG": "true",
         }
     )
@@ -347,33 +346,13 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
         cpuset, sel = select_cpuset(cpus)
     membw = sel.get("gbps", -1.0) if sel else _membw_probe(cpuset)
     cmd = ["taskset", "-c", cpuset, sys.executable, os.path.join(ROOT, "bench.py")]
-    # in-leg capability tracer (round-5): legs run 4-11 min while the QoS
-    # window moves on minute scale — sample a spare core's bandwidth + the
-    # leg cpuset's busy% throughout, so each leg carries a falsifiable
-    # record of whether its window HELD, not just whether it opened.
-    # Spares are drawn from the sweep's healthiest non-leg cores so a
-    # starved spare doesn't misread a healthy window. Diagnostic only —
-    # never feeds the estimator.
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from leg_tracer import LegTracer
-
-    leg_cpus = [int(c) for c in cpuset.split(",")]
-    sweep = (sel or {}).get("sweep") or {}
-    spare_pool = [c for c in sorted(sweep, key=lambda c: -sweep[c])] or None
-    tracer = LegTracer(leg_cpus, spare_pool=spare_pool).start()
     evdir = "/tmp/spark-events"
     os.makedirs(evdir, exist_ok=True)
     ev_before = set(os.listdir(evdir))
     s0, t0 = _read_cpu_ticks()
     out = subprocess.run(cmd, env=env, capture_output=True, text=True)
     s1, t1 = _read_cpu_ticks()
-    trace = tracer.stop()
     ev_new = [f for f in os.listdir(evdir) if f not in ev_before and not f.endswith(".inprogress")]
-    with open(PROBES_LOG, "a") as f:
-        f.write(json.dumps({
-            "ts": time.strftime("%Y-%m-%d %H:%M:%S UTC", time.gmtime()),
-            "type": "leg_trace", "level": cpus, "cpuset": cpuset, **trace,
-        }) + "\n")
     if out.returncode != 0:
         sys.stderr.write(f"[leg cpus={cpus}] FAILED rc={out.returncode}\n")
         sys.stderr.write("\n".join(out.stderr.splitlines()[-40:]) + "\n")
@@ -385,27 +364,21 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
     r["cpuset"] = cpuset
     r["membw_gbps"] = membw
     r["eventlog"] = os.path.join(evdir, ev_new[0]) if len(ev_new) == 1 else None
-    r["trace"] = {k: v for k, v in trace.items() if k != "timeline"}
     if sel:
         r["cpu_select"] = sel
-    import re
-
-    r["stages"] = {
-        m.group(1).strip(): float(m.group(2))
-        for ln in out.stdout.splitlines()
-        if ln.startswith(("[stage]", "[snap]", "[gap]"))
-        and (m := re.match(r"\[(?:stage|snap|gap)\] ([^:]+): ([0-9.]+)s", ln))
-    }
-    for name, sec in r["stages"].items():
-        print(f"    [leg cpus={cpus}] {name}: {sec:.2f}s", flush=True)
     return r
 
 
 def load_sessions() -> list[dict]:
-    if not os.path.exists(SESSIONS):
-        return []
-    with open(SESSIONS) as f:
-        return [json.loads(l) for l in f if l.strip()]
+    """The committed round-5 sessions, then this host's work log, each record
+    once. BENCH/work/ is gitignored, so without the committed snapshot a
+    session on a fresh checkout would republish a history of only itself."""
+    lines: list[str] = []
+    for path in (os.path.join(ROOT, "BENCH", "sessions_r5.jsonl"), SESSIONS):
+        if os.path.exists(path):
+            with open(path) as f:
+                lines += [l.rstrip("\n") for l in f if l.strip()]
+    return [json.loads(l) for l in dict.fromkeys(lines)]
 
 
 def estimate(runs: dict[int, list[dict]], levels: list[int]) -> dict:
@@ -468,17 +441,6 @@ def pregenerate_docs(n_docs: int) -> str:
 
 
 def main() -> None:
-    # BENCH/work/ is gitignored and wiped on sandbox restarts; a session that
-    # runs after a wipe would republish a history table containing only
-    # itself (session 10 lost the banked PASS row this way). Reseed the work
-    # logs from the committed BENCH/*_r5.jsonl snapshots before appending.
-    try:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from reseed_and_republish import merge_logs
-
-        merge_logs()
-    except Exception as e:  # never block a session on bookkeeping
-        print(f"[reseed] skipped: {e}", flush=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else DEFAULT_DOCS
     reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
@@ -626,16 +588,8 @@ def main() -> None:
         "membw_gbps_runs": {
             str(c): [r.get("membw_gbps", -1.0) for r in runs[c]] for c in levels
         },
-        "stage_walls": {
-            str(c): [r.get("stages", {}) for r in runs[c]] for c in levels
-        },
-        # in-leg tracer summaries (full timelines in scaling_probes.jsonl):
-        # whether each leg's capability window HELD while it ran
-        "leg_traces": {
-            str(c): [r.get("trace", {}) for r in runs[c]] for c in levels
-        },
         # per-leg Spark event logs (/tmp — not committed): every leg doubles
-        # as a profiling run for scripts/driver_holes.py + analyze_eventlog.py
+        # as a profiling run
         "eventlogs": {
             str(c): [r.get("eventlog") for r in runs[c]] for c in levels
         },
@@ -765,9 +719,7 @@ def write_baseline_md(sf_dir, levels, factor, runs, results, eff, session) -> No
         f.write("|---|---|---|---|---|---|---|---|---|---|---|\n")
         for s in history:
             if s.get("no_window"):
-                # 11 cells to match the header (ADVICE r5: this writer and
-                # reseed_and_republish.render_history_rows emitted different
-                # widths and the table churned depending on which ran last)
+                # 11 cells to match the header (ADVICE r5)
                 f.write(
                     f"| {s['ts']} | {s['n_docs']} | — | — | — | — | — | — | — | — | "
                     f"NO-WINDOW (gate held closed {s['gate_attempts']} probes) |\n"
@@ -825,22 +777,6 @@ def write_baseline_md(sf_dir, levels, factor, runs, results, eff, session) -> No
                 f"| {k} | "
                 + " | ".join(f"{r['queries'].get(k, float('nan')):.2f}" for r in results)
                 + " |\n"
-            )
-    # re-append the supplementary protocol sections (this writer regenerates
-    # the whole file; the concurrent/weak histories must survive it)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    for mod_name, jsonl in (
-        ("scaling_concurrent", "concurrent_sessions.jsonl"),
-        ("scaling_weak", "weak_sessions.jsonl"),
-        ("publish_controls", "host_controls.jsonl"),
-        ("stage_scaling_table", "scaling_sessions.jsonl"),
-    ):
-        p = os.path.join(ROOT, "BENCH", "work", jsonl)
-        if os.path.exists(p):
-            import importlib
-
-            importlib.import_module(mod_name).publish(
-                [json.loads(l) for l in open(p) if l.strip()]
             )
 
 

@@ -103,3 +103,15 @@ def test_spread_cpuset_never_compact_never_cpu0():
     assert len(set(cpus)) == 8
     # uniform stride — no two pins adjacent
     assert min(b - a for a, b in zip(cpus, cpus[1:])) >= 2
+
+
+def test_session_history_starts_from_the_committed_snapshot(tmp_path, monkeypatch):
+    """BENCH/work/ is gitignored: the BASELINE.md history must not shrink to
+    the sessions of one checkout."""
+    (tmp_path / "BENCH" / "work").mkdir(parents=True)
+    (tmp_path / "BENCH" / "sessions_r5.jsonl").write_text('{"ts": "a"}\n{"ts": "b"}\n')
+    work = tmp_path / "BENCH" / "work" / "scaling_sessions.jsonl"
+    work.write_text('{"ts": "b"}\n{"ts": "c"}\n')
+    monkeypatch.setattr(scaling_evidence, "ROOT", str(tmp_path))
+    monkeypatch.setattr(scaling_evidence, "SESSIONS", str(work))
+    assert [s["ts"] for s in scaling_evidence.load_sessions()] == ["a", "b", "c"]

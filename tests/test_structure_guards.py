@@ -1,0 +1,99 @@
+"""Structure guards, no Spark. The engine package reads no ``OSMWWE_*``
+env var and ``operators/cluster.py`` holds only the block kernel (its
+cross-checks live in ``tests/test_cluster_paths.py``). Every tooling script
+compiles, and every import of a sibling script, function-local ones
+included, names a file under ``scripts/``: a plain import test would miss a
+dangling function-local import until the function runs."""
+
+import ast
+import importlib.machinery
+import os
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "osmwaterwayextractor_spark")
+SCRIPTS = os.path.join(ROOT, "scripts")
+
+CROSS_CHECK_NAMES = {
+    "epsilon_pair_edges",
+    "connected_components",
+    "_snap_map_labelprop",
+    "_snap_map_driver",
+    "DRIVER_CC_MAX_PAIRS",
+}
+
+
+def _package_modules():
+    for d, _, files in os.walk(PKG):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                yield os.path.join(d, f)
+
+
+def test_package_reads_no_osmwwe_env_var():
+    hits = [
+        os.path.relpath(p, ROOT)
+        for p in _package_modules()
+        if "OSMWWE_" in open(p, encoding="utf-8").read()
+    ]
+    assert hits == []
+
+
+def test_cluster_module_holds_no_cross_check_implementation():
+    path = os.path.join(PKG, "operators", "cluster.py")
+    tree = ast.parse(open(path, encoding="utf-8").read())
+    defined = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            defined.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            defined |= {t.id for t in targets if isinstance(t, ast.Name)}
+    assert defined & CROSS_CHECK_NAMES == set()
+
+
+def _tooling_files():
+    files = [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "bench_extra.py")]
+    files += sorted(
+        os.path.join(SCRIPTS, f) for f in os.listdir(SCRIPTS) if f.endswith(".py")
+    )
+    return files
+
+
+def _imported_top_names(tree):
+    """Top-level module names of every absolute import, at any depth."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                yield a.name.split(".")[0], node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            yield node.module.split(".")[0], node.lineno
+
+
+def _resolvable_outside_scripts(name):
+    """Stdlib, a repo top-level module or package, or an installed one."""
+    if name in sys.stdlib_module_names or name in sys.builtin_module_names:
+        return True
+    path = [
+        p for p in sys.path if os.path.realpath(p or ".") != os.path.realpath(SCRIPTS)
+    ]
+    path.append(ROOT)
+    return importlib.machinery.PathFinder.find_spec(name, path) is not None
+
+
+@pytest.mark.parametrize(
+    "path", _tooling_files(), ids=lambda p: os.path.relpath(p, ROOT)
+)
+def test_tooling_compiles_and_imports_only_existing_scripts(path):
+    src = open(path, encoding="utf-8").read()
+    tree = ast.parse(src, filename=path)
+    compile(tree, path, "exec")
+    dangling = [
+        (name, line)
+        for name, line in _imported_top_names(tree)
+        if not _resolvable_outside_scripts(name)
+        and not os.path.isfile(os.path.join(SCRIPTS, name + ".py"))
+    ]
+    assert dangling == [], f"imports of scripts that do not exist: {dangling}"
