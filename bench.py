@@ -19,13 +19,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _read_cpu_ticks() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from the aggregate /proc/stat cpu line."""
-    parts = open("/proc/stat").readline().split()
-    vals = [int(x) for x in parts[1:]]
-    return vals[7], sum(vals)
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+from host_probe import _read_steal, _run_leg  # noqa: E402  (steal, total) jiffies
 
 
 def host_probe_self(seconds: float = 2.0) -> dict:
@@ -38,11 +33,6 @@ def host_probe_self(seconds: float = 2.0) -> dict:
     steal around every rep makes round-over-round bench deltas
     host-attributable at a glance. Diagnostic only; never feeds timings."""
     try:
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-        )
-        from host_probe import _run_leg
-
         cpus = sorted(os.sched_getaffinity(0))
         k = min(4, len(cpus))
         sample = [cpus[i * len(cpus) // k] for i in range(k)]
@@ -256,7 +246,7 @@ def _run_bench_body(
         # host-capability attribution per rep (VERDICT r4 item 2): probe
         # runs BEFORE the rep's measured sections, never concurrent
         hp = host_probe_self()
-        s0, tk0 = _read_cpu_ticks()
+        s0, tk0 = _read_steal()
         t_rep = time.time()
         t0 = time.time()
         g = WaterwayEngine(cfg).build_graph(docs, spark)
@@ -281,7 +271,7 @@ def _run_bench_body(
             df.write.format("noop").mode("overwrite").save()
             record(name, time.time() - t0)
 
-        s1, tk1 = _read_cpu_ticks()
+        s1, tk1 = _read_steal()
         hp["steal_pct"] = round(100.0 * (s1 - s0) / max(tk1 - tk0, 1), 2)
         hp["rep_wall_sec"] = round(time.time() - t_rep, 2)
         host_reps.append(hp)

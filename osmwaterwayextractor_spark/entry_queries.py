@@ -41,10 +41,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition ``df`` over the session's cores only when it has fewer
-    partitions than that. A testdata table is one small parquet file, so its
-    scan is a single split and the query's first CPU-heavy pass would run in
-    one task. At real scale the scan already has enough splits, and the
-    extra shuffle would be waste."""
+    partitions than that, so the query's first CPU-heavy pass does not run
+    in the one task of a one-row-group file. The count is of byte-range
+    input splits, not of row groups: one row group larger than
+    ``maxPartitionBytes`` reports several splits of which only one carries
+    rows. Every testdata table is one row group of at most 11 MB, which is
+    3 splits or fewer at ``bench.py``'s 8 MB splits, so all four sites
+    spread at 4 and at 32 cores (tests/test_entry_spread.py pins 4)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 

@@ -1,58 +1,29 @@
 """North-rule scaling evidence: the same job at N and 4N parallelism.
 
-No multi-node cluster exists in this sandbox, so (per BASELINE.md) the
-two-cluster-size criterion is evidenced as N vs 4N **pinned CPUs** on the
-IDENTICAL deterministic input: each leg runs `taskset -c 0-(k-1)` around a
-fresh `local[k]` JVM, so the JVM's helper threads and the Python workers of
-the small leg cannot free-ride on idle host cores (unpinned local[2] was
-measured borrowing ~3 extra cores' worth of background work — pinning makes
-the cluster-size emulation honest).
+With no multi-node cluster, the two-cluster-size criterion is evidenced as N
+vs 4N **pinned CPUs** on the identical deterministic input: each leg runs
+`taskset -c <cpuset>` around a fresh `local[k]` JVM, so the small leg cannot
+borrow idle host cores. Default levels are 1 and 4 CPUs. The upper level must
+sit below the host's aggregate memory-bandwidth ceiling, or the upper leg
+measures the hypervisor's bandwidth QoS instead of the engine (docs/SCALE.md
+records why 2→8 was valid on the round-3 host and 1→4 on the round-4 VM).
 
-Default levels are 1 and 4 pinned CPUs (N=1 vs N=4 single-core executors).
-The level pair must sit BELOW the host's aggregate memory-bandwidth
-ceiling or the upper leg measures the hypervisor's bandwidth QoS instead
-of the engine: the round-3 host saturated at 8-16 threads (so 2→8 was
-used there, passing at 0.912), but the round-4 VM saturates at ~2-4 cores
-(streaming probe: ~0.4-0.6 GB/s aggregate at 1-2 cores, ~2.5-2.8 at 4-8,
-flat beyond). On this VM every 2→8 paired round plateaued at 0.49-0.55
-with steal <2% — three rounds, reproducibly, calm or noisy — which is the
-bandwidth cap, not the engine: a real 4N-executor cluster adds memory
-channels with the cores. 1→4 keeps both legs under the cap so the
-engine's own shuffle/kernel scaling is what gets measured.
-
-Opportunistic launch gate (VERDICT r4 item 1): the round-4 VM's bandwidth
-QoS granted the 4-CPU cpuset as little as 0.72 GB/s aggregate (0.18/core)
-while a single CPU got 17.9 GB/s — in such a window the upper leg CANNOT
-physically express 4x resources and a session measures the hypervisor, not
-the engine. So before launching a session, BOTH cpusets are probed
-(host_probe membw, 3 s each) and the session only starts when the upper
-cpuset's aggregate bandwidth is >= GATE_RATIO x the lower's per-core
-number AND the lower cpuset itself probes a healthy per-core floor (a
-starved lower leg would overstate efficiency — the gate must not open on
-windows that cripple the 1-CPU baseline either), i.e. the host can
-currently grant the upper leg at least ~3x the memory resources of a
-healthy single core. Otherwise sleep and retry (bounded attempts); EVERY
-probe, launched-or-not, is appended to BENCH/work/scaling_probes.jsonl so
-a no-window round is itself documented evidence.
-
-Protocol (fixed in advance — VERDICT r3 item 1, reproducibility):
-- each leg is a FRESH subprocess (a second SparkSession reusing a JVM
-  inherits heap/thread state and measurably degrades);
-- legs alternate back-to-back (1,4,1,4,...) so both levels sample the same
-  jitter windows; REPS=3 interleaved rounds per session (3 × ~20-min rounds
-  at 100k docs is what fits two consecutive sessions in a round-4
-  wall-clock budget on the current VM, which runs ~2-4× slower than the
-  round-3 host — fixed in advance, not tuned after seeing results);
-- the estimator is best-run-per-level over the session's reps (the standard
-  jitter-robust choice on a host whose throughput swings >2× over minutes),
-  EXCLUDING legs flagged for hypervisor steal (>STEAL_FLAG_PCT host-wide
-  /proc/stat steal while the leg ran): steal is the hypervisor's own record
-  of neighbors taking the physical CPU, so a flagged leg's loss is
-  attributable to the host, not the engine — and a session where a whole
-  level is flagged is interference-invalidated rather than passed/failed;
-- EVERY session (pass or fail) is appended to BENCH/work/
-  scaling_sessions.jsonl and republished in BENCH/BASELINE.md, so the
-  claim is auditable across consecutive invocations, not a best window.
+Protocol, fixed in advance:
+- launch gate: a session starts only when a probe shows the upper cpuset
+  granted >= GATE_RATIO x the lower's per-core streaming bandwidth and the
+  lower cpuset above LOWER_FLOOR_GBPS; every probe goes to
+  BENCH/work/scaling_probes.jsonl, and a closed gate records a NO-WINDOW
+  session;
+- pins are selected adaptively right before each leg (select_cpuset);
+- each leg is a fresh subprocess, and legs alternate back-to-back for REPS
+  interleaved rounds so both levels share each jitter window;
+- the estimator is the best run per level among legs not flagged for
+  hypervisor steal (> STEAL_FLAG_PCT); a level whose every leg is flagged
+  interference-invalidates the session;
+- every session (pass or fail) is appended to BENCH/work/
+  scaling_sessions.jsonl and to the committed BENCH/sessions_r5.jsonl, and
+  republished in BENCH/BASELINE.md. The rewrite keeps every BASELINE.md
+  section it does not own (the supplementary protocols' recorded results).
 
 Usage: python scripts/scaling_evidence.py [n_docs]
 Env:   SPARK_GRAFT_SCALING_LEVELS="1,4"  SPARK_GRAFT_SCALING_REPS=3
@@ -62,9 +33,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from host_probe import _read_steal, _run_leg  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SESSIONS = os.path.join(ROOT, "BENCH", "work", "scaling_sessions.jsonl")
@@ -90,29 +65,12 @@ DEFAULT_DOCS = 100_000
 STEAL_FLAG_PCT = 2.0
 
 
-def _read_cpu_ticks() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from the aggregate /proc/stat cpu line."""
-    parts = open("/proc/stat").readline().split()
-    vals = [int(x) for x in parts[1:]]
-    return vals[7], sum(vals)
-
-
 def spread_cpuset(cpus: int, n_cpus: int) -> str:
-    """k pinned CPUs SPREAD across an n_cpus vCPU space at stride n_cpus/k,
-    starting at cpu1 — never compact 0..k-1, never cpu0.
-
-    Measured on this VM (scripts/host_probe.py): a pure-ALU loop scales
-    1→4 at 4.02× under COMPACT pinning (cores are honest), but the memory
-    path is shared between ADJACENT vCPUs — streaming bandwidth at 4
-    compact cores (0-3) reached 6.0 GB/s (2.1×) while the SAME probe at 4
-    spread cores (0,8,16,24) reached 59.7 GB/s in the same minute. A real
-    4N-executor cluster gives every executor its own memory channels, so
-    compact pinning measures a sandbox artifact (one shared path split 4
-    ways), not the engine. cpu0 is excluded outright: it hosts the VM's
-    IRQ/system load and has measured as low as 0.27 GB/s streaming while
-    cpu1-31 measured 6-13 GB/s. Both choices are fixed in advance of any
-    session using them and are level-symmetric (the 1-CPU leg gets the
-    same class of core as each of the 4-CPU leg's)."""
+    """k pinned CPUs spread across an n_cpus vCPU space at stride n_cpus/k,
+    starting at cpu1: never compact 0..k-1, whose adjacent vCPUs share one
+    memory path (4 compact cores streamed 6.0 GB/s where 4 spread cores
+    streamed 59.7 in the same minute), and never cpu0, which hosts the VM's
+    IRQ load (measured as low as 0.27 GB/s)."""
     if cpus >= n_cpus:
         return f"0-{n_cpus - 1}"
     stride = max(1, n_cpus // cpus)
@@ -124,22 +82,10 @@ _N_CPUS = os.cpu_count() or 32
 
 def _membw_probe(cpuset: str, seconds: float = 3.0) -> float:
     """Aggregate streaming bandwidth (GB/s) of the leg's own cpuset, via
-    host_probe's membw worker (one pinned 256-MiB copy loop per cpu).
-
-    Recorded ADJACENT to each leg (3 s, before the leg starts — never
-    concurrent) purely as a host-capability diagnostic: this VM's
-    whole-host bandwidth QoS swings >2× on minute scale while /proc/stat
-    steal reads ~0%, so steal alone cannot tell 'the engine stopped
-    scaling' from 'the hypervisor stopped providing bandwidth to multi-core
-    legs'. The probe makes that distinction falsifiable in the session
-    record. It does NOT feed the pass/fail estimator."""
+    host_probe's membw worker, or -1.0 if the probe fails. Recorded before
+    each leg as a host-capability diagnostic (steal alone cannot show the
+    hypervisor's bandwidth QoS); it does not feed the estimator."""
     try:
-        # scripts/ may not be on sys.path when imported as a module or run
-        # from a different cwd (ADVICE r4): make the sibling import robust
-        # inside the try so a failure returns the documented sentinel.
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from host_probe import _run_leg  # same directory
-
         cpu_list = [int(c) for c in cpuset.split(",")]
         return round(_run_leg("membw", cpu_list, seconds) / 1e9, 2)
     except Exception:
@@ -172,22 +118,11 @@ PROBES_LOG = os.path.join(ROOT, "BENCH", "work", "scaling_probes.jsonl")
 
 
 def _sweep_cpus(seconds: float = 0.8) -> dict[int, float]:
-    """Per-cpu streaming bandwidth (GB/s) across every host cpu.
-
-    Round-5 finding that motivates per-leg ADAPTIVE pin selection: the
-    hypervisor's bandwidth QoS is per-vCPU and NON-STATIONARY — in one
-    minute cpus {0,2,14,22,23,26,30,31} probed 0.45 GB/s while the rest got
-    10-18; minutes later the crippled set had moved, and the round-4 fixed
-    cpuset {1,9,17,25} swung 0.72 → 34.4 GB/s aggregate. No static cpuset
-    survives that; a real cluster scheduler would simply not place
-    executors on a dying node, so the honest single-box emulation is to
-    place each leg on the currently-healthy cores (level-symmetric: BOTH
-    legs get the best cores available at their launch) and log every
-    probe."""
+    """Per-cpu streaming bandwidth (GB/s) across every host cpu. The
+    hypervisor's per-vCPU bandwidth QoS moves minute to minute (one fixed
+    cpuset swung 0.72 → 34.4 GB/s aggregate), so each leg is placed on the
+    cores that are healthy at its launch, level-symmetrically."""
     try:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from host_probe import _run_leg
-
         return {
             c: round(_run_leg("membw", [c], seconds) / 1e9, 2)
             for c in range(_N_CPUS)
@@ -349,9 +284,9 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
     evdir = "/tmp/spark-events"
     os.makedirs(evdir, exist_ok=True)
     ev_before = set(os.listdir(evdir))
-    s0, t0 = _read_cpu_ticks()
+    s0, t0 = _read_steal()
     out = subprocess.run(cmd, env=env, capture_output=True, text=True)
-    s1, t1 = _read_cpu_ticks()
+    s1, t1 = _read_steal()
     ev_new = [f for f in os.listdir(evdir) if f not in ev_before and not f.endswith(".inprogress")]
     if out.returncode != 0:
         sys.stderr.write(f"[leg cpus={cpus}] FAILED rc={out.returncode}\n")
@@ -369,12 +304,26 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
     return r
 
 
+def _snapshot() -> str:
+    return os.path.join(ROOT, "BENCH", "sessions_r5.jsonl")
+
+
+def append_session(record: dict) -> None:
+    """Append one session record to this host's work log AND to the
+    committed snapshot, so a session outlives a wipe of BENCH/work/."""
+    os.makedirs(os.path.dirname(SESSIONS), exist_ok=True)
+    line = json.dumps(record) + "\n"
+    for path in (SESSIONS, _snapshot()):
+        with open(path, "a") as f:
+            f.write(line)
+
+
 def load_sessions() -> list[dict]:
-    """The committed round-5 sessions, then this host's work log, each record
-    once. BENCH/work/ is gitignored, so without the committed snapshot a
-    session on a fresh checkout would republish a history of only itself."""
+    """The committed sessions, then this host's work log, each record once.
+    BENCH/work/ is gitignored, so without the committed snapshot a session
+    on a fresh checkout would republish a history of only itself."""
     lines: list[str] = []
-    for path in (os.path.join(ROOT, "BENCH", "sessions_r5.jsonl"), SESSIONS):
+    for path in (_snapshot(), SESSIONS):
         if os.path.exists(path):
             with open(path) as f:
                 lines += [l.rstrip("\n") for l in f if l.strip()]
@@ -456,24 +405,17 @@ def main() -> None:
             # no open window this invocation: record that explicitly (the
             # probes log already carries every attempt) and exit non-zero so
             # a wrapper can distinguish "no window" from "session failed".
-            os.makedirs(os.path.dirname(SESSIONS), exist_ok=True)
-            with open(SESSIONS, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "ts": time.strftime(
-                                "%Y-%m-%d %H:%M:%S UTC", time.gmtime()
-                            ),
-                            "n_docs": n_docs,
-                            "levels": levels,
-                            "no_window": True,
-                            "gate_attempts": gate_attempts,
-                            "gate_ratio_effective": GATE_RATIO,
-                            "probes_log": "BENCH/work/scaling_probes.jsonl",
-                        }
-                    )
-                    + "\n"
-                )
+            append_session(
+                {
+                    "ts": time.strftime("%Y-%m-%d %H:%M:%S UTC", time.gmtime()),
+                    "n_docs": n_docs,
+                    "levels": levels,
+                    "no_window": True,
+                    "gate_attempts": gate_attempts,
+                    "gate_ratio_effective": GATE_RATIO,
+                    "probes_log": "BENCH/work/scaling_probes.jsonl",
+                }
+            )
             print("[gate] no open window after all attempts; session not launched")
             sys.exit(3)
     os.environ["SPARK_GRAFT_DOCS_PATH"] = pregenerate_docs(n_docs)
@@ -600,10 +542,7 @@ def main() -> None:
         "passed": est["passed"],
         "wall_minutes": round((time.time() - t_start) / 60, 1),
     }
-    os.makedirs(os.path.dirname(SESSIONS), exist_ok=True)
-    with open(SESSIONS, "a") as f:
-        f.write(json.dumps(session) + "\n")
-
+    append_session(session)
     write_baseline_md(sf_dir, levels, factor, runs, results, eff, session)
     print(json.dumps(session))
 
@@ -612,11 +551,30 @@ def main() -> None:
     shutil.rmtree(os.environ["SPARK_GRAFT_DOCS_PATH"], ignore_errors=True)
 
 
+# the level-2 headings write_baseline_md regenerates; every other section
+# of BASELINE.md (the supplementary protocols' recorded results) is kept
+OWNED_SECTIONS = ("## This session", "## Session history")
+
+
+def kept_sections(text: str) -> str:
+    """The text of ``text`` from its first level-2 heading that
+    write_baseline_md does not own, or "" if there is none."""
+    for m in re.finditer(r"^## .*$", text, re.M):
+        if not m.group(0).startswith(OWNED_SECTIONS):
+            return text[m.start():]
+    return ""
+
+
 def write_baseline_md(sf_dir, levels, factor, runs, results, eff, session) -> None:
     history = load_sessions()
     reps = session["reps"]
     n_docs = session["n_docs"]
-    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
+    path = os.path.join(ROOT, "BENCH", "BASELINE.md")
+    kept = ""
+    if os.path.exists(path):
+        with open(path) as f:
+            kept = kept_sections(f.read())
+    with open(path, "w") as f:
         f.write("# BENCH/BASELINE — throughput & N→4N scaling evidence\n\n")
         f.write(
             f"Input: {n_docs} deterministic interleaved docs (seed 42, mega-ways "
@@ -778,6 +736,8 @@ def write_baseline_md(sf_dir, levels, factor, runs, results, eff, session) -> No
                 + " | ".join(f"{r['queries'].get(k, float('nan')):.2f}" for r in results)
                 + " |\n"
             )
+        if kept:
+            f.write("\n" + kept)
 
 
 if __name__ == "__main__":

@@ -1,9 +1,12 @@
 """One scale guard for the entry-query spreads: ``entry_queries._spread``
 round-robins a DataFrame over the session's cores only when it has fewer
-partitions than that. A testdata table is one parquet file (one split), so
-the driver queries still spread; a table that already has enough splits is
-left alone, with no shuffle added. All four spread sites go through it:
-``q_agg_stats``, ``_derived_points``, ``q_minhash_pairs`` and ``q_lsh_ann``."""
+partitions than that. A testdata table is one row group in at most three
+input splits, so the driver queries still spread; a table that already has
+enough splits is left alone, with no shuffle added. All four spread sites go
+through it: ``q_agg_stats``, ``_derived_points``, ``q_minhash_pairs`` and
+``q_lsh_ann``."""
+
+import os
 
 import pytest
 
@@ -78,3 +81,20 @@ def test_every_spread_site_is_guarded(spark, monkeypatch, site, wide):
     )
     plan = _plan(_spread_input(spark, monkeypatch, SITES[site]))
     assert ("RoundRobinPartitioning" in plan) is not wide
+
+
+SF01 = "/root/testdata/sf0.1"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.1 testdata absent")
+@pytest.mark.parametrize("table", sorted(TABLES))
+def test_largest_testdata_tables_still_spread_at_bench_split_size(spark, table):
+    """The guard counts byte-range splits, not row groups. At bench.py's 8 MB
+    splits the one-row-group sf0.1 tables stay below the core count, so each
+    site keeps its exchange."""
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    try:
+        plan = _plan(eq._spread(eq._t(spark, SF01, table)))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert "RoundRobinPartitioning" in plan

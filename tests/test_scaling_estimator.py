@@ -115,3 +115,38 @@ def test_session_history_starts_from_the_committed_snapshot(tmp_path, monkeypatc
     monkeypatch.setattr(scaling_evidence, "ROOT", str(tmp_path))
     monkeypatch.setattr(scaling_evidence, "SESSIONS", str(work))
     assert [s["ts"] for s in scaling_evidence.load_sessions()] == ["a", "b", "c"]
+
+
+def _write_once(tmp_path, monkeypatch) -> str:
+    (tmp_path / "BENCH" / "work").mkdir(parents=True, exist_ok=True)
+    monkeypatch.setattr(scaling_evidence, "ROOT", str(tmp_path))
+    monkeypatch.setattr(scaling_evidence, "SESSIONS", str(tmp_path / "BENCH/work/s.jsonl"))
+    res = {"queries": {"waterway_pipeline": 1.0}, "n_edges": 9, "edges_per_sec": 9.0}
+    res["tile_assign_sec"] = 1.0
+    session = {"reps": 1, "n_docs": 9, "cpusets": {"1": "1", "4": "1,9"}}
+    session["paired_efficiencies"] = [0.9]
+    runs = {c: [{"edges_per_sec": 9.0, "steal_pct": 0.1}] for c in (1, 4)}
+    scaling_evidence.write_baseline_md("sf", [1, 4], 4.0, runs, [res, res], 0.9, session)
+    return (tmp_path / "BENCH" / "BASELINE.md").read_text()
+
+
+def test_baseline_rewrite_keeps_sections_it_does_not_own(tmp_path, monkeypatch):
+    """The supplementary protocols' recorded results outlive a session of
+    the one protocol kept."""
+    supplementary = "## Weak scaling\n\nmedian 0.9\n\n## Host controls\n\n| a | b |\n"
+    (tmp_path / "BENCH").mkdir()
+    (tmp_path / "BENCH" / "BASELINE.md").write_text(
+        "# B\n\n## This session\n\nold\n\n## Session history (ALL)\n\nold rows\n\n" + supplementary
+    )
+    for _ in range(2):
+        text = _write_once(tmp_path, monkeypatch)
+        assert text.endswith("\n" + supplementary)
+        assert text.count("## This session") == 1 and "old rows" not in text
+
+
+def test_new_session_lands_in_the_committed_snapshot(tmp_path, monkeypatch):
+    _write_once(tmp_path, monkeypatch)
+    scaling_evidence.append_session({"ts": "z"})
+    for path in ("sessions_r5.jsonl", "work/s.jsonl"):
+        assert (tmp_path / "BENCH" / path).read_text() == '{"ts": "z"}\n'
+    assert [s["ts"] for s in scaling_evidence.load_sessions()] == ["z"]
