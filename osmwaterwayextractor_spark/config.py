@@ -73,6 +73,12 @@ def stage_knobs(stage: str) -> frozenset[str]:
     return frozenset().union(*(STAGES[s].knobs for s in stage_and_ancestors(stage)))
 
 
+# The stages built from a tiled stage, the tiled pair included: the tile
+# layout keys their checkpoints (step_param_hash), and without a checkpointer
+# plans.pipeline leaves these final tables lazy, with nothing to resume.
+TILE_LAYOUT_STAGES = frozenset(s for s in STAGES if stage_and_ancestors(s) & set(TILED_STAGES))
+
+
 @dataclass(frozen=True)
 class EngineConfig:
     # processing (reference config.yaml:3-48)
@@ -122,7 +128,7 @@ class EngineConfig:
         else:
             keys = tuple(sorted(f.name for f in dataclasses.fields(self)))
         payload = {k: getattr(self, k) for k in keys}
-        if step in STAGES and stage_and_ancestors(step) & set(TILED_STAGES):
+        if step in TILE_LAYOUT_STAGES:
             from .operators.tiles import TILE_PART, TILE_PARTITION_LEVEL
 
             payload["tiled_layout"] = f"{TILE_PART}@level{TILE_PARTITION_LEVEL}"

@@ -550,7 +550,8 @@ def q_knn_top1(spark, sf_dir):
     # The checkpointed blocks (≤1 row per query point, ~40 B each) stay
     # pinned in executor storage for the session — an accepted trade: they
     # are orders of magnitude smaller than the scratch-parquet alternative's
-    # write cost, unlike the data-sized tables dedup._scratch_stage exists for.
+    # write cost, unlike the data-sized tables that
+    # sinks.table_sink.scratch_table exists for.
     top = _ring_top1(q, level).localCheckpoint(eager=True)
     resolved = top.where(F.col("dist_m") <= F.lit(guarantee_m))
     residual_q = q.join(resolved.select("qkey"), "qkey", "left_anti")

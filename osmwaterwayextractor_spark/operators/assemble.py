@@ -37,8 +37,6 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 
-_ASM_SCHEMA = "way_id long, n_refs int, n_resolved long, lats array<double>, lons array<double>"
-
 
 def _shuffle_hash(nodes: DataFrame) -> DataFrame:
     """Pin the refs⋈nodes join to a SHUFFLED hash join with nodes as the
@@ -54,89 +52,6 @@ def _shuffle_hash(nodes: DataFrame) -> DataFrame:
     return nodes.hint("shuffle_hash")
 
 
-def _reassemble_kernel(batches):
-    """Per-partition pass over rows sorted by (way_id, pos): emit one row per
-    way. A way may span multiple Arrow batches — carry state across them."""
-    cur_id = None
-    cur_refs = 0
-    lat_parts: list[np.ndarray] = []
-    lon_parts: list[np.ndarray] = []
-
-    def to_pdf(out):
-        # object dtype keeps empty batches Arrow-convertible to list<double>
-        return pd.DataFrame(
-            {
-                "way_id": pd.Series(out["way_id"], dtype="int64"),
-                "n_refs": pd.Series(out["n_refs"], dtype="int32"),
-                "n_resolved": pd.Series(out["n_resolved"], dtype="int64"),
-                "lats": pd.Series(out["lats"], dtype=object),
-                "lons": pd.Series(out["lons"], dtype=object),
-            }
-        )
-
-    def flush(out):
-        if cur_id is None:
-            return
-        la = np.concatenate(lat_parts) if len(lat_parts) > 1 else lat_parts[0]
-        lo = np.concatenate(lon_parts) if len(lon_parts) > 1 else lon_parts[0]
-        out["way_id"].append(cur_id)
-        out["n_refs"].append(cur_refs)
-        out["n_resolved"].append(la.shape[0])
-        out["lats"].append(la)
-        out["lons"].append(lo)
-
-    for pdf in batches:
-        out = {"way_id": [], "n_refs": [], "n_resolved": [], "lats": [], "lons": []}
-        wid = pdf["way_id"].to_numpy()
-        la = pdf["lat"].to_numpy(dtype=np.float64)
-        lo = pdf["lon"].to_numpy(dtype=np.float64)
-        nr = pdf["n_refs"].to_numpy()
-        if wid.shape[0] == 0:
-            yield to_pdf(out)
-            continue
-        # boundaries of way runs inside this batch
-        starts = np.concatenate([[0], np.nonzero(wid[1:] != wid[:-1])[0] + 1])
-        ends = np.concatenate([starts[1:], [wid.shape[0]]])
-        for s, e in zip(starts, ends):
-            w = int(wid[s])
-            if w != cur_id:
-                flush(out)
-                cur_id, cur_refs = w, int(nr[s])
-                lat_parts, lon_parts = [], []
-            lat_parts.append(la[s:e])
-            lon_parts.append(lo[s:e])
-        yield to_pdf(out)
-    out = {"way_id": [], "n_refs": [], "n_resolved": [], "lats": [], "lons": []}
-    flush(out)
-    yield to_pdf(out)
-
-
-def assemble_geometries(
-    ways: DataFrame, nodes: DataFrame, config: EngineConfig
-) -> DataFrame:
-    """(way_id, refs, tags) ⋈ (node_id, lat, lon) → (way_id, lats, lons, tags).
-
-    Output arrays are ordered by ref position; ways with missing refs or
-    fewer than 2 resolved coordinates are dropped.
-    """
-    refs = ways.select(
-        "way_id",
-        F.size("refs").alias("n_refs"),
-        F.posexplode("refs").alias("pos", "node_id"),
-    )
-    resolved = refs.join(_shuffle_hash(nodes), "node_id", "inner").select(
-        "way_id", "n_refs", "pos", "lat", "lon"
-    )
-    ordered = resolved.repartition("way_id").sortWithinPartitions("way_id", "pos")
-    geoms = (
-        ordered.mapInPandas(_reassemble_kernel, schema=_ASM_SCHEMA)
-        .where(F.col("n_resolved") == F.col("n_refs"))  # drop partial ways
-        .where(F.size("lats") >= 2)
-        .select("way_id", "lats", "lons")
-    )
-    return geoms.join(ways.select("way_id", "tags"), "way_id", "inner")
-
-
 def assemble_clean_simplify(
     ways: DataFrame, nodes: DataFrame, config: EngineConfig
 ) -> DataFrame:
@@ -145,7 +60,7 @@ def assemble_clean_simplify(
 
     Semantically identical to
     ``clean_and_simplify(assemble_geometries(ways, nodes, cfg), cfg)`` —
-    the standalone operators remain the oracle pair, pinned by
+    that unfused pair is the oracle in tests/unfused_assembly.py, pinned by
     test_fused_assembly_matches_two_pass — but the assembled coordinate
     arrays never round-trip JVM→Arrow→pandas→Arrow→JVM between the two
     kernels. The 'simplified' stage is the second-largest of the pipeline

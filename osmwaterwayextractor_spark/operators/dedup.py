@@ -22,27 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks.table_sink import scratch_dir, scratch_table
+
 # Mersenne prime for universal hashing; fits comfortably in long arithmetic
 _MERSENNE = (1 << 31) - 1
-
-
-def _scratch_stage(df: DataFrame, name: str) -> DataFrame:
-    """Materialize ``df`` to scratch parquet under ``spark.local.dir`` and
-    read it back. Used where a frame feeds several downstream joins:
-    ``.cache()`` would pin it as deserialized JVM rows in executor storage
-    for the session (the shingle table is 5-10× the corpus in rows — the
-    exact storage-thrash pathology docs/SCALE.md documents), while a snappy
-    parquet round-trip costs one write and keeps every re-read a pruned
-    columnar scan. The scratch path is deterministic per-name and
-    mode=overwrite, so repeated calls reuse (not leak) the same directory;
-    spark.local.dir is session-scratch, reclaimed with the session."""
-    spark = df.sparkSession
-    import os
-
-    base = spark.conf.get("spark.local.dir", "/tmp").split(",")[0]
-    path = os.path.join(base, f"dedup-scratch-{name}")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def _perm_params(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -132,8 +115,10 @@ def minhash_lsh_pairs(
     """
     rows = num_perm // bands
     # read 4× downstream (signatures, sizes, both sides of the verify join)
-    # — scratch parquet, never executor-storage .cache()
-    sh = _scratch_stage(word_shingles(docs, text_col, shingle_n), "minhash-shingles")
+    # — a scratch table in this call's own directory, never executor-storage
+    # .cache(): the shingle table is 5-10× the corpus in rows (docs/SCALE.md)
+    sh = word_shingles(docs, text_col, shingle_n)
+    sh = scratch_table(sh, scratch_dir(docs.sparkSession), "minhash-shingles")
     sig = minhash_signatures(sh, num_perm, seed)
     # one SQL string for the whole band array (same tree as the old stacked
     # struct/hash/slice Columns; SQL hash() IS F.hash, Murmur3 seed 42)

@@ -1,7 +1,7 @@
 """Steps 1 / 1.5 / 1.75 — coordinate cleaning, simplification, intersections.
 
-- ``clean_and_simplify``: one narrow Arrow stage per way (consecutive-dup
-  removal, reference :1586-1589, + Douglas-Peucker, :1710-1749). No shuffle.
+- ``clean_simplify_concat``: consecutive-dup removal (reference :1586-1589)
+  + Douglas-Peucker (:1710-1749), the fused assembly kernel's NumPy core.
 - ``detect_intersections`` (J5+F5): ways → segments (pure Catalyst) →
   bbox-cover cell assignment (pure Catalyst ``sequence``/bit-ops explodes) →
   cell self-join with ``way_a < way_b`` → exact vectorized segment math in an
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions import cells_sql
-from ..functions.geometry import M_TO_DEG, insert_points_on_line, segment_intersections, simplify_dp
+from ..functions.geometry import M_TO_DEG, insert_points_on_line, segment_intersections
 from ..functions.tiling import cell_width_deg
 
 WAYS_SCHEMA = "way_id long, lats array<double>, lons array<double>, tags map<string,string>"
@@ -43,26 +43,6 @@ WAYS_SCHEMA = "way_id long, lats array<double>, lons array<double>, tags map<str
 INTERSECT_CELL_LEVEL = 16
 
 
-def clean_simplify_arrays(la, lo, simplify_on: bool, tol_deg: float):
-    """P2-P4 + F4 on one way's coordinate arrays: consecutive-dup removal,
-    optional DP simplify, <2-vertex drop. Returns (la, lo) or None when the
-    way drops. Shared by the standalone clean_and_simplify pass and the
-    fused assembly kernel (operators.assemble.assemble_clean_simplify)."""
-    if la.shape[0] < 2:
-        return None
-    same = (la[1:] == la[:-1]) & (lo[1:] == lo[:-1])
-    keep = np.concatenate([[True], ~same])
-    la, lo = la[keep], lo[keep]
-    if la.shape[0] < 2:
-        return None
-    if simplify_on:
-        mask = simplify_dp(la, lo, tol_deg)
-        la, lo = la[mask], lo[mask]
-        if la.shape[0] < 2:
-            return None
-    return la, lo
-
-
 def clean_simplify_concat(
     la: np.ndarray,
     lo: np.ndarray,
@@ -70,17 +50,18 @@ def clean_simplify_concat(
     simplify_on: bool,
     tol_deg: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Batch twin of ``clean_simplify_arrays`` over W concatenated ways.
+    """P2-P4 + F4 (consecutive-dup removal, optional DP simplify, <2-vertex
+    drop) over W concatenated ways.
 
     ``offsets`` (len W+1) bounds way w as [offsets[w], offsets[w+1]); every
     way must have ≥1 vertex. Returns (la_out, lo_out, out_offsets,
     way_keep_mask) where ``way_keep_mask`` (len W) marks ways that survive
-    the <2-vertex drops. Same per-way semantics as the scalar function —
-    consecutive-dup removal, optional DP simplify (``simplify_dp_batch``,
-    bit-identical masks), endpoint preservation — but every step is one
-    whole-batch NumPy pass instead of a per-way Python loop (round-6
-    profile: the per-way loop spent ~8 µs/vertex of small-slice overhead,
-    92% of the fused assembly kernel; guide §4.2)."""
+    the <2-vertex drops. Same per-way semantics as the scalar oracle
+    ``clean_simplify_arrays`` (tests/unfused_assembly.py) — DP masks from
+    ``simplify_dp_batch`` are bit-identical, endpoints preserved — but
+    every step is one whole-batch NumPy pass instead of a per-way Python
+    loop (round-6 profile: the per-way loop spent ~8 µs/vertex of
+    small-slice overhead, 92% of the fused assembly kernel; guide §4.2)."""
     from ..functions.geometry import simplify_dp_batch
 
     la = np.ascontiguousarray(la, dtype=np.float64)
@@ -111,34 +92,6 @@ def clean_simplify_concat(
     # DP keeps both endpoints, so no way can fall below 2 vertices here —
     # the scalar kernel's post-simplify <2 drop is unreachable for n ≥ 2
     return la2[m], lo2[m], offs3, way_ok
-
-
-def clean_and_simplify(ways: DataFrame, config: EngineConfig) -> DataFrame:
-    """Consecutive-dup removal + optional DP simplify, one Arrow pass."""
-    simplify_on = config.enable_geometry_simplification
-    tol = config.simplification_tolerance_m * M_TO_DEG
-
-    def kernel(batches):
-        for pdf in batches:
-            out_rows = {"way_id": [], "lats": [], "lons": [], "tags": []}
-            for way_id, lats, lons, tags in zip(
-                pdf["way_id"], pdf["lats"], pdf["lons"], pdf["tags"]
-            ):
-                r = clean_simplify_arrays(
-                    np.asarray(lats, dtype=np.float64),
-                    np.asarray(lons, dtype=np.float64),
-                    simplify_on,
-                    tol,
-                )
-                if r is None:
-                    continue
-                out_rows["way_id"].append(way_id)
-                out_rows["lats"].append(r[0])
-                out_rows["lons"].append(r[1])
-                out_rows["tags"].append(tags)
-            yield pd.DataFrame(out_rows)
-
-    return ways.mapInPandas(kernel, schema=WAYS_SCHEMA)
 
 
 def _segments(ways: DataFrame) -> DataFrame:
@@ -318,13 +271,13 @@ def _covered_for_join(ways: DataFrame, config: EngineConfig) -> DataFrame:
 
 def _covered_raw(ways: DataFrame) -> DataFrame:
     """Segments + base-level pad-0 cover, before the dense-cell resplit —
-    the scan+explode part of the covered lineage. Split out so the pipeline
-    can materialize it ONCE: _resplit_dense_cells consumes its input three
-    times (per-cell counts, the kept branch, the re-covered dense branch),
-    and when the input is this explode lineage all three consumers re-run
-    it (round-5 standalone profile at 100k docs, 1 pinned CPU: the
-    dense-counts pass alone was 12.2 s of the 51 s stage). From a parquet
-    round-trip the counts pass becomes a cell-column-pruned columnar scan."""
+    the scan+explode part of the covered lineage, kept apart so a test can
+    measure the per-cell fan-out the resplit cuts. The pipeline cuts only
+    the final covered table (``WaterwayEngine._covered_stage``): the
+    resplit's three consumers (per-cell counts, kept branch, re-covered
+    dense branch) re-run this JVM lineage inside that one write job, which
+    costs less than a raw round-trip (round-6 A/B at 100k docs: 2313 → 1403
+    task-s per pass; OPTIMIZATION_r06.md)."""
     segs = _segments(ways)
     return cells_sql.explode_cover(segs, *_seg_bbox(0.0), INTERSECT_CELL_LEVEL).select(
         "cell", "way_id", "lat1", "lon1", "lat2", "lon2"
@@ -332,8 +285,7 @@ def _covered_raw(ways: DataFrame) -> DataFrame:
 
 
 def _covered_resplit(raw: DataFrame, config: EngineConfig) -> DataFrame:
-    """Dense-cell resplit + fixed projection over a (materialized or inline)
-    _covered_raw table."""
+    """Dense-cell resplit + fixed projection over a _covered_raw table."""
     return _resplit_dense_cells(
         raw, INTERSECT_CELL_LEVEL, config.intersect_cell_cap, 0.0
     ).select("cell", "way_id", "lat1", "lon1", "lat2", "lon2")

@@ -10,7 +10,8 @@ The stages and their parents are ``config.STAGES``: each builder takes its
 parents' outputs. Each stage can checkpoint to parquet keyed by the stage's
 parameter-subset hash (reference cache semantics :1441-1515, :3048-3055)
 with per-partition lineage manifests; reruns skip completed stages
-(plans.checkpoint).
+(plans.checkpoint); without one, through a scratch table in the build's own
+directory (``sinks.table_sink.scratch_table``).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from urllib.request import url2pathname
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import STAGES, TILED_STAGES, EngineConfig
+from ..config import STAGES, TILE_LAYOUT_STAGES, TILED_STAGES, EngineConfig
 from ..operators.assemble import assemble_clean_simplify
 from ..operators.cluster import snap_map
 from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
@@ -37,12 +38,8 @@ from ..operators.tiles import (
     with_edge_cells,
     with_node_cells,
 )
+from ..sinks.table_sink import scratch_dir, scratch_table
 from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
-
-# the final tables: nothing in the build reads them back, so without a
-# checkpointer they stay lazy (a barrier would serialize the tail for no
-# reuse gain); with one, the tiled pair lands partitioned by tile
-_TAIL = (*TILED_STAGES, "tiles")
 
 # what SparkContext.setJobGroup sets: a stage run on a worker thread joins
 # the caller's group
@@ -109,34 +106,36 @@ class WaterwayEngine:
     def __init__(self, config: Optional[EngineConfig] = None, checkpointer=None):
         self.config = config or EngineConfig()
         self.checkpointer = checkpointer
-        self._scratch: Optional[str] = None
 
     def _stage(
-        self, name: str, build: Callable[..., DataFrame], outs: dict[str, DataFrame]
+        self,
+        name: str,
+        build: Callable[..., DataFrame],
+        outs: dict[str, DataFrame],
+        scratch: str,
     ) -> None:
-        """Build and materialize one stage boundary under its label, and
-        record its output in ``outs``.
+        """Build and cut one stage under its label, and record its output in
+        ``outs``.
 
         ``build`` takes the outputs of the stage's parents in ``STAGES``, in
         declared order, so a builder can read nothing the table does not
         declare. It is called inside the label, so the eager jobs a builder
         runs (snap_map's block-kernel checkpoint and violation probe, the
-        covered materialization) carry the stage's name. A stage the
-        checkpointer already holds is read back without calling ``build``.
-        The tail stages stay lazy without a checkpointer; with one, the tiled
-        pair lands partitioned by ``TILE_PART`` (a coarse ancestor of its
-        coarsest cell), sorted by that cell, and its builder, a cheap
-        projection, is always called, because a partial table resumes per
-        partition. The partition column is dropped from the read-back, so a
-        checkpointed build returns the columns of a lazy one."""
+        covered cut) carry the stage's name. Without a checkpointer the cut
+        is a table in the build's ``scratch`` directory, and
+        ``TILE_LAYOUT_STAGES`` stay lazy. A stage the checkpointer holds is
+        read back without calling ``build``, except the tiled pair: it lands
+        partitioned by ``TILE_PART`` (a coarse ancestor of its coarsest cell)
+        and resumes per partition, so its builder, a cheap projection, is
+        always called. The partition column is dropped from the read-back."""
         parents = [outs[p] for p in STAGES[name].parents]
         ck = self.checkpointer
-        if ck is None and name in _TAIL:
+        if ck is None and name in TILE_LAYOUT_STAGES:
             outs[name] = build(*parents)
             return
         with _stage_label(name):
             if ck is None:
-                out = self._ephemeral_stage(name, build(*parents))
+                out = scratch_table(build(*parents), scratch, name)
             elif name in TILED_STAGES:
                 df = build(*parents).withColumn(TILE_PART, tile_part_col(self.config))
                 cell = f"cell_r{min(self.config.tile_resolutions)}"
@@ -147,75 +146,28 @@ class WaterwayEngine:
                 out = ck.materialize(name, self.config, lambda: build(*parents))
         outs[name] = out
 
-    def _ephemeral_stage(self, name: str, df: DataFrame) -> DataFrame:
-        """Materialize a stage boundary without the durable Checkpointer.
+    def _covered_stage(self, simplified: DataFrame, scratch: str) -> DataFrame:
+        """Cut the covered-segment table once for the intersections stage
+        (detect self-join sides + insert candidate join all scan it).
 
-        Plan-truncation is mandatory either way: the pipeline's logical plan
-        is deep, and every downstream action would re-analyze/optimize the
-        whole accumulated tree on the driver (seconds per action).
-
-        The boundary is a snappy-parquet round-trip in a scratch dir (tmpfs
-        when spark.local.dir points there): columnar, serialized, OFF the
-        GC's live set (docs/SCALE.md records why it replaced
-        ``localCheckpoint``)."""
-        import uuid
-
-        spark = df.sparkSession
-        if self._scratch is None:
-            import atexit
-            import shutil
-
-            base = spark.conf.get("spark.local.dir", "/tmp")
-            self._scratch = os.path.join(
-                base.split(",")[0], f"osmwwe-stages-{uuid.uuid4().hex[:8]}"
-            )
-            # scratch may live on tmpfs (RAM): reclaim it at process exit
-            atexit.register(shutil.rmtree, self._scratch, ignore_errors=True)
-        path = os.path.join(self._scratch, name)
-        # 8 MiB row groups: parquet scans split at row-group granularity, and
-        # a stage written from a 16-partition shuffle with skewed/empty
-        # partitions otherwise yields a handful of single-row-group files —
-        # downstream scans then run 6-9 tasks and idle most cores of a
-        # multi-core run in the last wave (round-5 event-log audit: stages
-        # with 6 tasks at 0.26 utilization). 8 MiB also lets a scan split
-        # mega-way row clusters (a 20k-vertex row is ~320 KB — a coarse row
-        # group packs enough of them that one split dominates the stage).
-        # Finer row groups cost ~nothing on scratch (snappy ratio unchanged
-        # at this size) and restore scan parallelism no matter how few files
-        # a stage produced.
-        df.write.mode("overwrite").option(
-            "parquet.block.size", str(8 * 1024 * 1024)
-        ).parquet(path)
-        return spark.read.parquet(path)
-
-    def _covered_stage(self, simplified: DataFrame) -> DataFrame:
-        """Materialize the covered-segment table once for the intersections
-        stage (detect self-join sides + insert candidate join all scan it).
-
-        Ephemeral scratch, never the durable Checkpointer: this is an
-        exchange-grade internal artifact, not a resumable pipeline stage —
-        checkpointing it would change the stage manifest surface. Each
-        consumer's read is a pruned columnar scan (insert reads only
-        (cell, way_id)), which is exactly the reuse Catalyst's
-        ReusedExchange could not deliver across differently-pruned
-        subtrees.
-
-        ONE materialization: the resplit's three consumers (per-cell
-        counts, kept branch, re-covered dense branch) re-run the inline
-        scan+explode lineage — pure JVM codegen over the simplified
-        parquet — inside a single write job. Round 5 materialized the raw
-        cover first so those consumers could read it back, but the 12M-row
-        raw parquet round-trip costs more than the recompute it saves
-        (round-6 event-log A/B at 100k docs: 2313 → 1403 task-s per pass,
-        -39%; guide §1.2 — recompute cheap narrow lineage rather than
-        persist a wide intermediate)."""
+        A scratch table under the ``covered`` label, never the durable
+        Checkpointer: this is an exchange-grade internal artifact, not a
+        resumable pipeline stage — checkpointing it would change the stage
+        manifest surface. Each consumer's read is a pruned columnar scan
+        (insert reads only (cell, way_id)), which is exactly the reuse
+        Catalyst's ReusedExchange could not deliver across differently-pruned
+        subtrees. It is the stage's only cut: ``geometry_ops._covered_raw``
+        says why the raw cover beneath it is recomputed instead."""
         from ..operators.geometry_ops import _covered_for_join
 
         with _stage_label("covered"):
-            return self._ephemeral_stage("covered", _covered_for_join(simplified, self.config))
+            return scratch_table(_covered_for_join(simplified, self.config), scratch, "covered")
 
     def _stages_concurrent(
-        self, named: list[tuple[str, Callable[..., DataFrame]]], outs: dict[str, DataFrame]
+        self,
+        named: list[tuple[str, Callable[..., DataFrame]]],
+        outs: dict[str, DataFrame],
+        scratch: str,
     ) -> None:
         """Materialize independent stages from concurrent driver threads so
         their Spark jobs overlap (the round-1 pipeline ran ~40 jobs strictly
@@ -240,7 +192,7 @@ class WaterwayEngine:
             for k, v in props.items():
                 sc.setLocalProperty(k, v)
             try:
-                self._stage(name, build, outs)
+                self._stage(name, build, outs, scratch)
             finally:
                 for k in props:
                     sc.setLocalProperty(k, None)
@@ -254,11 +206,13 @@ class WaterwayEngine:
         cfg = self.config
         # each stage's output by name; a builder takes its STAGES parents
         outs: dict[str, DataFrame] = {}
+        # this build's scratch tables: a later build never overwrites them
+        scratch = scratch_dir(spark)
 
         # ONE span scan parses nodes AND ways (union schema); it materializes
         # once and the assembly's three consumers (refs, tags, node coords)
         # read it back as cheap checkpoint-scan filters.
-        self._stage("parsed", lambda: parse_osm(docs, cfg), outs)
+        self._stage("parsed", lambda: parse_osm(docs, cfg), outs, scratch)
         # assembly + clean + simplify as ONE Arrow pass: the assembled
         # vertex arrays never round-trip JVM↔Python between kernels
         self._stage(
@@ -267,30 +221,31 @@ class WaterwayEngine:
                 ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
             ),
             outs,
+            scratch,
         )
 
         def intersect(simplified: DataFrame) -> DataFrame:
             # detect feeds insert lazily: insert's left join passes ways with
             # no candidate points through untouched, so the empty-point case
             # needs no isEmpty() driver probe. The covered-segment table is
-            # materialized ONCE and fed to both operators: across the
+            # cut ONCE and fed to both operators: across the
             # composed plan Catalyst's column pruning otherwise builds a
             # second, narrower covered exchange and re-runs the whole
             # scan+explode lineage (round-5 profile: duplicate 52-CPU-s
             # build at 100k docs).
-            covered = self._covered_stage(simplified)
+            covered = self._covered_stage(simplified, scratch)
             points = detect_intersections(simplified, cfg, covered=covered)
             return insert_intersections(simplified, points, cfg, covered=covered)
 
         if cfg.enable_intersection_detection:
-            self._stage("intersections", intersect, outs)
+            self._stage("intersections", intersect, outs, scratch)
         else:
             outs["intersections"] = outs["simplified"]
 
         # the snap domain is consumed 3× inside snap_map (max-lat bound, the
         # block kernel, the final mapping join) — materialize it once instead
         # of recomputing the vertex groupBy per consumer
-        self._stage("clustering_domain", clustering_domain_fast, outs)
+        self._stage("clustering_domain", clustering_domain_fast, outs, scratch)
 
         def cluster(domain: DataFrame) -> DataFrame:
             # max|lat| only bounds the block-grid level (any upper bound
@@ -301,7 +256,7 @@ class WaterwayEngine:
             where = os.path.dirname(url2pathname(urlparse(files[0]).path)) if files else None
             return snap_map(domain, cfg, spark, max_abs_lat=_parquet_max_abs(where, "lat"))
 
-        self._stage("clustering", cluster, outs)
+        self._stage("clustering", cluster, outs, scratch)
 
         # edges and nodes are independent given (intersected, snap) — overlap
         self._stages_concurrent(
@@ -310,6 +265,7 @@ class WaterwayEngine:
                 ("nodes", lambda snap: build_nodes(snap, cfg)),
             ],
             outs,
+            scratch,
         )
         # `covering` already comes from build_edges' fused NumPy kernel. With
         # a checkpointer the tiled pair lands Iceberg-style, partitioned by a
@@ -322,8 +278,9 @@ class WaterwayEngine:
                 ("edges_tiled", lambda edges: with_edge_cells(edges, cfg)),
             ],
             outs,
+            scratch,
         )
-        self._stage("tiles", lambda edges_t: channel_density_rollup(edges_t, cfg), outs)
+        self._stage("tiles", lambda edges_t: channel_density_rollup(edges_t, cfg), outs, scratch)
         return GraphResult(
             nodes=outs["nodes_tiled"], edges=outs["edges_tiled"], tile_rollup=outs["tiles"]
         )

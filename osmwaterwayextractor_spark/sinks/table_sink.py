@@ -16,15 +16,28 @@ checkpoint logic touches the storage format directly:
 
 ``plans.checkpoint.Checkpointer.materialize_partitioned`` accepts any object
 with this surface via its ``sink`` parameter.
+
+``ParquetTableSink`` also writes every scratch table (``scratch_table``), so
+it is the one writer of every stage table.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Parquet scans split at row-group granularity: a stage written from a
+# skewed shuffle otherwise yields a few single-row-group files, and its
+# scans run 6-9 tasks at 0.26 utilization (round-5 event-log audit) or one
+# split holds a cluster of mega-way rows (~320 KB per 20k vertices). Finer
+# row groups cost about nothing (snappy ratio unchanged) and key no stage
+# hash: they change no row.
+ROW_GROUP_BYTES = 8 * 1024 * 1024
 
 
 class ParquetTableSink:
@@ -33,17 +46,17 @@ class ParquetTableSink:
     def __init__(self, location: str):
         self.location = location
 
-    def append(self, df: DataFrame, partition_col: Optional[str] = None) -> None:
-        w = df.write.mode("append")
+    def _write(self, df: DataFrame, mode: str, partition_col: Optional[str]) -> None:
+        w = df.write.mode(mode).option("parquet.block.size", str(ROW_GROUP_BYTES))
         if partition_col:
             w = w.partitionBy(partition_col)
         w.parquet(self.location)
 
+    def append(self, df: DataFrame, partition_col: Optional[str] = None) -> None:
+        self._write(df, "append", partition_col)
+
     def overwrite(self, df: DataFrame, partition_col: Optional[str] = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_col:
-            w = w.partitionBy(partition_col)
-        w.parquet(self.location)
+        self._write(df, "overwrite", partition_col)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.location)
@@ -92,6 +105,25 @@ class ParquetTableSink:
                     }
                 )
         return out
+
+
+def scratch_dir(spark: SparkSession) -> str:
+    """A fresh ``osmwwe-stages-<id>`` path under the first ``spark.local.dir``
+    entry for one call's scratch tables, so a later call cannot overwrite
+    what an earlier lazy result reads; removed at process exit (tmpfs)."""
+    base = spark.conf.get("spark.local.dir", "/tmp").split(",")[0]
+    path = os.path.join(base, f"osmwwe-stages-{uuid.uuid4().hex[:8]}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def scratch_table(df: DataFrame, scratch: str, name: str) -> DataFrame:
+    """Write ``df`` as table ``name`` under ``scratch`` and read it back: a
+    plan cut that keeps the rows serialized, off executor storage and the
+    GC's live set (docs/SCALE.md: why not ``localCheckpoint``/``.cache()``)."""
+    sink = ParquetTableSink(os.path.join(scratch, name))
+    sink.overwrite(df)
+    return sink.read(df.sparkSession)
 
 
 class IcebergTableSink:

@@ -1,8 +1,9 @@
 """Capture the intersections-stage formatted plans (OPTIMIZATION_r06 §6).
 
 Composes detect_intersections + insert_intersections exactly as the
-pipeline does (simplified + covered read back from 8 MiB-row-group scratch
-parquet) and writes the `.explain("formatted")` output to
+pipeline does (simplified + covered read back from parquet written by the
+engine's one stage-table writer, ParquetTableSink) and writes the
+`.explain("formatted")` output to
 
   plans/r06/intersections_detect_{before,after}.txt
   plans/r06/intersections_insert_{before,after}.txt
@@ -55,13 +56,13 @@ def main() -> None:
     spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
 
     from osmwaterwayextractor_spark.config import EngineConfig
-    from osmwaterwayextractor_spark.operators.assemble import assemble_geometries
+    from osmwaterwayextractor_spark.operators.assemble import assemble_clean_simplify
     from osmwaterwayextractor_spark.operators.geometry_ops import (
         _covered_for_join,
-        clean_and_simplify,
         detect_intersections,
         insert_intersections,
     )
+    from osmwaterwayextractor_spark.sinks.table_sink import ParquetTableSink
     from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe
     from osmwaterwayextractor_spark.sources.parse import (
         nodes_from_parsed,
@@ -78,22 +79,20 @@ def main() -> None:
     plan_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(plan_dir, exist_ok=True)
 
-    def stage_write(df, path):
+    def cached(df, path):
+        """``df`` as the parquet table at ``path``, written on the first run."""
+        sink = ParquetTableSink(path)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            df.write.mode("overwrite").option(
-                "parquet.block.size", str(8 * 1024 * 1024)
-            ).parquet(path)
-        return spark.read.parquet(path)
+            sink.overwrite(df)
+        return sink.read(spark)
 
     if not os.path.exists(os.path.join(simplified_path, "_SUCCESS")):
-        docs = stage_write(docs_dataframe(spark, n_docs, params), f"{scratch}-docs")
-        parsed = stage_write(parse_osm(docs, cfg), f"{scratch}-parsed")
-        assembled = assemble_geometries(
-            ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
-        )
-        stage_write(clean_and_simplify(assembled, cfg), simplified_path)
+        docs = cached(docs_dataframe(spark, n_docs, params), f"{scratch}-docs")
+        parsed = cached(parse_osm(docs, cfg), f"{scratch}-parsed")
+        ways, nodes = ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed)
+        cached(assemble_clean_simplify(ways, nodes, cfg), simplified_path)
     simplified = spark.read.parquet(simplified_path)
-    covered = stage_write(_covered_for_join(simplified, cfg), covered_path)
+    covered = cached(_covered_for_join(simplified, cfg), covered_path)
 
     # Patch the CONCRETE class (Spark 4 instances are
     # pyspark.sql.classic.dataframe.DataFrame, which overrides the abstract

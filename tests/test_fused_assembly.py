@@ -3,12 +3,10 @@ clean_and_simplify(assemble_geometries(...)) composition exactly — same
 ways kept/dropped (partial refs, <2 vertices, consecutive-dup collapse,
 DP simplification) and bit-identical coordinate arrays."""
 
+from unfused_assembly import assemble_geometries, clean_and_simplify
+
 from osmwaterwayextractor_spark.config import EngineConfig
-from osmwaterwayextractor_spark.operators.assemble import (
-    assemble_clean_simplify,
-    assemble_geometries,
-)
-from osmwaterwayextractor_spark.operators.geometry_ops import clean_and_simplify
+from osmwaterwayextractor_spark.operators.assemble import assemble_clean_simplify
 from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe
 from osmwaterwayextractor_spark.sources.parse import (
     nodes_from_parsed,

@@ -20,15 +20,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from unfused_assembly import clean_simplify_arrays
+
 from osmwaterwayextractor_spark.functions.geodesy import geodesic_m
 from osmwaterwayextractor_spark.functions.geometry import (
     simplify_dp,
     simplify_dp_batch,
 )
-from osmwaterwayextractor_spark.operators.geometry_ops import (
-    clean_simplify_arrays,
-    clean_simplify_concat,
-)
+from osmwaterwayextractor_spark.operators.geometry_ops import clean_simplify_concat
 
 TOL = 5.0 * 0.00001
 

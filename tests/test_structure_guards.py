@@ -1,9 +1,13 @@
 """Structure guards, no Spark. The engine package reads no ``OSMWWE_*``
 env var and ``operators/cluster.py`` holds only the block kernel (its
-cross-checks live in ``tests/test_cluster_paths.py``). Every tooling script
-compiles, and every import of a sibling script, function-local ones
-included, names a file under ``scripts/``: a plain import test would miss a
-dangling function-local import until the function runs."""
+cross-checks live in ``tests/test_cluster_paths.py``). ``operators/`` holds
+no unfused assembly pass (its oracle lives in ``tests/unfused_assembly.py``).
+Every stage table goes through ``sinks.table_sink.ParquetTableSink``, the
+one place that sets the row-group size, into a scratch directory per call.
+Every tooling script compiles, and every import of a sibling script,
+function-local ones included, names a file under ``scripts/``: a plain
+import test would miss a dangling function-local import until the function
+runs."""
 
 import ast
 import importlib.machinery
@@ -24,6 +28,16 @@ CROSS_CHECK_NAMES = {
     "DRIVER_CC_MAX_PAIRS",
 }
 
+UNFUSED_ASSEMBLY_NAMES = {
+    "assemble_geometries",
+    "_reassemble_kernel",
+    "clean_and_simplify",
+    "clean_simplify_arrays",
+}
+
+# the per-caller stage writers and the pipeline's hand-kept tail list
+RETIRED_STAGE_WRITER_NAMES = {"_ephemeral_stage", "_scratch_stage", "_TAIL"}
+
 
 def _package_modules():
     for d, _, files in os.walk(PKG):
@@ -41,8 +55,9 @@ def test_package_reads_no_osmwwe_env_var():
     assert hits == []
 
 
-def test_cluster_module_holds_no_cross_check_implementation():
-    path = os.path.join(PKG, "operators", "cluster.py")
+def _defined_names(path):
+    """Every function, class and assigned plain name ``path`` defines, at
+    any depth."""
     tree = ast.parse(open(path, encoding="utf-8").read())
     defined = set()
     for node in ast.walk(tree):
@@ -51,7 +66,42 @@ def test_cluster_module_holds_no_cross_check_implementation():
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             defined |= {t.id for t in targets if isinstance(t, ast.Name)}
-    assert defined & CROSS_CHECK_NAMES == set()
+    return defined
+
+
+def test_cluster_module_holds_no_cross_check_implementation():
+    path = os.path.join(PKG, "operators", "cluster.py")
+    assert _defined_names(path) & CROSS_CHECK_NAMES == set()
+
+
+def test_operators_hold_no_unfused_assembly_pass():
+    hits = {
+        os.path.relpath(p, ROOT): _defined_names(p) & UNFUSED_ASSEMBLY_NAMES
+        for p in _package_modules()
+        if os.path.dirname(p) == os.path.join(PKG, "operators")
+    }
+    assert {p: names for p, names in hits.items() if names} == {}
+
+
+def test_only_the_table_sink_sets_the_row_group_size():
+    counts = {
+        os.path.relpath(p, ROOT): open(p, encoding="utf-8").read().count("parquet.block.size")
+        for p in _package_modules()
+    }
+    assert {p: n for p, n in counts.items() if n} == {
+        os.path.join("osmwaterwayextractor_spark", "sinks", "table_sink.py"): 1
+    }
+
+
+def test_no_module_keeps_its_own_stage_writer_or_scratch_path():
+    hits = {}
+    for p in _package_modules():
+        names = _defined_names(p) & RETIRED_STAGE_WRITER_NAMES
+        if "dedup-scratch" in open(p, encoding="utf-8").read():
+            names.add("dedup-scratch")
+        if names:
+            hits[os.path.relpath(p, ROOT)] = names
+    assert hits == {}
 
 
 def _tooling_files():
