@@ -149,6 +149,7 @@ def run_bench(
     from osmwaterwayextractor_spark.config import EngineConfig
     from osmwaterwayextractor_spark.operators.tiles import channel_density_rollup
     from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
+    from osmwaterwayextractor_spark.sinks.table_sink import ParquetTableSink
     from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe
 
     runs: dict[str, list[float]] = {}
@@ -184,11 +185,9 @@ def run_bench(
         docs_path = os.path.join(
             spark.conf.get("spark.local.dir", "/tmp").split(",")[0], "bench-docs"
         )
-        # 16 MiB row groups: the parse scan then splits past the file count
-        # (same rationale as the pipeline's scratch-stage writes)
-        docs_dataframe(spark, n_docs, params).write.mode("overwrite").option(
-            "parquet.block.size", str(16 * 1024 * 1024)
-        ).parquet(docs_path)
+        # through the stage-table writer: its row groups let the parse scan
+        # split past the file count, as every stage table's scans do
+        ParquetTableSink(docs_path).overwrite(docs_dataframe(spark, n_docs, params))
         owned = True
     docs = spark.read.parquet(docs_path)
     n_spans = docs.select(F.sum(F.size("spans"))).collect()[0][0]

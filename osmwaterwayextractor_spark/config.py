@@ -63,6 +63,21 @@ STAGES: dict[str, Stage] = {
 TILED_STAGES = ("nodes_tiled", "edges_tiled")
 
 
+def _depth(stage: str) -> int:
+    """The length of ``stage``'s longest parent chain: 0 for a root."""
+    return max((_depth(p) + 1 for p in STAGES[stage].parents), default=0)
+
+
+# The order plans.pipeline builds the stages in: each stage sits in the wave
+# of its longest parent chain, in declared order, so every parent is built in
+# an earlier wave and the stages of one wave (edges and nodes, then the tiled
+# pair) overlap.
+STAGE_WAVES: tuple[tuple[str, ...], ...] = tuple(
+    tuple(s for s in STAGES if _depth(s) == d)
+    for d in range(max(map(_depth, STAGES)) + 1)
+)
+
+
 def stage_and_ancestors(stage: str) -> frozenset[str]:
     """``stage`` and every stage it is built from."""
     return frozenset({stage}).union(*(stage_and_ancestors(p) for p in STAGES[stage].parents))

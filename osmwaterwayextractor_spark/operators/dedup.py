@@ -8,9 +8,11 @@ Spark-first over a ``documents(doc_id, text, ...)`` table:
 - ``minhash_lsh_pairs``: shingle → JVM ``xxhash64`` → m permutations via
   universal hashing (a·h+b mod p, map-side min-combine) → band buckets →
   bucket equi-join for candidates → exact/estimated Jaccard verify.
-- ``simhash_buckets``: 64-bit simhash from token hashes; near-dups share a
-  bucket under ≥1 of four 16-bit chunks (Hamming ≤ 3 guarantee via chunking).
-- ``ngram_jaccard_pairs``: exact word n-gram Jaccard for candidate pairs.
+- ``simhash_near_pairs``: 64-bit simhash from token hashes (``simhash_64``);
+  near-dups share a bucket under ≥1 of four 16-bit chunks (Hamming ≤ 3
+  guarantee via chunking), verified by popcount.
+- ``ngram_jaccard_pairs``: exact word n-gram Jaccard for candidate pairs —
+  the same verify (``_jaccard``) minhash runs on its candidates.
 - ``embedding_neardup_pairs`` lives in ``similarity.py`` (cosine ≥ τ).
 
 All hot paths are Catalyst expressions (JVM codegen, map-side partial aggs);
@@ -137,29 +139,7 @@ def minhash_lsh_pairs(
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
-    # exact Jaccard verify via shingle-set join
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle_hash")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle_hash")
-    inter = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "shingle_hash"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    out = (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return out
+    return _jaccard(cand, sh).where(F.col("jaccard") >= threshold)
 
 
 def simhash_64(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -221,14 +201,14 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text", max_hamming: int
     ).where(F.col("hamming") <= max_hamming).select("doc_a", "doc_b", "hamming")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, pairs: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Exact word n-gram Jaccard for given (doc_a, doc_b) pairs."""
-    sh = word_shingles(docs, text_col, n)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle_hash")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle_hash")
+def _jaccard(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
+    """→ (doc_a, doc_b, jaccard): the exact Jaccard of each pair's shingle
+    sets in ``shingles`` (doc_id, shingle_hash), from set sizes and a
+    shingle-set intersection join; a pair sharing no shingle scores 0, and
+    a pair with a doc that has no shingles yields no row."""
+    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sha = shingles.select(F.col("doc_id").alias("doc_a"), "shingle_hash")
+    shb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle_hash")
     inter = (
         pairs.join(sha, "doc_a")
         .join(shb, ["doc_b", "shingle_hash"])
@@ -245,3 +225,10 @@ def ngram_jaccard_pairs(
         )
         .select("doc_a", "doc_b", "jaccard")
     )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, pairs: DataFrame, text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """Exact word n-gram Jaccard for given (doc_a, doc_b) pairs."""
+    return _jaccard(pairs, word_shingles(docs, text_col, n))

@@ -61,10 +61,9 @@ def _pending_filter(
 
 
 class Checkpointer:
-    def __init__(self, spark: SparkSession, root: str, resume: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.resume = resume
         self.events: list[dict] = []  # (stage, action) log for tests/manifest
 
     def _stage_dir(self, stage: str, config: EngineConfig) -> str:
@@ -78,7 +77,7 @@ class Checkpointer:
         resumed stage plans and runs none of its operators' eager work."""
         sdir = self._stage_dir(stage, config)
         sink = ParquetTableSink(os.path.join(sdir, "data"))
-        if self.resume and os.path.exists(os.path.join(sink.location, "_SUCCESS")):
+        if os.path.exists(os.path.join(sink.location, "_SUCCESS")):
             self.events.append({"stage": stage, "action": "resumed"})
             return sink.read(self.spark)
         run_id = uuid.uuid4().hex[:12]
@@ -160,12 +159,12 @@ class Checkpointer:
         if sink is None:
             sink = ParquetTableSink(data_dir)
         done_flag = os.path.join(sdir, "_STAGE_DONE")
-        if self.resume and os.path.exists(done_flag):
+        if os.path.exists(done_flag):
             self.events.append({"stage": stage, "action": "resumed"})
             return sink.read(self.spark)
 
         on_disk = set(sink.list_partitions(partition_col))
-        committed = self._committed_partitions(sdir) if self.resume else set()
+        committed = self._committed_partitions(sdir)
         done = committed & on_disk
         for val in on_disk - committed:  # uncommitted leftovers: prune
             sink.drop_partition(partition_col, val)

@@ -7,7 +7,10 @@
   edges (J2/W2/F1/F3/F7-F9/P5) → nodes (A6) → tiles (F14/A10)
 
 The stages and their parents are ``config.STAGES``: each builder takes its
-parents' outputs. Each stage can checkpoint to parquet keyed by the stage's
+parents' outputs. The build walks ``config.STAGE_WAVES``, the stages grouped
+by their longest parent chain, and runs each wave's stages on concurrent
+driver threads, so siblings (edges and nodes, then the tiled pair) overlap.
+Each stage can checkpoint to parquet keyed by the stage's
 parameter-subset hash (reference cache semantics :1441-1515, :3048-3055)
 with per-partition lineage manifests; reruns skip completed stages
 (plans.checkpoint); without one, through a scratch table in the build's own
@@ -25,8 +28,9 @@ from urllib.request import url2pathname
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
-from ..config import STAGES, TILE_LAYOUT_STAGES, TILED_STAGES, EngineConfig
+from ..config import STAGE_WAVES, STAGES, TILE_LAYOUT_STAGES, TILED_STAGES, EngineConfig
 from ..operators.assemble import assemble_clean_simplify
 from ..operators.cluster import snap_map
 from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
@@ -40,10 +44,6 @@ from ..operators.tiles import (
 )
 from ..sinks.table_sink import scratch_dir, scratch_table
 from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
-
-# what SparkContext.setJobGroup sets: a stage run on a worker thread joins
-# the caller's group
-_GROUP_PROPERTIES = ("spark.jobGroup.id", "spark.job.interruptOnCancel")
 
 
 def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
@@ -110,7 +110,7 @@ class WaterwayEngine:
     def _stage(
         self,
         name: str,
-        build: Callable[..., DataFrame],
+        build: Optional[Callable[..., DataFrame]],
         outs: dict[str, DataFrame],
         scratch: str,
     ) -> None:
@@ -119,16 +119,21 @@ class WaterwayEngine:
 
         ``build`` takes the outputs of the stage's parents in ``STAGES``, in
         declared order, so a builder can read nothing the table does not
-        declare. It is called inside the label, so the eager jobs a builder
-        runs (snap_map's block-kernel checkpoint and violation probe, the
-        covered cut) carry the stage's name. Without a checkpointer the cut
-        is a table in the build's ``scratch`` directory, and
-        ``TILE_LAYOUT_STAGES`` stay lazy. A stage the checkpointer holds is
+        declare. A stage whose ``build`` is ``None`` (intersections with
+        detection off) is its one parent's output, never cut or
+        checkpointed. ``build`` is called inside the label, so the eager
+        jobs a builder runs (snap_map's block-kernel checkpoint and violation
+        probe, the covered cut) carry the stage's name. Without a
+        checkpointer the cut is a table in the build's ``scratch``
+        directory, and ``TILE_LAYOUT_STAGES`` stay lazy. A stage the checkpointer holds is
         read back without calling ``build``, except the tiled pair: it lands
         partitioned by ``TILE_PART`` (a coarse ancestor of its coarsest cell)
         and resumes per partition, so its builder, a cheap projection, is
         always called. The partition column is dropped from the read-back."""
         parents = [outs[p] for p in STAGES[name].parents]
+        if build is None:
+            (outs[name],) = parents
+            return
         ck = self.checkpointer
         if ck is None and name in TILE_LAYOUT_STAGES:
             outs[name] = build(*parents)
@@ -163,66 +168,44 @@ class WaterwayEngine:
         with _stage_label("covered"):
             return scratch_table(_covered_for_join(simplified, self.config), scratch, "covered")
 
-    def _stages_concurrent(
+    def _run_wave(
         self,
-        named: list[tuple[str, Callable[..., DataFrame]]],
+        spark: SparkSession,
+        wave: tuple[str, ...],
+        builders: dict[str, Optional[Callable[..., DataFrame]]],
         outs: dict[str, DataFrame],
         scratch: str,
     ) -> None:
-        """Materialize independent stages from concurrent driver threads so
-        their Spark jobs overlap (the round-1 pipeline ran ~40 jobs strictly
-        serially — the dominant anti-scaling cost). With a checkpointer too:
-        each stage writes its own directory and ``Checkpointer.events`` only
-        appends."""
+        """Build one wave of ``STAGE_WAVES``, each stage on its own driver
+        thread, so the Spark jobs of sibling stages overlap (the round-1
+        pipeline ran ~40 jobs strictly serially — the dominant anti-scaling
+        cost). With a checkpointer too: each stage writes its own directory
+        and ``Checkpointer.events`` only appends."""
         from concurrent.futures import ThreadPoolExecutor
 
-        sc = SparkContext.getOrCreate()
-        # the caller's job group, so cancelling it cancels these stages too
-        group = {k: sc.getLocalProperty(k) for k in _GROUP_PROPERTIES}
+        def run(name: str) -> None:
+            # a distinct FAIR pool per stage: under FIFO a sibling's tasks
+            # only backfill the first job's idle slots; FAIR interleaves them
+            # so neither stage's small tail serializes the other
+            # (spark.scheduler.mode=FAIR set in spark_session)
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"stage-{name}")
+            self._stage(name, builders[name], outs, scratch)
 
-        def run(name: str, build: Callable[..., DataFrame]) -> None:
-            # local properties do not follow a Python thread, so the group,
-            # the label (set in _stage) and the pool are set here, in the
-            # worker. A distinct FAIR pool per concurrent stage: under FIFO
-            # the second job's tasks only backfill the first job's idle
-            # slots; FAIR interleaves them so neither stage's small tail
-            # serializes the other (spark.scheduler.mode=FAIR set in
-            # spark_session)
-            props = {**group, "spark.scheduler.pool": f"stage-{name}"}
-            for k, v in props.items():
-                sc.setLocalProperty(k, v)
-            try:
-                self._stage(name, build, outs, scratch)
-            finally:
-                for k in props:
-                    sc.setLocalProperty(k, None)
-
-        with ThreadPoolExecutor(len(named)) as pool:
-            for f in [pool.submit(run, name, build) for name, build in named]:
+        with ThreadPoolExecutor(len(wave)) as pool:
+            # local properties do not follow a Python thread: each thread
+            # starts from its own copy of the caller's, so its jobs join the
+            # caller's job group (cancelling the group cancels the stage).
+            # One copy per thread: siblings sharing one would overwrite each
+            # other's label and pool
+            futures = [pool.submit(inheritable_thread_target(spark)(run), name) for name in wave]
+            for f in futures:
                 f.result()
 
     def build_graph(self, docs: DataFrame, spark: Optional[SparkSession] = None) -> GraphResult:
         spark = spark or docs.sparkSession
         cfg = self.config
-        # each stage's output by name; a builder takes its STAGES parents
-        outs: dict[str, DataFrame] = {}
         # this build's scratch tables: a later build never overwrites them
         scratch = scratch_dir(spark)
-
-        # ONE span scan parses nodes AND ways (union schema); it materializes
-        # once and the assembly's three consumers (refs, tags, node coords)
-        # read it back as cheap checkpoint-scan filters.
-        self._stage("parsed", lambda: parse_osm(docs, cfg), outs, scratch)
-        # assembly + clean + simplify as ONE Arrow pass: the assembled
-        # vertex arrays never round-trip JVM↔Python between kernels
-        self._stage(
-            "simplified",
-            lambda parsed: assemble_clean_simplify(
-                ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
-            ),
-            outs,
-            scratch,
-        )
 
         def intersect(simplified: DataFrame) -> DataFrame:
             # detect feeds insert lazily: insert's left join passes ways with
@@ -237,16 +220,6 @@ class WaterwayEngine:
             points = detect_intersections(simplified, cfg, covered=covered)
             return insert_intersections(simplified, points, cfg, covered=covered)
 
-        if cfg.enable_intersection_detection:
-            self._stage("intersections", intersect, outs, scratch)
-        else:
-            outs["intersections"] = outs["simplified"]
-
-        # the snap domain is consumed 3× inside snap_map (max-lat bound, the
-        # block kernel, the final mapping join) — materialize it once instead
-        # of recomputing the vertex groupBy per consumer
-        self._stage("clustering_domain", clustering_domain_fast, outs, scratch)
-
         def cluster(domain: DataFrame) -> DataFrame:
             # max|lat| only bounds the block-grid level (any upper bound
             # gives a coarser-or-equal, still-correct level) — read it from
@@ -256,31 +229,37 @@ class WaterwayEngine:
             where = os.path.dirname(url2pathname(urlparse(files[0]).path)) if files else None
             return snap_map(domain, cfg, spark, max_abs_lat=_parquet_max_abs(where, "lat"))
 
-        self._stage("clustering", cluster, outs, scratch)
-
-        # edges and nodes are independent given (intersected, snap) — overlap
-        self._stages_concurrent(
-            [
-                ("edges", lambda intersected, snap: build_edges(intersected, snap, cfg)),
-                ("nodes", lambda snap: build_nodes(snap, cfg)),
-            ],
-            outs,
-            scratch,
-        )
-        # `covering` already comes from build_edges' fused NumPy kernel. With
-        # a checkpointer the tiled pair lands Iceberg-style, partitioned by a
-        # coarse ancestor cell and resumable per partition (north_rule;
-        # plans.checkpoint.materialize_partitioned skips already-written
-        # tile_part= directories on re-run)
-        self._stages_concurrent(
-            [
-                ("nodes_tiled", lambda nodes: with_node_cells(nodes, cfg)),
-                ("edges_tiled", lambda edges: with_edge_cells(edges, cfg)),
-            ],
-            outs,
-            scratch,
-        )
-        self._stage("tiles", lambda edges_t: channel_density_rollup(edges_t, cfg), outs, scratch)
+        # each stage's builder takes its STAGES parents' outputs
+        builders: dict[str, Optional[Callable[..., DataFrame]]] = {
+            # ONE span scan parses nodes AND ways (union schema); it
+            # materializes once and the assembly's three consumers (refs,
+            # tags, node coords) read it back as cheap checkpoint-scan filters
+            "parsed": lambda: parse_osm(docs, cfg),
+            # assembly + clean + simplify as ONE Arrow pass: the assembled
+            # vertex arrays never round-trip JVM↔Python between kernels
+            "simplified": lambda parsed: assemble_clean_simplify(
+                ways_from_parsed(parsed, cfg), nodes_from_parsed(parsed), cfg
+            ),
+            "intersections": intersect if cfg.enable_intersection_detection else None,
+            # the snap domain is consumed 3× inside snap_map (max-lat bound,
+            # the block kernel, the final mapping join) — materialize it once
+            # instead of recomputing the vertex groupBy per consumer
+            "clustering_domain": clustering_domain_fast,
+            "clustering": cluster,
+            "edges": lambda intersected, snap: build_edges(intersected, snap, cfg),
+            "nodes": lambda snap: build_nodes(snap, cfg),
+            # `covering` already comes from build_edges' fused NumPy kernel.
+            # With a checkpointer the tiled pair lands Iceberg-style,
+            # partitioned by a coarse ancestor cell and resumable per
+            # partition (north_rule; plans.checkpoint.materialize_partitioned
+            # skips already-written tile_part= directories on re-run)
+            "nodes_tiled": lambda nodes: with_node_cells(nodes, cfg),
+            "edges_tiled": lambda edges: with_edge_cells(edges, cfg),
+            "tiles": lambda edges_t: channel_density_rollup(edges_t, cfg),
+        }
+        outs: dict[str, DataFrame] = {}
+        for wave in STAGE_WAVES:
+            self._run_wave(spark, wave, builders, outs, scratch)
         return GraphResult(
             nodes=outs["nodes_tiled"], edges=outs["edges_tiled"], tile_rollup=outs["tiles"]
         )

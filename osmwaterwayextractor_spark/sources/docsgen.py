@@ -284,37 +284,11 @@ def docs_dataframe(spark, n_docs: int, params: DocsGenParams | None = None, part
     seeded RNG), the Spark-native substitute for the reference's single
     process PBF scan.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     params = params or DocsGenParams()
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField(
-                "spans",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("kind", StringType()),
-                            StructField("text", StringType()),
-                            StructField("media_ref", StringType()),
-                            StructField("offset", IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
 
     def gen(batches):
         for pdf in batches:
             yield generate_docs_pandas(pdf["id"].to_numpy(), params)
 
     rng_df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInPandas(gen, schema=schema)
+    return rng_df.mapInPandas(gen, schema=DOC_SCHEMA_DDL)

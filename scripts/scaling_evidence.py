@@ -376,14 +376,15 @@ def pregenerate_docs(n_docs: int) -> str:
     code = (
         "import sys; sys.path.insert(0, %r)\n"
         "from pyspark.sql import SparkSession\n"
+        "from osmwaterwayextractor_spark.sinks.table_sink import ParquetTableSink\n"
         "from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe\n"
         "spark = (SparkSession.builder.master('local[*]')"
         ".config('spark.sql.shuffle.partitions','32')"
         ".config('spark.ui.enabled','false')"
         ".config('spark.driver.memory','16g').getOrCreate())\n"
-        "docs_dataframe(spark, %d, DocsGenParams(seed=42, mega_every=200, mega_refs=20000))"
-        ".write.mode('overwrite').option('parquet.block.size','16777216').parquet(%r)\n"
-        "spark.stop()\n" % (ROOT, n_docs, path)
+        "ParquetTableSink(%r).overwrite(docs_dataframe(spark, %d, "
+        "DocsGenParams(seed=42, mega_every=200, mega_refs=20000)))\n"
+        "spark.stop()\n" % (ROOT, path, n_docs)
     )
     subprocess.run([sys.executable, "-c", code], check=True, capture_output=True)
     return path

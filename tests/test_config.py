@@ -8,6 +8,7 @@ import pytest
 from osmwaterwayextractor_spark.config import (
     DEFAULT_CONFIG,
     NO_SIMPLIFY_CONFIG,
+    STAGE_WAVES,
     STAGES,
     EngineConfig,
 )
@@ -241,3 +242,15 @@ def test_stage_table_declares_each_knob_once_per_lineage():
         # a knob an ancestor declares is already in this stage's hash
         inherited = set().union(*(STAGES[a].knobs for a in _lineage(stage) - {stage}))
         assert not set(knobs) & inherited, stage
+
+
+def test_stage_waves_put_each_stage_one_past_its_deepest_parent():
+    wave_of = {s: i for i, wave in enumerate(STAGE_WAVES) for s in wave}
+    # every stage once, each wave in declared order
+    assert sorted(wave_of) == sorted(STAGES)
+    assert [s for wave in STAGE_WAVES for s in wave] == sorted(STAGES, key=wave_of.get)
+    for stage, st in STAGES.items():
+        assert all(wave_of[p] < wave_of[stage] for p in st.parents), stage
+        assert wave_of[stage] == max((wave_of[p] + 1 for p in st.parents), default=0), stage
+    # the sibling pairs the build overlaps
+    assert ("edges", "nodes") in STAGE_WAVES and ("nodes_tiled", "edges_tiled") in STAGE_WAVES

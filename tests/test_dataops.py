@@ -50,6 +50,39 @@ def test_minhash_lsh_finds_real_dups(spark, docs):
         assert 0.5 <= r["jaccard"] <= 1.0
 
 
+def test_ngram_jaccard_pairs_equal_python_set_jaccard(spark):
+    import re
+
+    from osmwaterwayextractor_spark.operators.dedup import ngram_jaccard_pairs
+
+    texts = {
+        1: "the river bends north past the old mill and the weir",
+        2: "The river bends north past the old mill and the dam",
+        3: "the river bends north past the old mill and the weir",
+        4: "a canal joins the harbour basin below the lock gates",
+        5: "the old mill and the weir the river bends north past",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    pairs = [(a, b) for a in texts for b in texts if a < b]
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(
+            docs, spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        ).collect()
+    }
+
+    def grams(text, n=3):
+        toks = re.split(r"\s+", text.lower())
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    want = {
+        (a, b): len(grams(texts[a]) & grams(texts[b])) / len(grams(texts[a]) | grams(texts[b]))
+        for a, b in pairs
+    }
+    assert got == pytest.approx(want)
+    assert got[(1, 3)] == 1.0 and got[(1, 4)] == 0.0 and 0 < got[(1, 2)] < 1
+
+
 def test_simhash_near_pairs(spark, docs):
     from osmwaterwayextractor_spark.operators.dedup import simhash_near_pairs
 

@@ -161,3 +161,34 @@ def test_relation_spans_parse_and_roundtrip(spark):
         ]
         assert dict(r["tags"]) == w["tags"]
         assert r["members"][0]["role"] == "main_stream"
+
+
+def test_docs_dataframe_schema_is_the_doc_ddl(spark):
+    """``docs_dataframe`` declares its schema through ``DOC_SCHEMA_DDL``, the
+    one the streaming readers use: the same nullable struct the generator
+    always produced, rows included."""
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from osmwaterwayextractor_spark.sources.docsgen import DOC_SCHEMA_DDL, docs_dataframe
+
+    span = StructType(
+        [
+            StructField("kind", StringType()),
+            StructField("text", StringType()),
+            StructField("media_ref", StringType()),
+            StructField("offset", IntegerType()),
+        ]
+    )
+    want = StructType([StructField("doc_id", StringType()), StructField("spans", ArrayType(span))])
+    docs = docs_dataframe(spark, 3, PARAMS, partitions=1)
+    assert docs.schema == want
+    assert spark.createDataFrame([], DOC_SCHEMA_DDL).schema == want
+    got = sorted((r["doc_id"], [s.asDict() for s in r["spans"]]) for r in docs.collect())
+    generated = [generate_doc(i, PARAMS) for i in range(3)]
+    assert got == sorted((d["doc_id"], d["spans"]) for d in generated)

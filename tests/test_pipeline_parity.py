@@ -9,10 +9,11 @@ cross-doc continuations, mega-ways).
 """
 
 import dataclasses
+import os
 
 import pytest
 
-from osmwaterwayextractor_spark.config import EngineConfig, NO_SIMPLIFY_CONFIG
+from osmwaterwayextractor_spark.config import STAGES, EngineConfig, NO_SIMPLIFY_CONFIG
 from osmwaterwayextractor_spark.operators.assemble import assemble_clean_simplify
 from osmwaterwayextractor_spark.operators.edges import clustering_domain_fast
 from osmwaterwayextractor_spark.operators.geometry_ops import (
@@ -25,6 +26,7 @@ from osmwaterwayextractor_spark.oracle import (
     run_oracle,
     tile_assignments,
 )
+from osmwaterwayextractor_spark.plans.checkpoint import Checkpointer
 from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
 from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, generate_doc
 from osmwaterwayextractor_spark.sources.parse import (
@@ -46,9 +48,10 @@ def _docs_df(spark, docs):
     )
 
 
-def _assert_parity(spark, docs, cfg):
+def _assert_parity(spark, docs, cfg, checkpointer=None):
     oracle = run_oracle(docs, cfg)
-    result = WaterwayEngine(cfg).build_graph(_docs_df(spark, docs), spark)
+    engine = WaterwayEngine(cfg, checkpointer=checkpointer)
+    result = engine.build_graph(_docs_df(spark, docs), spark)
 
     got_nodes = {
         r["id"]: (r["lat"], r["lon"], r["type"]) for r in result.nodes.collect()
@@ -136,6 +139,21 @@ def test_random_network_parity(spark, seed, n_docs):
     cfg = EngineConfig(filter_waterway_types=False)
     oracle, _ = _assert_parity(spark, docs, cfg)
     assert len(oracle.edges) > n_docs  # non-trivial network
+
+
+def test_detection_off_parity_lazy_and_checkpointed(spark, tmp_path):
+    # with detection off the intersections stage is the simplified ways:
+    # both builds match the oracle, and the stage is never checkpointed
+    params = DocsGenParams(seed=7, mega_every=25, mega_refs=400)
+    docs = [generate_doc(i, params) for i in range(30)]
+    cfg = EngineConfig(filter_waterway_types=False, enable_intersection_detection=False)
+    oracle, _ = _assert_parity(spark, docs, cfg)
+    detected = run_oracle(docs, dataclasses.replace(cfg, enable_intersection_detection=True))
+    assert {e["id"] for e in oracle.edges} != {e["id"] for e in detected.edges}
+    ck = Checkpointer(spark, str(tmp_path))
+    _assert_parity(spark, docs, cfg, checkpointer=ck)
+    assert {e["stage"] for e in ck.events} == set(STAGES) - {"intersections"}
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("intersections_")]
 
 
 def test_clustering_domain_fast_matches_oracle_endpoints_and_junctions(spark):

@@ -183,7 +183,7 @@ def test_table_sink_seam(spark, tmp_path):
             calls.append(("list", partition_col))
             return super().list_partitions(partition_col)
 
-    ck = Checkpointer(spark, str(tmp_path / "ck"), resume=False)
+    ck = Checkpointer(spark, str(tmp_path / "ck"))
     spy = SpySink(str(tmp_path / "tbl2"))
     out = ck.materialize_partitioned("seam_demo", CFG, df, "tile", sink=spy)
     assert out.count() == 12

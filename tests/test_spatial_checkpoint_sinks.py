@@ -117,7 +117,7 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
 
     docs = fixture_4way_docs()
     root = str(tmp_path / "ckpt")
-    ck = Checkpointer(spark, root, resume=True)
+    ck = Checkpointer(spark, root)
     engine = WaterwayEngine(CFG, checkpointer=ck)
     g1 = engine.build_graph(_docs_df(spark, docs), spark)
     e1 = {r["id"] for r in g1.edges.collect()}
@@ -127,7 +127,7 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
     assert sum(r["rows"] for r in lin) == len(e1)
 
     # second run resumes every stage and returns identical results
-    ck2 = Checkpointer(spark, root, resume=True)
+    ck2 = Checkpointer(spark, root)
     g2 = WaterwayEngine(CFG, checkpointer=ck2).build_graph(_docs_df(spark, docs), spark)
     e2 = {r["id"] for r in g2.edges.collect()}
     assert e2 == e1
@@ -146,7 +146,7 @@ def test_partition_level_resume(spark, tmp_path):
     want = {r["id"] for r in edges_t.collect()}
 
     root = str(tmp_path / "pck")
-    ck = Checkpointer(spark, root, resume=True)
+    ck = Checkpointer(spark, root)
     out1 = ck.materialize_partitioned("tiles_demo", CFG, edges_t, "tile")
     assert {r["id"] for r in out1.collect()} == want
 
@@ -158,7 +158,7 @@ def test_partition_level_resume(spark, tmp_path):
     for d in parts[:2]:
         shutil.rmtree(os.path.join(sdir, "data", d))
 
-    ck2 = Checkpointer(spark, root, resume=True)
+    ck2 = Checkpointer(spark, root)
     out2 = ck2.materialize_partitioned("tiles_demo", CFG, edges_t, "tile")
     assert {r["id"] for r in out2.collect()} == want
     ev = [e for e in ck2.events if e["stage"] == "tiles_demo"][0]

@@ -3,7 +3,10 @@ env var and ``operators/cluster.py`` holds only the block kernel (its
 cross-checks live in ``tests/test_cluster_paths.py``). ``operators/`` holds
 no unfused assembly pass (its oracle lives in ``tests/unfused_assembly.py``).
 Every stage table goes through ``sinks.table_sink.ParquetTableSink``, the
-one place that sets the row-group size, into a scratch directory per call.
+one place that sets the row-group size, into a scratch directory per call;
+the tooling stages its own tables through it too. ``build_graph`` names
+each stage once, as a key of its builder map, and runs the map through one
+wave runner.
 Every tooling script compiles, and every import of a sibling script,
 function-local ones included, names a file under ``scripts/``: a plain
 import test would miss a dangling function-local import until the function
@@ -37,6 +40,9 @@ UNFUSED_ASSEMBLY_NAMES = {
 
 # the per-caller stage writers and the pipeline's hand-kept tail list
 RETIRED_STAGE_WRITER_NAMES = {"_ephemeral_stage", "_scratch_stage", "_TAIL"}
+
+# the pipeline's hand-paired sibling runner and its job-group property copy
+RETIRED_STAGE_RUNNER_NAMES = {"_stages_concurrent", "_GROUP_PROPERTIES"}
 
 
 def _package_modules():
@@ -86,7 +92,7 @@ def test_operators_hold_no_unfused_assembly_pass():
 def test_only_the_table_sink_sets_the_row_group_size():
     counts = {
         os.path.relpath(p, ROOT): open(p, encoding="utf-8").read().count("parquet.block.size")
-        for p in _package_modules()
+        for p in [*_package_modules(), *_tooling_files()]
     }
     assert {p: n for p, n in counts.items() if n} == {
         os.path.join("osmwaterwayextractor_spark", "sinks", "table_sink.py"): 1
@@ -147,3 +153,32 @@ def test_tooling_compiles_and_imports_only_existing_scripts(path):
         and not os.path.isfile(os.path.join(SCRIPTS, name + ".py"))
     ]
     assert dangling == [], f"imports of scripts that do not exist: {dangling}"
+
+
+def test_build_graph_names_each_stage_once_in_its_builder_map():
+    from osmwaterwayextractor_spark.config import STAGES
+
+    path = os.path.join(PKG, "plans", "pipeline.py")
+    assert _defined_names(path) & RETIRED_STAGE_RUNNER_NAMES == set()
+    tree = ast.parse(open(path, encoding="utf-8").read())
+    (build,) = [
+        n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == "build_graph"
+    ]
+    maps = [
+        n
+        for n in ast.walk(build)
+        if isinstance(n, ast.Dict)
+        and n.keys
+        and all(isinstance(k, ast.Constant) and k.value in STAGES for k in n.keys)
+    ]
+    assert [[k.value for k in m.keys] for m in maps] == [list(STAGES)]
+    # no call outside the map takes a stage by name (self._stage("parsed", ...))
+    inside = {id(n) for n in ast.walk(maps[0])}
+    by_name = [
+        (node.lineno, a.value)
+        for node in ast.walk(build)
+        if isinstance(node, ast.Call) and id(node) not in inside
+        for a in [*node.args, *(k.value for k in node.keywords)]
+        if isinstance(a, ast.Constant) and a.value in STAGES
+    ]
+    assert by_name == []
