@@ -169,10 +169,11 @@ def run_bench(
 
     # materialize the input once so generation isn't measured. Parquet in
     # the scratch dir (tmpfs), NOT .cache(): cached docs live as
-    # DESERIALIZED JVM rows in the heap for the whole run — the same GC
-    # inflation the pipeline's stage boundaries dropped localCheckpoint for
-    # (docs/SCALE.md) — and at 10^12-doc scale the input is a table scan,
-    # never executor storage. SPARK_GRAFT_DOCS_PATH points at a
+    # DESERIALIZED JVM rows in the heap for the whole run — the GC
+    # inflation of round 2's deserialized stage cuts (docs/SCALE.md; the
+    # pipeline's cuts are serialized blocks now) — and at 10^12-doc scale
+    # the input is a table scan, never executor storage.
+    # SPARK_GRAFT_DOCS_PATH points at a
     # PRE-GENERATED docs parquet (the scaling session generates the
     # deterministic input once and shares it across all legs — input prep
     # is setup, not the measured job; the parquet is byte-identical to

@@ -39,11 +39,12 @@ from ..functions import cells_sql
 from ..functions.clustering import centroid_of_members
 from ..functions.geodesy import geodesic_m
 from ..functions.tiling import join_grid_level, wrap_cell_id
+from ..sinks.table_sink import block_cut
 
 
 # hot-block broadcast guard: the set of blocks with >=2 points in their 3x3
 # neighborhood is bounded by the epsilon-pair population (the same quantity
-# the mapping localCheckpoint already assumes is executor-memory small), but
+# the mapping's block cut already assumes is executor-memory small), but
 # at 10^12-doc scale a pathological corpus could blow it up — past this many
 # blocks the prune falls back to a shuffle semi-join instead of a broadcast.
 # 2M single-long rows ≈ 16 MB raw / low-hundreds-MB hashed relation: safe on
@@ -52,12 +53,7 @@ from ..functions.tiling import join_grid_level, wrap_cell_id
 HOT_BLOCK_BROADCAST_MAX = 2_000_000
 
 
-def snap_map(
-    points: DataFrame,
-    config: EngineConfig,
-    spark: SparkSession,
-    max_abs_lat: float | None = None,
-) -> DataFrame:
+def snap_map(points: DataFrame, config: EngineConfig, spark: SparkSession) -> DataFrame:
     """points(lat, lon) distinct → (lat, lon, snap_lat, snap_lon).
 
     Production path: ``_snap_map_blocks`` — a SINGLE-SHUFFLE exact
@@ -76,21 +72,18 @@ def snap_map(
       seen), which is exactly the reference's hard-abort case.
 
     No iterative label propagation, no pair collect to the driver — five
-    driver actions total: the max|lat| agg (skipped when the caller passes
-    ``max_abs_lat``, as the pipeline does from parquet footers), the
-    hot-block prune's checkpoint and count, the small mapping checkpoint and
-    the violation probe.
+    driver actions total: the max|lat| agg, the hot-block set's cut and
+    count, the small mapping's cut and the violation probe. Both cuts are
+    ``sinks.table_sink.block_cut``s: serialized blocks, released with the
+    snap map.
     """
-    if max_abs_lat is None:
-        max_abs_lat = points.agg(F.max(F.abs(F.col("lat")))).collect()[0][0]
+    max_abs_lat = points.agg(F.max(F.abs(F.col("lat")))).collect()[0][0]
     identity = points.select(
         "lat", "lon", F.col("lat").alias("snap_lat"), F.col("lon").alias("snap_lon")
     )
     if max_abs_lat is None:  # empty input
         return identity
-    mapping = _snap_map_blocks(points, config, float(max_abs_lat)).localCheckpoint(
-        eager=True
-    )
+    mapping = block_cut(_snap_map_blocks(points, config, float(max_abs_lat)))
     # ordered top-1: one job at any partition count (a bare limit(1).collect
     # scans partitions incrementally, one job per round) and a deterministic
     # member to name
@@ -157,10 +150,9 @@ def _snap_map_blocks(
         .groupBy("block")
         .agg(F.sum("cnt").alias("nbh_cnt"))
     )
-    hot_blocks = (
-        nbh.where(F.col("nbh_cnt") >= 2)
-        .select(F.col("block").alias("home"))
-        .localCheckpoint(eager=True)  # tiny; reused by the count + the join
+    # tiny; reused by the count + the join
+    hot_blocks = block_cut(
+        nbh.where(F.col("nbh_cnt") >= 2).select(F.col("block").alias("home"))
     )
     n_hot = hot_blocks.count()
     if n_hot <= HOT_BLOCK_BROADCAST_MAX:

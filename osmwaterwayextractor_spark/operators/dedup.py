@@ -202,10 +202,12 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text", max_hamming: int
 
 
 def _jaccard(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """→ (doc_a, doc_b, jaccard): the exact Jaccard of each pair's shingle
-    sets in ``shingles`` (doc_id, shingle_hash), from set sizes and a
-    shingle-set intersection join; a pair sharing no shingle scores 0, and
-    a pair with a doc that has no shingles yields no row."""
+    """→ (doc_a, doc_b, jaccard) for every pair in ``pairs``: the exact
+    Jaccard of the pair's shingle sets in ``shingles`` (doc_id,
+    shingle_hash), from set sizes and a shingle-set intersection join. A
+    pair sharing no shingle scores 0. A doc with no shingles (fewer than
+    ``n`` words) has the empty set, so a pair with one such doc scores 0,
+    and so does a pair of two, whose union is empty too."""
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sha = shingles.select(F.col("doc_id").alias("doc_a"), "shingle_hash")
     shb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle_hash")
@@ -215,14 +217,23 @@ def _jaccard(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
+    union = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
     return (
         pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard", F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+        .join(
+            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"),
+            "doc_a",
+            "left",
         )
+        .join(
+            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"),
+            "doc_b",
+            "left",
+        )
+        .na.fill(0, ["n_inter", "sz_a", "sz_b"])
+        # the union is 0 only when both sets are empty, and then so is the
+        # intersection: 0 / 1, where ANSI mode raises on 0 / 0
+        .withColumn("jaccard", F.col("n_inter") / F.greatest(union, F.lit(1)))
         .select("doc_a", "doc_b", "jaccard")
     )
 

@@ -275,7 +275,7 @@ def _covered_raw(ways: DataFrame) -> DataFrame:
     measure the per-cell fan-out the resplit cuts. The pipeline cuts only
     the final covered table (``WaterwayEngine._covered_stage``): the
     resplit's three consumers (per-cell counts, kept branch, re-covered
-    dense branch) re-run this JVM lineage inside that one write job, which
+    dense branch) re-run this JVM lineage inside that one cut job, which
     costs less than a raw round-trip (round-6 A/B at 100k docs: 2313 → 1403
     task-s per pass; OPTIMIZATION_r06.md)."""
     segs = _segments(ways)

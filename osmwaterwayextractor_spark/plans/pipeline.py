@@ -13,18 +13,16 @@ driver threads, so siblings (edges and nodes, then the tiled pair) overlap.
 Each stage can checkpoint to parquet keyed by the stage's
 parameter-subset hash (reference cache semantics :1441-1515, :3048-3055)
 with per-partition lineage manifests; reruns skip completed stages
-(plans.checkpoint); without one, through a scratch table in the build's own
-directory (``sinks.table_sink.scratch_table``).
+(plans.checkpoint). Those are the resume points. Without a checkpointer a
+stage is cut in the block manager (``sinks.table_sink.block_cut``), which
+writes no file.
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Optional
-from urllib.parse import urlparse
-from urllib.request import url2pathname
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -42,40 +40,8 @@ from ..operators.tiles import (
     with_edge_cells,
     with_node_cells,
 )
-from ..sinks.table_sink import scratch_dir, scratch_table
+from ..sinks.table_sink import block_cut
 from ..sources.parse import nodes_from_parsed, parse_osm, ways_from_parsed
-
-
-def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
-    """max(|col|) from parquet row-group footer statistics — a driver-side
-    metadata read that replaces a full Spark aggregation job when a stage
-    just materialized to parquet. Returns None (caller falls back to the
-    distributed agg) when no path/stats are available, or when the directory
-    holds more than ``max_files`` files: footer stats of a *sample* are not
-    an upper bound, so past the cap the driver does zero footer I/O rather
-    than loop over 10⁵+ files."""
-    if not path:
-        return None
-    import glob
-
-    import pyarrow.parquet as pq
-
-    mx: Optional[float] = None
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    if not files or len(files) > max_files:
-        return None
-    for f in files:
-        md = pq.read_metadata(f)
-        if col not in md.schema.names:
-            return None
-        idx = md.schema.names.index(col)
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            m = max(abs(float(st.min)), abs(float(st.max)))
-            mx = m if mx is None or m > mx else mx
-    return mx
 
 
 @contextmanager
@@ -112,7 +78,6 @@ class WaterwayEngine:
         name: str,
         build: Optional[Callable[..., DataFrame]],
         outs: dict[str, DataFrame],
-        scratch: str,
     ) -> None:
         """Build and cut one stage under its label, and record its output in
         ``outs``.
@@ -122,14 +87,14 @@ class WaterwayEngine:
         declare. A stage whose ``build`` is ``None`` (intersections with
         detection off) is its one parent's output, never cut or
         checkpointed. ``build`` is called inside the label, so the eager
-        jobs a builder runs (snap_map's block-kernel checkpoint and violation
-        probe, the covered cut) carry the stage's name. Without a
-        checkpointer the cut is a table in the build's ``scratch``
-        directory, and ``TILE_LAYOUT_STAGES`` stay lazy. A stage the checkpointer holds is
-        read back without calling ``build``, except the tiled pair: it lands
-        partitioned by ``TILE_PART`` (a coarse ancestor of its coarsest cell)
-        and resumes per partition, so its builder, a cheap projection, is
-        always called. The partition column is dropped from the read-back."""
+        jobs a builder runs (snap_map's cuts and violation probe, the
+        covered cut) carry the stage's name. Without a checkpointer the cut
+        is a ``block_cut``, and ``TILE_LAYOUT_STAGES`` stay lazy. A stage
+        the checkpointer holds is read back without calling ``build``,
+        except the tiled pair: it lands partitioned by ``TILE_PART`` (a
+        coarse ancestor of its coarsest cell) and resumes per partition, so
+        its builder, a cheap projection, is always called. The partition
+        column is dropped from the read-back."""
         parents = [outs[p] for p in STAGES[name].parents]
         if build is None:
             (outs[name],) = parents
@@ -140,7 +105,7 @@ class WaterwayEngine:
             return
         with _stage_label(name):
             if ck is None:
-                out = scratch_table(build(*parents), scratch, name)
+                out = block_cut(build(*parents))
             elif name in TILED_STAGES:
                 df = build(*parents).withColumn(TILE_PART, tile_part_col(self.config))
                 cell = f"cell_r{min(self.config.tile_resolutions)}"
@@ -151,22 +116,22 @@ class WaterwayEngine:
                 out = ck.materialize(name, self.config, lambda: build(*parents))
         outs[name] = out
 
-    def _covered_stage(self, simplified: DataFrame, scratch: str) -> DataFrame:
+    def _covered_stage(self, simplified: DataFrame) -> DataFrame:
         """Cut the covered-segment table once for the intersections stage
         (detect self-join sides + insert candidate join all scan it).
 
-        A scratch table under the ``covered`` label, never the durable
+        A ``block_cut`` under the ``covered`` label, never the durable
         Checkpointer: this is an exchange-grade internal artifact, not a
         resumable pipeline stage — checkpointing it would change the stage
-        manifest surface. Each consumer's read is a pruned columnar scan
-        (insert reads only (cell, way_id)), which is exactly the reuse
-        Catalyst's ReusedExchange could not deliver across differently-pruned
-        subtrees. It is the stage's only cut: ``geometry_ops._covered_raw``
-        says why the raw cover beneath it is recomputed instead."""
+        manifest surface. Every consumer reads the one cut, which is the
+        reuse Catalyst's ReusedExchange could not deliver across
+        differently-pruned subtrees. It is the stage's only cut:
+        ``geometry_ops._covered_raw`` says why the raw cover beneath it is
+        recomputed instead."""
         from ..operators.geometry_ops import _covered_for_join
 
         with _stage_label("covered"):
-            return scratch_table(_covered_for_join(simplified, self.config), scratch, "covered")
+            return block_cut(_covered_for_join(simplified, self.config))
 
     def _run_wave(
         self,
@@ -174,7 +139,6 @@ class WaterwayEngine:
         wave: tuple[str, ...],
         builders: dict[str, Optional[Callable[..., DataFrame]]],
         outs: dict[str, DataFrame],
-        scratch: str,
     ) -> None:
         """Build one wave of ``STAGE_WAVES``, each stage on its own driver
         thread, so the Spark jobs of sibling stages overlap (the round-1
@@ -189,7 +153,7 @@ class WaterwayEngine:
             # so neither stage's small tail serializes the other
             # (spark.scheduler.mode=FAIR set in spark_session)
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"stage-{name}")
-            self._stage(name, builders[name], outs, scratch)
+            self._stage(name, builders[name], outs)
 
         with ThreadPoolExecutor(len(wave)) as pool:
             # local properties do not follow a Python thread: each thread
@@ -204,8 +168,6 @@ class WaterwayEngine:
     def build_graph(self, docs: DataFrame, spark: Optional[SparkSession] = None) -> GraphResult:
         spark = spark or docs.sparkSession
         cfg = self.config
-        # this build's scratch tables: a later build never overwrites them
-        scratch = scratch_dir(spark)
 
         def intersect(simplified: DataFrame) -> DataFrame:
             # detect feeds insert lazily: insert's left join passes ways with
@@ -216,18 +178,9 @@ class WaterwayEngine:
             # second, narrower covered exchange and re-runs the whole
             # scan+explode lineage (round-5 profile: duplicate 52-CPU-s
             # build at 100k docs).
-            covered = self._covered_stage(simplified, scratch)
+            covered = self._covered_stage(simplified)
             points = detect_intersections(simplified, cfg, covered=covered)
             return insert_intersections(simplified, points, cfg, covered=covered)
-
-        def cluster(domain: DataFrame) -> DataFrame:
-            # max|lat| only bounds the block-grid level (any upper bound
-            # gives a coarser-or-equal, still-correct level) — read it from
-            # the footers of the parquet the domain was read back from,
-            # driver-side, instead of running a Spark agg job
-            files = domain.inputFiles()
-            where = os.path.dirname(url2pathname(urlparse(files[0]).path)) if files else None
-            return snap_map(domain, cfg, spark, max_abs_lat=_parquet_max_abs(where, "lat"))
 
         # each stage's builder takes its STAGES parents' outputs
         builders: dict[str, Optional[Callable[..., DataFrame]]] = {
@@ -245,7 +198,7 @@ class WaterwayEngine:
             # the block kernel, the final mapping join) — materialize it once
             # instead of recomputing the vertex groupBy per consumer
             "clustering_domain": clustering_domain_fast,
-            "clustering": cluster,
+            "clustering": lambda domain: snap_map(domain, cfg, spark),
             "edges": lambda intersected, snap: build_edges(intersected, snap, cfg),
             "nodes": lambda snap: build_nodes(snap, cfg),
             # `covering` already comes from build_edges' fused NumPy kernel.
@@ -259,7 +212,7 @@ class WaterwayEngine:
         }
         outs: dict[str, DataFrame] = {}
         for wave in STAGE_WAVES:
-            self._run_wave(spark, wave, builders, outs, scratch)
+            self._run_wave(spark, wave, builders, outs)
         return GraphResult(
             nodes=outs["nodes_tiled"], edges=outs["edges_tiled"], tile_rollup=outs["tiles"]
         )

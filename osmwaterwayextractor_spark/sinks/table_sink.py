@@ -18,18 +18,23 @@ checkpoint logic touches the storage format directly:
 with this surface via its ``sink`` parameter.
 
 ``ParquetTableSink`` also writes every scratch table (``scratch_table``), so
-it is the one writer of every stage table.
+it is the one writer of every stage table. A plan cut that is not a table,
+the pipeline's stage boundaries without a checkpointer, goes through
+``block_cut`` instead.
 """
 
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import uuid
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Parquet scans split at row-group granularity: a stage written from a
 # skewed shuffle otherwise yields a few single-row-group files, and its
@@ -38,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 # row groups cost about nothing (snappy ratio unchanged) and key no stage
 # hash: they change no row.
 ROW_GROUP_BYTES = 8 * 1024 * 1024
+# the parquet footer key under which Spark's writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class ParquetTableSink:
@@ -59,7 +66,27 @@ class ParquetTableSink:
         self._write(df, "overwrite", partition_col)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.location)
+        """The table, read with the Spark schema its writer stored in the
+        footer of its first data file, so the read runs no schema-inference
+        job. Partition columns come from the directory names, as in an
+        inferred read. A table with no data file (an empty partitioned
+        write) is read with inference."""
+        schema = self._footer_schema()
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.location)
+
+    def _footer_schema(self) -> Optional[StructType]:
+        import pyarrow.parquet as pq
+
+        for d, dirs, names in os.walk(self.location):
+            dirs[:] = sorted(n for n in dirs if not n.startswith(("_", ".")))
+            for name in sorted(names):
+                if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                    continue
+                meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+                raw = meta.get(SPARK_SCHEMA_KEY)
+                return None if raw is None else StructType.fromJson(json.loads(raw))
+        return None
 
     def list_partitions(self, partition_col: str) -> list[str]:
         """Partition VALUES currently present (Hive dir names)."""
@@ -119,11 +146,24 @@ def scratch_dir(spark: SparkSession) -> str:
 
 def scratch_table(df: DataFrame, scratch: str, name: str) -> DataFrame:
     """Write ``df`` as table ``name`` under ``scratch`` and read it back: a
-    plan cut that keeps the rows serialized, off executor storage and the
-    GC's live set (docs/SCALE.md: why not ``localCheckpoint``/``.cache()``)."""
+    table that stays off executor storage, for a reader that must not add a
+    persistent RDD (the minhash shingles). A plan cut goes through
+    ``block_cut``, which pays no parquet write."""
     sink = ParquetTableSink(os.path.join(scratch, name))
     sink.overwrite(df)
     return sink.read(df.sparkSession)
+
+
+def block_cut(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage at its rows, held in the block manager as
+    serialized blocks that spill to ``spark.local.dir`` past the storage
+    memory: PySpark's ``MEMORY_AND_DISK`` is the serialized level, byte
+    buffers, not the deserialized row objects that inflated the GC of round
+    2's cuts (docs/SCALE.md "Stage-boundary materialization"). Unlike a
+    parquet round trip it forks no ``chmod`` per file and runs no read-back
+    job. The blocks go with the last reference to the result, through
+    Spark's ContextCleaner."""
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 class IcebergTableSink:

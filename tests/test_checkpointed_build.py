@@ -1,8 +1,11 @@
 """A checkpointed build labels every job it submits, a resume reads each
-completed stage back without planning or running any of its work, and a
+completed stage back without planning or running any of its work (nor a
+schema-inference job: the read takes the schema from the footer), and a
 rerun after a knob change recomputes only the stages downstream of it."""
 
 import dataclasses
+import os
+import uuid
 
 import pytest
 
@@ -10,6 +13,7 @@ from osmwaterwayextractor_spark.config import EngineConfig
 from osmwaterwayextractor_spark.plans import pipeline
 from osmwaterwayextractor_spark.plans.checkpoint import Checkpointer
 from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
+from osmwaterwayextractor_spark.sinks.table_sink import ParquetTableSink
 from osmwaterwayextractor_spark.sources.docsgen import DocsGenParams, docs_dataframe
 
 CFG = EngineConfig(filter_waterway_types=False)
@@ -118,3 +122,29 @@ def test_knob_change_resumes_only_the_unaffected_stages(
 def _sorted_rows(df):
     """Rows by id, as dicts: a tiled read-back orders its partition column last."""
     return sorted((r.asDict() for r in df.collect()), key=lambda r: r["id"])
+
+
+def test_checkpoint_reads_get_the_inferred_schema_from_the_footer(spark, cold_build):
+    root = cold_build[0]
+    for stage in STAGE_ORDER:
+        sdir = os.path.join(root, f"{stage}_{CFG.step_param_hash(stage)}")
+        sink = ParquetTableSink(os.path.join(sdir, "data"))
+        got, want = sink.read(spark).schema, spark.read.parquet(sink.location).schema
+        assert got == want and got.json() == want.json(), stage
+
+
+def test_a_resumed_build_submits_no_job(spark, cold_build):
+    root, docs, _, edges, _ = cold_build
+    sc = spark.sparkContext
+    group = f"resume-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "resume")
+    try:
+        ck = Checkpointer(spark, root)
+        g = WaterwayEngine(CFG, checkpointer=ck).build_graph(docs, spark)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert {e["action"] for e in ck.events} == {"resumed"}
+    assert jobs == []
+    assert sorted(g.edges.collect(), key=lambda r: r["id"]) == edges

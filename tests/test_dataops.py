@@ -61,6 +61,11 @@ def test_ngram_jaccard_pairs_equal_python_set_jaccard(spark):
         3: "the river bends north past the old mill and the weir",
         4: "a canal joins the harbour basin below the lock gates",
         5: "the old mill and the weir the river bends north past",
+        # fewer than n words: no shingles, the empty set
+        6: "a b c d",
+        7: "x y",
+        8: "a b c e",
+        9: "",
     }
     docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     pairs = [(a, b) for a in texts for b in texts if a < b]
@@ -75,12 +80,16 @@ def test_ngram_jaccard_pairs_equal_python_set_jaccard(spark):
         toks = re.split(r"\s+", text.lower())
         return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
-    want = {
-        (a, b): len(grams(texts[a]) & grams(texts[b])) / len(grams(texts[a]) | grams(texts[b]))
-        for a, b in pairs
-    }
+    def jaccard(x, y):
+        union = x | y
+        return len(x & y) / len(union) if union else 0.0
+
+    want = {(a, b): jaccard(grams(texts[a]), grams(texts[b])) for a, b in pairs}
     assert got == pytest.approx(want)
     assert got[(1, 3)] == 1.0 and got[(1, 4)] == 0.0 and 0 < got[(1, 2)] < 1
+    # a pair with one empty set scores 0, and so does a pair of two
+    assert got[(6, 7)] == 0.0 and got[(6, 8)] == pytest.approx(1 / 3)
+    assert got[(7, 9)] == 0.0
 
 
 def test_simhash_near_pairs(spark, docs):

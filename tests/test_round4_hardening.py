@@ -2,7 +2,6 @@
 
 - legacy single-file sinks stream via toLocalIterator (never DataFrame.collect)
   and save_jsongz stays byte-identical to a whole-document json.dump;
-- _parquet_max_abs does zero footer I/O past its file cap (agg fallback);
 - the per-edge covering resolution has exactly one source of truth.
 """
 
@@ -17,7 +16,7 @@ import pytest
 from pyspark.sql import DataFrame
 
 from osmwaterwayextractor_spark.config import EngineConfig
-from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine, _parquet_max_abs
+from osmwaterwayextractor_spark.plans.pipeline import WaterwayEngine
 from osmwaterwayextractor_spark.sinks import writers
 
 from osmwaterwayextractor_spark.oracle import fixture_4way_docs
@@ -74,40 +73,6 @@ def test_save_jsongz_byte_identical_to_json_dump(graph, tmp_path):
 def test_geojson_guard_still_enforced(graph, tmp_path):
     with pytest.raises(ValueError, match="single-file GeoJSON guard"):
         writers.save_geojson(graph.edges, str(tmp_path / "x.geojson"), single_file_limit=3)
-
-
-def test_parquet_max_abs_bounded_driver_io(tmp_path, monkeypatch):
-    """10³ fabricated parquet files: past max_files the helper returns None
-    WITHOUT opening a single footer (the caller then runs the distributed
-    agg — footer stats of a sample are not a valid upper bound)."""
-    d = tmp_path / "many"
-    d.mkdir()
-    for i in range(1000):
-        (d / f"part-{i:05d}.parquet").write_bytes(b"")
-
-    import pyarrow.parquet as pq
-
-    reads = {"n": 0}
-    real = pq.read_metadata
-
-    def counting(path, *a, **k):
-        reads["n"] += 1
-        return real(path, *a, **k)
-
-    monkeypatch.setattr(pq, "read_metadata", counting)
-    assert _parquet_max_abs(str(d), "lat") is None
-    assert reads["n"] == 0
-
-    # under the cap the stats path still works end-to-end
-    import pyarrow as pa
-
-    d2 = tmp_path / "few"
-    d2.mkdir()
-    pq.write_table(
-        pa.table({"lat": [-3.5, 81.25, 10.0]}), str(d2 / "part-00000.parquet")
-    )
-    assert _parquet_max_abs(str(d2), "lat") == 81.25
-    assert _parquet_max_abs(str(d2), "nope") is None
 
 
 def test_covering_resolution_single_source_of_truth():

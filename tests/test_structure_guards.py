@@ -4,7 +4,10 @@ cross-checks live in ``tests/test_cluster_paths.py``). ``operators/`` holds
 no unfused assembly pass (its oracle lives in ``tests/unfused_assembly.py``).
 Every stage table goes through ``sinks.table_sink.ParquetTableSink``, the
 one place that sets the row-group size, into a scratch directory per call;
-the tooling stages its own tables through it too. ``build_graph`` names
+the tooling stages its own tables through it too. The pipeline cuts its
+stages in the block manager: it writes no scratch table, and
+``localCheckpoint`` is called only in the one cut helper (and in two
+callers outside the pipeline). ``build_graph`` names
 each stage once, as a key of its builder map, and runs the map through one
 wave runner.
 Every tooling script compiles, and every import of a sibling script,
@@ -43,6 +46,15 @@ RETIRED_STAGE_WRITER_NAMES = {"_ephemeral_stage", "_scratch_stage", "_TAIL"}
 
 # the pipeline's hand-paired sibling runner and its job-group property copy
 RETIRED_STAGE_RUNNER_NAMES = {"_stages_concurrent", "_GROUP_PROPERTIES"}
+
+# the functions that call ``localCheckpoint``: the cut helper, and two
+# callers outside the pipeline (a reused tiny top-1, and the dense-id pass
+# whose offsets and join must see one partitioning)
+LOCAL_CHECKPOINT_CALLERS = {
+    (os.path.join("osmwaterwayextractor_spark", "sinks", "table_sink.py"), "block_cut"),
+    (os.path.join("osmwaterwayextractor_spark", "entry_queries.py"), "q_knn_top1"),
+    (os.path.join("osmwaterwayextractor_spark", "operators", "ids.py"), "dense_index"),
+}
 
 
 def _package_modules():
@@ -182,3 +194,37 @@ def test_build_graph_names_each_stage_once_in_its_builder_map():
         if isinstance(a, ast.Constant) and a.value in STAGES
     ]
     assert by_name == []
+
+
+def _functions_using(path, attr):
+    """The innermost function around each ``.<attr>`` in ``path``
+    (``<module>`` outside every function)."""
+    found = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Attribute) and child.attr == attr:
+                found.add(fn)
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if inner else fn)
+
+    visit(ast.parse(open(path, encoding="utf-8").read()), "<module>")
+    return found
+
+
+def test_the_pipeline_cuts_its_stages_in_the_block_manager():
+    path = os.path.join(PKG, "plans", "pipeline.py")
+    tree = ast.parse(open(path, encoding="utf-8").read())
+    imported = {a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
+    assert imported & {"scratch_dir", "scratch_table"} == set()
+    # the footer read of the scratch parquet the clustering domain came from
+    assert [p for p in _package_modules() if "_parquet_max_abs" in _defined_names(p)] == []
+
+
+def test_local_checkpoint_is_called_only_in_the_cut_helper():
+    calls = {
+        (os.path.relpath(p, ROOT), fn)
+        for p in _package_modules()
+        for fn in _functions_using(p, "localCheckpoint")
+    }
+    assert calls == LOCAL_CHECKPOINT_CALLERS
